@@ -231,7 +231,7 @@ object Queries {
     val modified = orders.filter(col("o_orderstatus") === "F")
       .withColumn("o_totalprice", col("o_totalprice") * 2)
     TableIO.upsertByKey(s, path, modified, Seq("o_orderkey"))
-    s.read.parquet(path)
+    TableIO.readParquet(s, path)
   }
 
   /** W1 windowed top-N per group. */
@@ -1113,7 +1113,7 @@ object Queries {
         Seq("source", "widx"), Seq("bit_or" -> "word"))
     }
     Ops.estimateDistinctFromState(
-      s.read.parquet(path).withColumnRenamed("bit_or_word", "word"),
+      TableIO.readParquet(s, path).withColumnRenamed("bit_or_word", "word"),
       Seq("source"), "word", 4096)
   }
 
@@ -1843,7 +1843,7 @@ object Queries {
       .option("maxVersionsPerTrigger", 1).load(src)
     val q = graft.streaming.Streams.scd2Sink(stream, userScdConfig, dim, ckpt).start()
     q.awaitTermination()
-    s.read.parquet(dim).select(scdOutCols: _*)
+    TableIO.readParquet(s, dim).select(scdOutCols: _*)
   }
 
   private lazy val q142Root: String =

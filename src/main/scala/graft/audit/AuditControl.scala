@@ -35,7 +35,7 @@ class AuditControl(spark: SparkSession, root: String) {
   private val path = s"$root/audit_control"
 
   def table: DataFrame =
-    if (TableIO.exists(path)) spark.read.parquet(path)
+    if (TableIO.exists(path)) TableIO.readParquet(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** C4: idempotent registration (INSERT ... WHERE NOT EXISTS ≡ left_anti). */

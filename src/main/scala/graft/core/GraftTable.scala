@@ -2563,13 +2563,21 @@ object GraftTable {
     * commit round-trips of every sync without changing the replica's
     * content, and a file holding both a victim and an upsert key
     * rewrites ONCE instead of twice. Idempotent under replays exactly
-    * like its two halves. A missing table overwrites with `ins`
-    * (nothing exists to delete), matching [[upsertByKey]]'s bootstrap. */
+    * like its two halves. An empty change set commits a new version
+    * whose file list is the parent's, verbatim.
+    *
+    * A missing table overwrites with `ins` (nothing exists to delete),
+    * matching [[upsertByKey]]'s bootstrap. So a DELETE-ONLY change set
+    * (empty `ins`) against a missing table creates the table, empty,
+    * with `ins`'s schema: its deletes are no-ops, and the next change
+    * set has a table to apply to. */
   def applyChangeSet(spark: SparkSession, path: String, delKeys: DataFrame,
       ins: DataFrame, keys: Seq[String], statsCols: Seq[String] = Nil): Long = {
     require(keys.nonEmpty, "need at least one key column")
     val missing = keys.filterNot(delKeys.columns.contains)
     require(missing.isEmpty, s"delete-key frame lacks ${missing.mkString(", ")}")
+    val insMissing = keys.filterNot(ins.columns.contains)
+    require(insMissing.isEmpty, s"insert frame lacks ${insMissing.mkString(", ")}")
     currentManifest(path) match {
       case None => overwrite(ins, path, statsCols)
       case Some(cur) =>
@@ -2662,10 +2670,14 @@ object GraftTable {
         case Some(r) => kept.unionByName(r.select(schema.fieldNames.map(col): _*))
         case None => kept
       }
-      // a no-match delete has nothing to rewrite: carry the file list
-      // verbatim (staging an empty frame would emit a zero-row part file)
-      val staged = if (touched.isEmpty && replacement.isEmpty) Nil
-        else stageFiles(rewritten, path, statsCols, None)
+      // a no-match delete has nothing to rewrite: skip the staging job.
+      // A write that produced no rows — an empty change set, or a delete
+      // that emptied every touched file — still emits a zero-row part
+      // file; it is dropped (stageFiles already counted its rows, so no
+      // extra job) and the file list commits verbatim
+      val (staged, empty) = (if (touched.isEmpty && replacement.isEmpty) Nil
+        else stageFiles(rewritten, path, statsCols, None)).partition(_.rows > 0)
+      empty.foreach(fe => new File(resolveData(path, fe)).delete(): Unit)
       val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged,
         cleanLeaves ++ carriedLive.map(_._1))
       val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
@@ -2971,7 +2983,7 @@ object GraftTable {
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
       .sortBy(_.getName)
     require(parts.nonEmpty, s"no parquet files at '$dir' to convert")
-    val df = spark.read.parquet(parts.map(_.toString).toSeq: _*)
+    val df = TableIO.readParquet(spark, parts.map(_.toString).toSeq: _*)
     val fields = resolveStatsCols(df.schema, statsCols)
     val aggs = count(lit(1L)).as("__rows") +: fields.flatMap { f =>
       Seq(min(col(f.name)).as(s"__min_${f.name}"), max(col(f.name)).as(s"__max_${f.name}"),

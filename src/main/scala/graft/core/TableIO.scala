@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchemaBridge
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -12,6 +14,22 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * self-overwrite (read table T, transform, write T) safe — plain
   * `mode("overwrite")` on the path being read would truncate the input
   * before the job runs.
+  *
+  * Reads ([[read]], [[readParquet]]) take the schema from ONE parquet
+  * footer, read on the driver. Spark's own inference learns it with a
+  * one-task Spark job per read (`mergeSchemasInParallel`), and a
+  * warehouse build reads the tables earlier models built at every step —
+  * so those probes were 82 of the 293 Spark jobs of a two-cycle
+  * Northwind build at sf0.01, each on some model's critical path. The
+  * driver read runs the same footer conversion the probe runs inside
+  * its task, on the same file Spark would pick (the first data file by
+  * path; every data file under `spark.sql.parquet.mergeSchema`), so the
+  * schema is identical and a read starts no job before its action.
+  * Partition columns are not in the footer: Spark still infers them
+  * from the `k=v` directory names.
+  * This is the table-format idea (Delta keeps the schema in its log;
+  * [[GraftTable]] in its manifest) applied to the plain directory:
+  * readers never scan data to learn the schema.
   *
   * Scale note: on a real cluster this class is the seam where a table
   * format (Delta/Iceberg `MERGE INTO`) slots in; the anti-join + union
@@ -97,12 +115,56 @@ object TableIO {
 
   def read(spark: SparkSession, path: String): DataFrame = {
     recover(path)
-    spark.read.parquet(path)
+    readParquet(spark, path)
   }
 
   def readOrEmpty(spark: SparkSession, path: String, like: DataFrame): DataFrame =
-    if (exists(path)) spark.read.parquet(path)
+    if (exists(path)) readParquet(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], like.schema)
+
+  /** Spark's plain-parquet read of `paths`, minus the schema-inference
+    * job: the schema comes from the footer(s) [[footerFiles]] picks,
+    * converted by Spark's own code on the driver (see the object doc).
+    * The one fall-through — no data file under `paths` — is Spark's
+    * plain read, so a missing or empty directory raises Spark's own
+    * error. Every whole-table plain-parquet read in the library goes
+    * through here (a spec scans the sources for strays). */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = FooterSchemaBridge.hadoopConf(spark)
+    val files = footerFiles(conf, paths, all = FooterSchemaBridge.mergeSchema(spark))
+    (if (files.isEmpty) None else FooterSchemaBridge.readSchema(spark, conf, files)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+  }
+
+  /** The data files whose footers define `paths`' schema, chosen as
+    * Spark's inference chooses them: the first data file by full path
+    * string, or every data file when `all`. Hidden names follow Spark's
+    * listing (`_x` unless it holds `=`, `.x`, `x._COPYING_`); a path that
+    * is itself a file is taken as given. Children are walked in path
+    * order (a directory sorts as `name/`), so the first file found IS the
+    * first by path and the walk stops there. A path that vanishes
+    * mid-walk (a racing swap) yields no file: Spark's read decides. */
+  private def footerFiles(conf: org.apache.hadoop.conf.Configuration, paths: Seq[String],
+      all: Boolean): Seq[FileStatus] = {
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    def walk(fs: FileSystem, st: FileStatus): Iterator[FileStatus] =
+      if (!st.isDirectory) Iterator(st)
+      else fs.listStatus(st.getPath).filterNot(c => hidden(c.getPath.getName))
+        .sortBy(c => c.getPath.getName + (if (c.isDirectory) "/" else ""))
+        .iterator.flatMap(walk(fs, _))
+    def under(p: String): Iterator[FileStatus] = {
+      val hp = new HPath(p)
+      val fs = hp.getFileSystem(conf)
+      walk(fs, fs.getFileStatus(hp))
+    }
+    try {
+      if (all) paths.flatMap(under(_).toSeq)
+      else paths.flatMap(under(_).nextOption()).minByOption(_.getPath.toString).toSeq
+    } catch { case _: java.io.FileNotFoundException => Nil }
+  }
 
   private def deleteRecursively(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
@@ -221,7 +283,7 @@ object TableIO {
       partitionBy: Seq[String] = Nil, syncAllColumns: Boolean = true): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
     if (!exists(path)) { overwriteAtomic(delta, path, partitionBy); return }
-    val inferred = spark.read.parquet(path)
+    val inferred = readParquet(spark, path)
     // Partition VALUE types must not be re-inferred for the writer's own
     // bookkeeping: a directory written as m=01 reads back as int 1, which
     // (a) re-renders the touched-partition dir name to m=1 and (b) drags
@@ -308,7 +370,7 @@ object TableIO {
     val aggCols = aggExprs(aggs)
     val batch = rows.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
     if (!TableIO.exists(path)) { overwriteAtomic(batch, path); return }
-    val existing = spark.read.parquet(path)
+    val existing = readParquet(spark, path)
     val touched = batch.join(
       existing.select(existing.columns.map(c =>
         (if (keys.contains(c)) col(c) else col(c).as(s"__e_$c"))): _*),
@@ -389,7 +451,7 @@ object TableIO {
         else Seq(c)
       }
     val before = dataFiles(new File(path))
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     val packed =
       if (partitionBy.nonEmpty)
         df.repartition(partitionBy.map(org.apache.spark.sql.functions.col): _*)

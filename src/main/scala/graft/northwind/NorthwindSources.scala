@@ -2,6 +2,7 @@ package graft.northwind
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.TableIO
 
 /** Deterministic Northwind-shaped CDC fixtures derived from the testdata star
   * schema — the raw `kings.load` layer the reference's staging models scan
@@ -41,7 +42,7 @@ object NorthwindSources {
   def t2: Column = to_timestamp(lit(T2))
 
   private def read(s: SparkSession, d: String, t: String): DataFrame =
-    s.read.parquet(s"$d/$t.parquet")
+    TableIO.readParquet(s, s"$d/$t.parquet")
 
   private def cut(history: DataFrame, cycle: Int): DataFrame =
     if (cycle >= 2) history else history.filter(col("src_ts") <= t1)

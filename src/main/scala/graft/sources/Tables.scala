@@ -1,9 +1,11 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.TableIO
 
 /** Bronze-layer readers for the driver testdata star schema (TESTDATA.md).
-  * One parquet file per table; scans are plain `spark.read.parquet` so
+  * One parquet file per table; scans are plain parquet relations
+  * ([[TableIO.readParquet]]: schema from the footer, no inference job) so
   * Catalyst's pushdown/pruning applies (SURVEY S1/S2).
   */
 object Tables {
@@ -11,7 +13,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    TableIO.readParquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")

@@ -582,6 +582,46 @@ class GraftTableSpec extends AnyFunSuite with SparkSpecBase {
     assert(canon(GraftTable.read(spark, root + "/fresh")) == canon(kv(7 -> "n")))
   }
 
+  test("applyChangeSet: an empty change set commits the parent's file list verbatim") {
+    val path = tmp() + "/t"
+    GraftTable.overwrite(kv(1 -> "a", 2 -> "b"), path)
+    GraftTable.append(kv(3 -> "c"), path)
+    val before = GraftTable.currentManifest(path).get
+    val onDisk = dataFiles(path).keySet
+    val v = GraftTable.applyChangeSet(spark, path, df("k INT"), kv(), Seq("k"))
+    val after = GraftTable.currentManifest(path).get
+    assert(v == before.version + 1 && after.version == v && after.op == "apply_changes")
+    assert(GraftTable.filesOf(path, after).map(_.path).sorted ==
+      GraftTable.filesOf(path, before).map(_.path).sorted)
+    assert(dataFiles(path).keySet == onDisk, "an empty change set wrote a data file")
+    assert(canon(GraftTable.read(spark, path)) == canon(kv(1 -> "a", 2 -> "b", 3 -> "c")))
+    // a delete that empties every touched file commits no zero-row file either
+    GraftTable.applyChangeSet(spark, path, df("k INT", Row(Int.box(3))), kv(), Seq("k"))
+    assert(GraftTable.filesOf(path, GraftTable.currentManifest(path).get).forall(_.rows > 0))
+    assert(dataFiles(path).keySet == onDisk)
+    assert(canon(GraftTable.read(spark, path)) == canon(kv(1 -> "a", 2 -> "b")))
+  }
+
+  test("applyChangeSet bootstrap: delete-only creates an empty table; ins must hold the keys") {
+    val root = tmp()
+    // a delete-only change set against a missing table: nothing to
+    // delete, so the table is created empty with ins's schema
+    val v = GraftTable.applyChangeSet(spark, root + "/fresh",
+      df("k INT", Row(Int.box(1))), kv(), Seq("k"))
+    assert(v == 1L && GraftTable.exists(root + "/fresh"))
+    val created = GraftTable.read(spark, root + "/fresh")
+    assert(created.count() == 0)
+    assert(created.schema.fieldNames.toSeq == Seq("k", "v"))
+    // an ins frame without the key columns refuses before touching the table
+    val err = intercept[IllegalArgumentException](GraftTable.applyChangeSet(spark,
+      root + "/fresh", df("k INT"), df("v STRING", Row("x")), Seq("k")))
+    assert(err.getMessage.contains("insert frame lacks k"))
+    assert(GraftTable.currentVersion(root + "/fresh").get == 1L)
+    intercept[IllegalArgumentException](GraftTable.applyChangeSet(spark,
+      root + "/other", df("k INT"), df("v STRING", Row("x")), Seq("k")))
+    assert(!GraftTable.exists(root + "/other"))
+  }
+
   test("syncReplica: full copy, then incremental CDC apply; idle sync commits nothing") {
     val root = tmp()
     val (src, dst) = (root + "/src", root + "/dst")
