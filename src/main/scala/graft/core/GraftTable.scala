@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.io.File
@@ -704,7 +705,10 @@ object GraftTable {
     * under commit-unique names, and return their manifest entries with
     * stats. The stats pass re-reads only the staged files (columnar, just
     * the stats columns) — the post-write pass a format without in-flight
-    * footer aggregation pays; O(batch), never O(table). */
+    * footer aggregation pays; O(batch), never O(table). Spark still
+    * writes one zero-row part file for an empty frame; it is deleted and
+    * gets no entry (its row count came with the stats, so no extra job),
+    * so an empty write commits its parent's file list verbatim. */
   private def stageFiles(df: DataFrame, path: String, statsCols: Seq[String],
       clusterBy: Option[(Column, Int)], bloomCols: Seq[String] = Nil,
       bucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
@@ -746,8 +750,9 @@ object GraftTable {
     val parts = Option(stage.listFiles).getOrElse(Array.empty[File])
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).sortBy(_.getName)
     if (parts.isEmpty) { TableIO.clearDir(stage.toString); return Nil }
-    val entries = stagePartEntries(spark, df.schema, path, commitId, parts.toSeq,
-      statsCols, bloomCols, effBucket)
+    val (entries, empty) = stagePartEntries(spark, df.schema, path, commitId, parts.toSeq,
+      statsCols, bloomCols, effBucket).partition(_.rows > 0)
+    empty.foreach(fe => new File(resolveData(path, fe)).delete(): Unit)
     TableIO.clearDir(stage.toString)
     entries
   }
@@ -2264,7 +2269,8 @@ object GraftTable {
     * key, MOR's write amplification is O(rows actually changed +
     * inserts). Same refusals as [[mergeInto]] (duplicate source keys,
     * unknown SET columns, full-schema source for inserts); same
-    * stats-cover candidate pruning from the source's key bounds; CHECK
+    * stats-cover candidate pruning from the source's key bounds, both
+    * computed on the driver for a driver-local source; CHECK
     * constraints validate the staged images at staging. CDC consumers
     * see the masked rows as delta DELETEs and the staged files as
     * INSERTs — the fold-by-key replica applies them as the merge it
@@ -2288,21 +2294,13 @@ object GraftTable {
       require(missing.isEmpty,
         s"insertNotMatched needs the full target schema in the source; missing ${missing.mkString(", ")}")
     }
-    // duplicate-source-key refusal + key bounds for the stats cover —
-    // one source-sized job, exactly [[mergeInto]]'s
-    val aggs = Seq(count(lit(1)).as("__n"),
-      countDistinct(struct(keys.map(col): _*)).as("__d")) ++
-      keys.flatMap(k => Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k"),
-        sum(when(col(k).isNull, 1L).otherwise(0L)).as(s"__nn_$k")))
-    val b = source.agg(aggs.head, aggs.tail: _*).head()
-    require(b.getLong(0) == b.getLong(1),
-      s"merge source has duplicate keys (${keys.mkString(", ")}) — each target row " +
-        "may match at most one source row")
-    val srcHasNullKey = keys.exists(k => b.getAs[Long](s"__nn_$k") > 0)
+    // duplicate-source-key refusal + key bounds for the stats cover,
+    // exactly [[mergeInto]]'s; NULL source keys can't prune (min/max
+    // ignore NULLs)
+    val ks = mergeSourceStats(source, keys)
     val pruneRanges =
-      if (srcHasNullKey) Nil
-      else keys.map(k => ColRange(k,
-        Option(b.get(b.fieldIndex(s"__lo_$k"))), Option(b.get(b.fieldIndex(s"__hi_$k")))))
+      if (ks.nulls.values.exists(_ > 0)) Nil
+      else keys.map(k => ColRange(k, ks.lo.get(k), ks.hi.get(k)))
     val src = source.select(source.columns.map(c => col(c).as(s"__src_$c")).toSeq: _*)
     val matchCond = keys.map(k => col(k) <=> srcCol(k)).reduce(_ && _)
     val delApplies = deleteWhen.map(c => coalesce(c.cast("boolean"), lit(false)))
@@ -2442,9 +2440,9 @@ object GraftTable {
     * those through `transform`, carry every other file by reference, and
     * commit optimistically.
     *
-    * The probe counts live matches PER FILE (same one column-pruned job
-    * the membership test already cost) because the count is what lets a
-    * row-removing op (`dropFullCover`) DROP a file whose every live row
+    * The probe counts live matches PER FILE (per partition, summed on
+    * the driver: one column-pruned job, no shuffle) because the count is
+    * what lets a row-removing op (`dropFullCover`) DROP a file whose every live row
     * matches, metadata-only — Delta's file-level delete, re-derived. On
     * a [[writeClustered]] layout keyed like the predicate (the
     * date-ranged retention/recompute shape) most touched files are
@@ -2469,10 +2467,8 @@ object GraftTable {
     // file still holding live non-matching rows
     val matchCounts: Map[String, Long] =
       if (candidates.isEmpty) Map.empty
-      else readFileSubset(spark, path, cur, candidates)
-        .filter(pred)
-        .groupBy(input_file_name().as("__f")).count().collect()
-        .map(r => normScanUri(r.getString(0)) -> r.getLong(1)).toMap
+      else fileRowCounts(readFileSubset(spark, path, cur, candidates)
+        .filter(pred).select(input_file_name()))
     def isTouched(fe: FileEntry) = matchCounts.contains(fileUri(path, fe))
     // every live row matches → nothing of this file survives the op
     def covered(fe: FileEntry) =
@@ -2487,8 +2483,8 @@ object GraftTable {
     // fully-covered files drop without a read; only partially-matching
     // files pay the rewrite (updates rewrite everything they touch)
     val partial = if (dropFullCover) touched.filterNot(covered) else touched
-    // no matching file → the commit carries the file list verbatim (an
-    // empty stage would still emit one zero-row part file)
+    // no matching file → nothing to stage: the commit carries the file
+    // list verbatim
     val rewritten =
       if (partial.isEmpty) Nil
       else stageFiles(transform(readFileSubset(spark, path, cur, partial)),
@@ -2517,9 +2513,12 @@ object GraftTable {
     * is carried into the new manifest UNTOUCHED — never read in full,
     * never rewritten. Touched files are found by (1) a stats prefilter on
     * the delta's key range — on a [[writeClustered]]-by-key layout this
-    * alone skips most files — then (2) a key-column-only semi-scan of the
-    * surviving candidates (columnar projection: only the key columns are
-    * read). Write amplification is O(files holding delta keys).
+    * alone skips most files — then (2) a key-column-only probe scan of
+    * the surviving candidates (columnar projection: only the key columns
+    * are read). Write amplification is O(files holding delta keys). A
+    * driver-local delta (`createDataFrame(rows)`, `Seq.toDF`, `VALUES`)
+    * has its keys collected — its rows are already on the driver — and
+    * the probe and the rewrite are one Spark job each (see cowMerge).
     *
     * Concurrency: optimistic — if another commit lands between snapshot
     * read and manifest commit, throws `ConcurrentModificationException`
@@ -2537,9 +2536,11 @@ object GraftTable {
     * (null-safe) appears in `delKeys` — the GDPR/opt-out bulk-erasure
     * shape, where the victims arrive as an id list, not a predicate.
     * Same file-granular machinery as [[upsertByKey]] (stats prefilter on
-    * the key range, key-column semi-scan, rewrite only files actually
-    * holding a victim); the delete list stays distributed end to end,
-    * never collected to a driver `isin`. */
+    * the key range, key-column probe, rewrite only files actually
+    * holding a victim). A driver-local id list is already in driver
+    * memory, so it is collected and probed as a literal `IN`; any other
+    * delete list (a table scan, a CDC diff) stays distributed end to
+    * end and is joined, never collected. */
   def deleteByKey(spark: SparkSession, path: String, delKeys: DataFrame,
       keys: Seq[String]): Long = {
     require(keys.nonEmpty, "need at least one key column")
@@ -2556,7 +2557,7 @@ object GraftTable {
     * as kept ∪ ins) — semantically identical to [[deleteByKey]] followed
     * by [[upsertByKey]] (and to either order when the key sets are
     * disjoint, the [[diffVersions]] shape), but the whole change set
-    * rides ONE stats-bounds probe, ONE key-column semi-scan, ONE staged
+    * rides ONE stats-bounds probe, ONE key-column probe scan, ONE staged
     * rewrite and ONE commit instead of two of each. That is the CDC
     * steady-state fold (syncReplica, the change-feed micro-batch
     * consumers): at 100 TB it halves both the probe reads and the
@@ -2586,7 +2587,7 @@ object GraftTable {
             s"ins [${ins.schema.toDDL}]")
         val keyFrame = delKeys.select(keys.map(col): _*)
           .unionByName(ins.select(keys.map(col): _*))
-        cowMerge(spark, path, keyFrame, Some(ins), keys, statsCols, cur,
+        cowMerge(spark, path, keyFrame, Some(_ => ins), keys, statsCols, cur,
           "apply_changes")
     }
   }
@@ -2597,38 +2598,168 @@ object GraftTable {
       keys: Seq[String], statsCols: Seq[String], cur: Manifest): Long = {
     require(sameSchema(cur.schemaDdl, delta.schema),
       s"upsert schema mismatch vs '$path': table [${cur.schemaDdl}], delta [${delta.schema.toDDL}]")
-    cowMerge(spark, path, delta, Some(delta), keys, statsCols, cur, "upsert")
+    cowMerge(spark, path, delta, Some(_ => delta), keys, statsCols, cur, "upsert")
+  }
+
+  // ---------------------------------------------------------- key sets
+
+  /** A keyed commit's key set, summarized: `rows` key tuples, of which
+    * `distinct` are distinct (counted only when asked — the merges'
+    * duplicate-key refusal), and per key column its non-NULL `lo`/`hi`
+    * (absent when the column holds no non-NULL key) and its NULL count.
+    * `tuples` holds the distinct key tuples themselves when the key
+    * frame is driver-local ([[localKeyTuples]]); membership is then a
+    * literal IN over them instead of a join against the key frame. */
+  private final case class KeyStats(rows: Long, distinct: Option[Long],
+      lo: Map[String, Any], hi: Map[String, Any], nulls: Map[String, Long],
+      tuples: Option[Seq[Row]])
+
+  /** Key types whose `IN` agrees with `<=>` on non-NULL values: SQL
+    * equality there is value identity, so a driver-side distinct and a
+    * literal IN list match exactly the rows a null-safe join matches.
+    * Floating point is out (NaN and -0.0 compare equal in SQL but not
+    * as JVM values), and so are collated strings and non-atomic types. */
+  private def literalKeyType(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | StringType | DateType |
+        TimestampType | TimestampNTZType | BooleanType => true
+    case _: DecimalType => true
+    case _ => false
+  }
+
+  /** The key tuples of `frame`, collected on the driver, when the frame
+    * is DRIVER-LOCAL and every key column is a [[literalKeyType]]; None
+    * otherwise. Driver-local means the optimized plan's leaves are all
+    * `LocalRelation`s — what `createDataFrame(rows)`, `Seq.toDF` and SQL
+    * `VALUES` produce: rows already held in driver memory, which a
+    * broadcast join would collect to the driver anyway. A single
+    * relation, or a union of them (the change-set shape), collects
+    * without a Spark job. */
+  private[graft] def localKeyTuples(frame: DataFrame, keys: Seq[String]): Option[Seq[Row]] = {
+    val kf = frame.select(keys.map(col): _*)
+    val plan = kf.queryExecution.optimizedPlan
+    if (!kf.schema.fields.forall(f => literalKeyType(f.dataType)) ||
+        !plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else Some(plan match {
+      case u: Union => u.children.flatMap(c =>
+        org.apache.spark.sql.graftbridge.ClassicBridge.ofRows(frame.sparkSession, c).collect())
+      case _ => kf.collect().toSeq
+    })
+  }
+
+  /** Spark's ordering of one literal key type, on collected values:
+    * [[cmp]] under the type's stats tag (UTF-8 binary for strings), so
+    * driver-side bounds equal what Spark's min/max would return. */
+  private def keyOrdering(dt: DataType): Ordering[Any] = statTag(dt) match {
+    case Some(t) => (a: Any, b: Any) => cmp(t, encode(t, a), encode(t, b))
+    case None => Ordering.Boolean.on[Any](_.asInstanceOf[Boolean])
+  }
+
+  /** The one [[KeyStats]] computation of every keyed commit: over
+    * `tuples` on the driver when the key frame is driver-local (no job),
+    * otherwise one aggregate over `frame`. */
+  private def keyStats(frame: DataFrame, keys: Seq[String], tuples: Option[Seq[Row]],
+      withDistinct: Boolean = false): KeyStats = tuples match {
+    case Some(all) =>
+      val distinct = all.distinct
+      val bounds = keys.zipWithIndex.flatMap { case (k, i) =>
+        val vs = distinct.map(_.get(i)).filter(_ != null)
+        val ord = keyOrdering(frame.schema(k).dataType)
+        if (vs.isEmpty) None else Some((k, vs.min(ord), vs.max(ord)))
+      }
+      KeyStats(all.size.toLong, Some(distinct.size.toLong),
+        bounds.map(b => b._1 -> b._2).toMap, bounds.map(b => b._1 -> b._3).toMap,
+        keys.indices.map(i => keys(i) -> all.count(_.isNullAt(i)).toLong).toMap,
+        Some(distinct))
+    case None =>
+      val aggs = Seq(count(lit(1))) ++
+        (if (withDistinct) Seq(countDistinct(struct(keys.map(col): _*))) else Nil) ++
+        keys.flatMap(k => Seq(min(col(k)), max(col(k)), count(when(col(k).isNull, 1))))
+      val b = frame.agg(aggs.head, aggs.tail: _*).head()
+      val at = if (withDistinct) 2 else 1
+      def per(j: Int) = keys.indices.flatMap(i => Option(b.get(at + 3 * i + j)).map(keys(i) -> _)).toMap
+      KeyStats(b.getLong(0), if (withDistinct) Some(b.getLong(1)) else None, per(0), per(1),
+        keys.indices.map(i => keys(i) -> b.getLong(at + 3 * i + 2)).toMap, None)
+  }
+
+  /** A merge source's [[KeyStats]], refusing duplicate keys (each target
+    * row may match at most one source row — Delta refuses the same). */
+  private def mergeSourceStats(source: DataFrame, keys: Seq[String]): KeyStats = {
+    val ks = keyStats(source, keys, localKeyTuples(source, keys), withDistinct = true)
+    require(ks.distinct.contains(ks.rows),
+      s"merge source has duplicate keys (${keys.mkString(", ")}) — each target row " +
+        "may match at most one source row")
+    ks
+  }
+
+  /** Null-safe membership of a row's key tuple in the literal key set
+    * `tuples`: `k IN (…)`, OR `k IS NULL` when the set holds NULL, for
+    * one key column; `struct(keys) IN (…)` for several (struct equality
+    * compares NULL components as equal — `<=>` per component). Evaluates
+    * to NULL, never true, for a NULL key the set lacks. */
+  private def memberOf(keys: Seq[String], schema: StructType, tuples: Seq[Row]): Column = {
+    val types = keys.map(k => schema(k).dataType)
+    if (keys.size == 1) {
+      val vs = tuples.map(_.get(0))
+      val in = col(keys.head).isInCollection(vs.filter(_ != null).map(lit(_).cast(types.head)))
+      if (vs.contains(null)) in || col(keys.head).isNull else in
+    } else struct(keys.map(col): _*).isInCollection(tuples.map(t =>
+      struct(keys.indices.map(i => lit(t.get(i)).cast(types(i)).as(keys(i))): _*)))
+  }
+
+  /** Rows per data file of `files` (one column: the scan's
+    * `input_file_name()`), keyed by [[normScanUri]]. Counted per
+    * partition and summed on the driver — one job, no shuffle; a file
+    * split across partitions sums exactly. */
+  private def fileRowCounts(files: DataFrame): Map[String, Long] = {
+    val spark = files.sparkSession
+    import spark.implicits._
+    files.as[String].mapPartitions { it =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      it.foreach(f => n(f) = n.getOrElse(f, 0L) + 1L)
+      n.iterator
+    }.collect().toSeq.groupMapReduce(fc => normScanUri(fc._1))(_._2)(_ + _)
   }
 
   /** The keyed-COW core: drop every row of the table whose key tuple
-    * (null-safe) appears in `keyFrame`, append `replacement`'s rows if
-    * given, rewriting ONLY the files that actually hold a matched key.
-    * upsert = (delta keys, append delta); keyed delete = (victim keys,
-    * append nothing). */
+    * (null-safe) appears in `keyFrame`, append the rows `replacement`
+    * derives from the touched files' rows, rewriting ONLY the files
+    * that actually hold a matched key. upsert = (delta keys, append
+    * delta); keyed delete = (victim keys, append nothing); merge =
+    * (source keys, the clauses' output over the touched rows).
+    *
+    * Touched files are found by (1) the stats cover on the key set's
+    * bounds, then (2) one key-column scan of the surviving candidates
+    * that keeps rows whose key is in the set and counts them per file.
+    * A DRIVER-LOCAL key frame ([[localKeyTuples]]) has its bounds
+    * computed on the driver and its membership tested with a literal
+    * IN over the collected tuples — the rows are already in driver
+    * memory — so probe and rewrite are one job each. Any other key
+    * frame is persisted, aggregated for bounds, and joined null-safely
+    * (semi-join probe, anti-join kept rows). `known` carries stats the
+    * caller already computed over the same keys (the merge source's). */
   private def cowMerge(spark: SparkSession, path: String, keyFrame: DataFrame,
-      replacement: Option[DataFrame], keys: Seq[String], statsCols: Seq[String],
-      cur: Manifest, op: String): Long = {
-    val d = keyFrame.persist()
+      replacement: Option[DataFrame => DataFrame], keys: Seq[String], statsCols: Seq[String],
+      cur: Manifest, op: String, known: Option[KeyStats] = None): Long = {
+    val tuples = known.fold(localKeyTuples(keyFrame, keys))(_.tuples)
+    // the join path reads the key frame up to three times (bounds,
+    // probe, kept rows)
+    val d = if (tuples.isDefined) keyFrame else keyFrame.persist()
     try {
+      val ks = known.getOrElse(keyStats(d, keys, tuples))
       // stats prefilter: a file can hold a delta key in column k only if
       // its non-NULL [min,max] intersects the delta's non-NULL key range,
       // OR both sides have NULLs in k (upsert matches null-safely) —
       // min/max ignore NULLs, so the null channel is tracked separately
-      val bcols = keys.flatMap(k => Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k"),
-        sum(when(col(k).isNull, 1L).otherwise(0L)).as(s"__nn_$k")))
-      val bounds = d.agg(bcols.head, bcols.tail: _*).collect()(0)
       def mayHoldDelta(stats: Map[String, ColStats]): Boolean =
         keys.forall { k =>
           stats.get(k) match {
             case None => true // no stats — can't prove the chunk clean
             case Some(st) =>
-              val deltaHasNull = bounds.getAs[Long](s"__nn_$k") > 0
-              val nullMatch = deltaHasNull && st.nulls > 0
-              val lo = Option(bounds.get(bounds.fieldIndex(s"__lo_$k"))).map(encode(st.t, _))
-              val hi = Option(bounds.get(bounds.fieldIndex(s"__hi_$k"))).map(encode(st.t, _))
-              val rangeMatch = st.min.isDefined && ((lo, hi) match {
+              val nullMatch = ks.nulls(k) > 0 && st.nulls > 0
+              val rangeMatch = st.min.isDefined && ((ks.lo.get(k), ks.hi.get(k)) match {
                 case (Some(l), Some(h)) =>
-                  cmp(st.t, st.max.get, l) >= 0 && cmp(st.t, st.min.get, h) <= 0
+                  cmp(st.t, st.max.get, encode(st.t, l)) >= 0 &&
+                    cmp(st.t, st.min.get, encode(st.t, h)) <= 0
                 case _ => false // delta has no non-NULL keys in k
               })
               rangeMatch || nullMatch
@@ -2641,12 +2772,27 @@ object GraftTable {
       val (liveLeaves, cleanLeaves) = cur.leaves.getOrElse(Nil)
         .partition(l => mayHoldDelta(l.stats))
       val loaded = liveLeaves.map(l => l -> loadLeaf(path, l))
-      val candidates = (cur.files ++ loaded.flatMap(_._2)).filter(fe => mayHoldDelta(fe.stats))
+      // an empty key set can touch nothing, stats or not
+      val candidates =
+        if (ks.rows == 0) Nil
+        else (cur.files ++ loaded.flatMap(_._2)).filter(fe => mayHoldDelta(fe.stats))
       val schema = StructType.fromDDL(cur.schemaDdl)
-      // key columns renamed on the probe side: a self-derived frame joined
-      // on same-name columns would resolve ambiguously
-      val deltaKeys = d.select(keys.map(k => col(k).as(s"__dk_$k")): _*).distinct()
-      val keyCond = keys.map(k => col(k) <=> col(s"__dk_$k")).reduce(_ && _)
+      // the probe's and the kept rows' view of the key set: rows whose
+      // key is in it (as one file-name column), and rows whose key is not
+      val (hitFiles, misses): (DataFrame => DataFrame, DataFrame => DataFrame) = tuples match {
+        case Some(ts) =>
+          val member = memberOf(keys, schema, ts)
+          (_.filter(member).select(input_file_name()),
+            _.filter(!coalesce(member, lit(false))))
+        case None =>
+          // key columns renamed on the probe side: a self-derived frame
+          // joined on same-name columns would resolve ambiguously
+          val deltaKeys = d.select(keys.map(k => col(k).as(s"__dk_$k")): _*).distinct()
+          val keyCond = keys.map(k => col(k) <=> col(s"__dk_$k")).reduce(_ && _)
+          (_.select((keys.map(col) :+ input_file_name().as("__f")): _*)
+            .join(deltaKeys, keyCond, "left_semi").select(col("__f")),
+            _.join(deltaKeys, keyCond, "left_anti"))
+      }
       // keyed by FULL normalized URI, never basename — same discipline
       // as rewriteMatching: a shallow clone's absolute-path entry next
       // to a local part file with the same name must not pool (here the
@@ -2654,30 +2800,24 @@ object GraftTable {
       // rewritten — but it is write amplification a URI key removes)
       val touchedUris: Set[String] =
         if (candidates.isEmpty) Set.empty
-        else readFileSubset(spark, path, cur, candidates)
-          .select((keys.map(col) :+ input_file_name().as("__f")): _*)
-          .join(deltaKeys, keyCond, "left_semi")
-          .select(col("__f")).distinct().collect()
-          .map(r => normScanUri(r.getString(0))).toSet
+        else fileRowCounts(hitFiles(readFileSubset(spark, path, cur, candidates))).keySet
       def isTouched(fe: FileEntry) = touchedUris.contains(fileUri(path, fe))
       val (inTouched, inUntouched) = cur.files.partition(isTouched)
       val (dirtyLeaves, carriedLive) = loaded.partition(_._2.exists(isTouched))
       val touched = inTouched ++ dirtyLeaves.flatMap(_._2).filter(isTouched)
       val survivors = dirtyLeaves.flatMap(_._2).filterNot(isTouched)
-      val kept = readFileSubset(spark, path, cur, touched)
-        .join(deltaKeys, keyCond, "left_anti")
+      val touchedRows = readFileSubset(spark, path, cur, touched)
+      val kept = misses(touchedRows)
       val rewritten = replacement match {
-        case Some(r) => kept.unionByName(r.select(schema.fieldNames.map(col): _*))
+        case Some(r) => kept.unionByName(r(touchedRows).select(schema.fieldNames.map(col): _*))
         case None => kept
       }
-      // a no-match delete has nothing to rewrite: skip the staging job.
-      // A write that produced no rows — an empty change set, or a delete
-      // that emptied every touched file — still emits a zero-row part
-      // file; it is dropped (stageFiles already counted its rows, so no
-      // extra job) and the file list commits verbatim
-      val (staged, empty) = (if (touched.isEmpty && replacement.isEmpty) Nil
-        else stageFiles(rewritten, path, statsCols, None)).partition(_.rows > 0)
-      empty.foreach(fe => new File(resolveData(path, fe)).delete(): Unit)
+      // nothing to rewrite when no file is touched and nothing replaces
+      // — every replacement row carries a key of the key set, so an
+      // empty key set replaces nothing: skip the staging job
+      val staged =
+        if (touched.isEmpty && (replacement.isEmpty || ks.rows == 0)) Nil
+        else stageFiles(rewritten, path, statsCols, None)
       val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged,
         cleanLeaves ++ carriedLive.map(_._1))
       val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
@@ -2687,7 +2827,7 @@ object GraftTable {
         throw new java.util.ConcurrentModificationException(
           s"commit v${next.version} of '$path' lost the race — re-read and retry the $op")
       next.version
-    } finally d.unpersist(): Unit
+    } finally if (tuples.isEmpty) d.unpersist(): Unit
   }
 
   // ------------------------------------------------------- schema renames
@@ -3041,16 +3181,20 @@ object GraftTable {
     *
     * Clause expressions see target columns by name and source columns
     * via [[srcCol]]. The scale shape is the upsert's: a stats cover on
-    * the source's key bounds prunes the match scan to candidate files
-    * BEFORE any IO (NULL source keys conservatively widen to a full
-    * scan — min/max ignore NULLs), only files actually holding matched
-    * keys rewrite, untouched files and clean leaves carry by pointer,
+    * the source's key bounds prunes the probe to candidate files
+    * BEFORE any IO (a NULL source key also keeps files holding NULL
+    * keys — min/max ignore NULLs), only files actually holding matched
+    * keys are read by the clauses and rewritten, untouched files and
+    * clean leaves carry by pointer,
     * and the whole thing is one optimistic commit with the change log
     * recording adds/removes. Source keys must be unique (the multiple-
     * matches-per-target-row case Delta also refuses); matched rows
     * whose clauses don't apply rewrite unchanged (they live in touched
     * files). CHECK constraints gate the rewritten output like every
-    * other write. */
+    * other write. A driver-local source has its keys checked and bounded
+    * on the driver with no Spark job — its rows are already there — and
+    * probed as a literal key set; any other source takes one aggregate
+    * job for both. */
   def mergeInto(spark: SparkSession, path: String, source: DataFrame, keys: Seq[String],
       updateSet: Map[String, Column] = Map.empty, updateWhen: Option[Column] = None,
       deleteWhen: Option[Column] = None, insertNotMatched: Boolean = true,
@@ -3071,52 +3215,38 @@ object GraftTable {
       require(missing.isEmpty,
         s"insertNotMatched needs the full target schema in the source; missing ${missing.mkString(", ")}")
     }
-    // Delta's multiple-match refusal + the key bounds for the stats cover,
-    // one source-sized job
-    val aggs = Seq(count(lit(1)).as("__n"),
-      countDistinct(struct(keys.map(col): _*)).as("__d")) ++
-      keys.flatMap(k => Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k"),
-        sum(when(col(k).isNull, 1L).otherwise(0L)).as(s"__nn_$k")))
-    val b = source.agg(aggs.head, aggs.tail: _*).head()
-    require(b.getLong(0) == b.getLong(1),
-      s"merge source has duplicate keys (${keys.mkString(", ")}) — each target row " +
-        "may match at most one source row")
-    // candidate rows: files whose key stats can hold a source key; NULL
-    // source keys mean the cover can't prune (min/max ignore NULLs)
-    val srcHasNullKey = keys.exists(k => b.getAs[Long](s"__nn_$k") > 0)
-    val cand =
-      if (srcHasNullKey) readManifest(spark, path, cur)
-      else readPruned(spark, path, keys.map(k => ColRange(k,
-        Option(b.get(b.fieldIndex(s"__lo_$k"))), Option(b.get(b.fieldIndex(s"__hi_$k"))))),
-        version = Some(cur.version)).df
+    // Delta's multiple-match refusal; its key stats then drive cowMerge's
+    // stats cover, probe and kept rows
+    val ks = mergeSourceStats(source, keys)
     val src = source.select(source.columns.map(c => col(c).as(s"__src_$c")).toSeq: _*)
     val matchCond = keys.map(k => col(k) <=> srcCol(k)).reduce(_ && _)
-    val matched = cand.join(src, matchCond, "inner")
-    val survivors0 = deleteWhen match {
-      case Some(c) => matched.filter(!coalesce(c.cast("boolean"), lit(false)))
-      case None => matched
-    }
     val updGate = coalesce(updateWhen.getOrElse(lit(true)).cast("boolean"), lit(false))
-    val survivors = survivors0.select(schema.fields.map { f =>
-      (updateSet.get(f.name) match {
-        case Some(e) => when(updGate, e.cast(f.dataType)).otherwise(col(f.name))
-        case None => col(f.name)
-      }).as(f.name)
-    }.toSeq: _*)
-    val delta =
+    // every target row a source key matches lives in a touched file, so
+    // the clauses run over the touched rows only
+    val delta: DataFrame => DataFrame = touchedRows => {
+      val matched = touchedRows.join(src, matchCond, "inner")
+      val survivors0 = deleteWhen match {
+        case Some(c) => matched.filter(!coalesce(c.cast("boolean"), lit(false)))
+        case None => matched
+      }
+      val survivors = survivors0.select(schema.fields.map { f =>
+        (updateSet.get(f.name) match {
+          case Some(e) => when(updGate, e.cast(f.dataType)).otherwise(col(f.name))
+          case None => col(f.name)
+        }).as(f.name)
+      }.toSeq: _*)
       if (!insertNotMatched) survivors
       else {
-        val candKeys = cand.select(keys.map(k => col(k).as(s"__tk_$k")): _*).distinct()
+        // a source key absent from the touched files is absent from the
+        // table: every file that holds one is touched
+        val touchedKeys = touchedRows.select(keys.map(k => col(k).as(s"__tk_$k")): _*)
         val antiCond = keys.map(k => col(k) <=> col(s"__tk_$k")).reduce(_ && _)
-        // cand is a stats-sound superset: every file that may hold any
-        // source key survives the cover, so absence from cand IS absence
-        // from the table
-        val inserts = source.join(candKeys, antiCond, "left_anti")
-          .select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
-        survivors.unionByName(inserts)
+        survivors.unionByName(source.join(touchedKeys, antiCond, "left_anti")
+          .select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*))
       }
+    }
     cowMerge(spark, path, source.select(keys.map(col): _*), Some(delta),
-      keys, statsCols, cur, "merge")
+      keys, statsCols, cur, "merge", known = Some(ks))
   }
 
   // ---------------------------------------------------------------- restore

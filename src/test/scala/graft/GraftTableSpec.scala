@@ -856,6 +856,27 @@ class GraftTableSpec extends AnyFunSuite with SparkSpecBase {
     assert(GraftTable.read(spark, path).count() == 1)
   }
 
+  test("empty overwrite/append commit no zero-row file") {
+    val path = tmp() + "/t"
+    // an empty overwrite commits its schema and no file
+    GraftTable.overwrite(kv(1 -> "a").filter(lit(false)), path)
+    val created = GraftTable.currentManifest(path).get
+    assert(GraftTable.filesOf(path, created).isEmpty && dataFiles(path).isEmpty)
+    assert(created.schemaDdl == kv().schema.toDDL)
+    val got = GraftTable.read(spark, path)
+    assert(got.count() == 0 && got.schema.fieldNames.toSeq == Seq("k", "v"))
+    // an empty append commits the parent's file list verbatim
+    GraftTable.append(kv(1 -> "a", 2 -> "b"), path)
+    val before = GraftTable.currentManifest(path).get
+    val onDisk = dataFiles(path).keySet
+    val v = GraftTable.append(kv(), path)
+    val after = GraftTable.currentManifest(path).get
+    assert(v == before.version + 1 && after.op == "append")
+    assert(GraftTable.filesOf(path, after) == GraftTable.filesOf(path, before))
+    assert(dataFiles(path).keySet == onDisk, "an empty append wrote a data file")
+    assert(canon(GraftTable.read(spark, path)) == canon(kv(1 -> "a", 2 -> "b")))
+  }
+
   test("convertParquetDir registers plain parquet in place; pruning and DML work after") {
     val dir = tmp() + "/plain"
     // a range-layout plain-parquet table (what a migration inherits)

@@ -1,9 +1,6 @@
 package graft
 
 import java.io.File
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.graftspec.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -17,20 +14,6 @@ class TableIOSpec extends AnyFunSuite with SparkSpecBase {
 
   private def tmp(): String =
     java.nio.file.Files.createTempDirectory("graft_tio").toString
-
-  /** Spark jobs started while `body` runs, counted after the listener bus
-    * has delivered every event. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
-  }
 
   private def withConf[T](key: String, value: String)(body: => T): T = {
     val saved = spark.conf.getOption(key)

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graftspec.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** One shared local session for all suites (forked test JVM). */
@@ -29,6 +32,20 @@ trait SparkSpecBase {
   def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
+
+  /** Spark jobs started while `body` runs, counted after the listener bus
+    * has delivered every event. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
 
   def df(schema: String, rows: Row*): DataFrame =
     spark.createDataFrame(rows.asJava,
