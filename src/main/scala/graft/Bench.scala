@@ -13,6 +13,11 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftSession.withTaskClassLoader(spark)(run(spark, sfDir))
+    spark.stop()
+  }
+
+  private def run(spark: SparkSession, sfDir: String): Unit = {
     // untimed warmup at the smallest SF: JIT-compiles the interpreted
     // higher-order-function path and shuffle machinery so the first timed
     // query doesn't absorb ~20 s of one-time JVM warmup. q60 warms the
@@ -90,6 +95,5 @@ object Bench {
     }
     // the final, complete metric line — stdout AND the failsafe file
     println(landFailsafe(partial = false))
-    spark.stop()
   }
 }

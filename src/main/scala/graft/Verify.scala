@@ -27,14 +27,16 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer[String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    GraftSession.withTaskClassLoader(spark) {
+      SparkEntry.queries
+        .filter { case (name, _) => only.isEmpty || only.contains(name) }
+        .foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          failed += name
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
     }
     // loud summary: a dropped row in the driver's correctness table must be

@@ -2270,7 +2270,9 @@ object GraftTable {
     * inserts). Same refusals as [[mergeInto]] (duplicate source keys,
     * unknown SET columns, full-schema source for inserts); same
     * stats-cover candidate pruning from the source's key bounds, both
-    * computed on the driver for a driver-local source; CHECK
+    * computed on the driver for a driver-local source, whose literal key
+    * set also filters the candidate rows before the match and the
+    * not-matched anti-join (no join key de-duplication); CHECK
     * constraints validate the staged images at staging. CDC consumers
     * see the masked rows as delta DELETEs and the staged files as
     * INSERTs — the fold-by-key replica applies them as the merge it
@@ -2308,9 +2310,18 @@ object GraftTable {
     val updApplies =
       if (updateSet.isEmpty) lit(false)
       else coalesce(updateWhen.getOrElse(lit(true)).cast("boolean"), lit(false))
+    // a driver-local source pre-filters the candidate live set by its
+    // literal key set, so the join and the inserts' anti-join see only
+    // rows that can match
+    val keyed: DataFrame => DataFrame = ks.tuples match {
+      case Some(t) =>
+        val member = coalesce(memberOf(keys, schema, t), lit(false))
+        _.filter(member)
+      case None => identity
+    }
     // mask ONLY rows a clause changes; delete wins over update
     val matcher: DataFrame => DataFrame = live =>
-      live.join(src, matchCond, "inner").filter(delApplies || updApplies)
+      keyed(live).join(src, matchCond, "inner").filter(delApplies || updApplies)
     val images: DataFrame => DataFrame = masked =>
       masked.filter(!delApplies && updApplies).select(schema.fields.map { f =>
         updateSet.get(f.name).map(_.cast(f.dataType)).getOrElse(col(f.name)).as(f.name)
@@ -2321,7 +2332,7 @@ object GraftTable {
         // the candidate live set is a stats-sound superset of every file
         // that may hold a source key, so absence from it IS absence from
         // the table (same cover argument as the COW merge)
-        val candKeys = live.select(keys.map(k => col(k).as(s"__tk_$k")): _*).distinct()
+        val candKeys = keyed(live).select(keys.map(k => col(k).as(s"__tk_$k")): _*)
         val antiCond = keys.map(k => col(k) <=> col(s"__tk_$k")).reduce(_ && _)
         source.join(candKeys, antiCond, "left_anti")
           .select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)

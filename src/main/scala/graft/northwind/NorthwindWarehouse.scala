@@ -319,8 +319,16 @@ object NorthwindWarehouse {
     * order_details) overlap the dim merges instead of gating them.
     * Audit-table writes are read-modify-write on shared state, so
     * registration happens before the fan-out and HWM marks after each
-    * group's join — only the heavy merge/write work runs in parallel. */
-  def runCycle(spark: SparkSession, sfDir: String, root: String, cycle: Int): Unit = {
+    * group's join — only the heavy merge/write work runs in parallel.
+    *
+    * The cycle and its model threads run under the session's SQL-task
+    * class loader ([[graft.GraftSession.withTaskClassLoader]]), so in
+    * local mode a class the driver compiles while planning is the cache
+    * hit of the tasks that run it. */
+  def runCycle(spark: SparkSession, sfDir: String, root: String, cycle: Int): Unit =
+    graft.GraftSession.withTaskClassLoader(spark) { runCycleBody(spark, sfDir, root, cycle) }
+
+  private def runCycleBody(spark: SparkSession, sfDir: String, root: String, cycle: Int): Unit = {
     import NorthwindSources._
     val cycleTs = to_timestamp(lit(if (cycle == 1) T1 else T2))
     val audit = new AuditControl(spark, s"$root/audit")
@@ -378,7 +386,15 @@ object NorthwindWarehouse {
     // through the Awaits.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stagingNames.size + 6)
+    // model threads carry the caller's context class loader (the task
+    // loader runCycle installed) whichever thread first submits to them
+    val loader = Thread.currentThread.getContextClassLoader
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(stagingNames.size + 6,
+      (r: Runnable) => {
+        val t = java.util.concurrent.Executors.defaultThreadFactory.newThread(r)
+        t.setContextClassLoader(loader)
+        t
+      })
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val stgF: Map[String, Future[Unit]] = stagingNames.map(n => n -> Future {

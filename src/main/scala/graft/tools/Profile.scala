@@ -19,7 +19,7 @@ object Profile {
     val name = args.headOption.getOrElse("q01_agg_pushdown")
     val n = args.lift(1).map(_.toInt).getOrElse(3)
     val d = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = graft.GraftSession.configure(SparkSession.builder().master("local[32]"))
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -27,7 +27,7 @@ object ReplaceCost {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(20L * 1000 * 1000)
     val nf = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = graft.GraftSession.configure(SparkSession.builder().master("local[32]"))
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -32,7 +32,7 @@ object WriteAmp {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val numFiles = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = graft.GraftSession.configure(SparkSession.builder().master("local[32]"))
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

@@ -189,12 +189,14 @@ class KeyedCommitSpec extends AnyFunSuite with SparkSpecBase {
       ("deleteByKey", 2, () => GraftTable.deleteByKey(spark, p, delta(600), Seq("k"))),
       ("mergeInto", 5, () => GraftTable.mergeInto(spark, p, delta(800), Seq("k"),
         updateSet = Map("v" -> srcCol("v")), statsCols = Seq("k"))),
+      ("mergeIntoMor", 6, () => GraftTable.mergeIntoMor(spark, p, delta(1200), Seq("k"),
+        updateSet = Map("v" -> srcCol("v")))),
       ("deleteWhere", 2, () => GraftTable.deleteWhere(spark, p,
         col("k") >= 1000 && col("k") < 1040, Seq(ColRange("k", Some(1000L), Some(1039L)))))
     ).map { case (name, budget, op) => (name, budget, jobsDuring(op(): Unit)) }
     val over = spent.filter { case (_, budget, jobs) => jobs > budget }
     assert(over.isEmpty, over.map { case (name, budget, jobs) =>
       s"$name launched $jobs Spark jobs (budget $budget)" }.mkString("; "))
-    assert(GraftTable.read(spark, p).count() == 3200 + 20 + (20 - 2) - 20 + 20 - 20)
+    assert(GraftTable.read(spark, p).count() == 3200 + 20 + (20 - 2) - 20 + 20 + 20 - 20)
   }
 }
