@@ -3,21 +3,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.withTaskClassLoader(spark)(run(spark, sfDir))
     spark.stop()
   }
 
-  private def run(spark: SparkSession, sfDir: String): Unit = {
+  /** Untimed warm-up before any timed query; BenchMedian runs the same. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     // untimed warmup at the smallest SF: JIT-compiles the interpreted
     // higher-order-function path and shuffle machinery so the first timed
     // query doesn't absorb ~20 s of one-time JVM warmup. q60 warms the
@@ -43,6 +36,10 @@ object Bench {
     // pipeline; the companions time their queries.
     try graft.northwind.NorthwindWarehouse.ensureBuilt(spark, sfDir): Unit
     catch { case _: Throwable => () }
+  }
+
+  private def run(spark: SparkSession, sfDir: String): Unit = {
+    warmUp(spark, sfDir)
     // median of 3 runs per query: one contended/noisy execution (round-1's
     // 141 s driver run vs the 27 s judge re-run) can't distort the signal.
     // q16/q17/q30 intentionally time temp-dir writer IO — they gate the

@@ -33,9 +33,9 @@ import org.apache.spark.sql.{Encoders, SparkSession}
   * `partiallyClusteredDistribution.enabled=false` for that stage
   * (GraftSpjSpec pins both directions of the trade).
   *
-  * Use [[configure]] on a builder (Verify/Bench/PlanAudit/tests all
-  * do), or copy [[RequiredConfs]] into `spark-defaults.conf` for a
-  * deployed cluster. All of these are Spark-native confs — a graft
+  * Use [[configure]] on a builder ([[harness]] and the tests do), or copy
+  * [[RequiredConfs]] into `spark-defaults.conf` for a deployed cluster.
+  * All of these are Spark-native confs — a graft
   * table read through a session missing them is still CORRECT, just
   * slower (exchanges reappear; hot buckets serialize; small-R shuffles
   * degenerate into per-reducer file churn). */
@@ -91,6 +91,22 @@ object GraftSession {
 
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     RequiredConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The session every measurement main (Bench, Verify and the tools)
+    * runs in, so their numbers describe one program: [[RequiredConfs]] on
+    * `local[cpus]` with `cpus` shuffle partitions, AQE, nanosecond
+    * parquet timestamps read as longs (`events.parquet`), UTC and no UI.
+    * `extra` confs apply last and win over the ones above. */
+  def harness(cpus: String, extra: (String, String)*): SparkSession =
+    (Seq(
+      "spark.sql.shuffle.partitions" -> cpus,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false") ++ extra)
+      .foldLeft(configure(SparkSession.builder().master(s"local[$cpus]"))) {
+        case (b, (k, v)) => b.config(k, v)
+      }.getOrCreate()
 
   /** Runs `body` with this session's SQL-task class loader as the calling
     * thread's context class loader, restoring the old one afterwards.

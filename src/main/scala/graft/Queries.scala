@@ -216,7 +216,7 @@ object Queries {
     audit.ensureRegistered("dim_user", "events", "user_id")
     audit.ensureRegistered("dim_user", "events", "user_id") // idempotent (S9)
     val hwm = Tables.events(s, d).agg(max(col("ts"))).first().getTimestamp(0)
-    audit.markProcessed("dim_user", hwm)
+    audit.markProcessed("dim_user", hwm, current_timestamp())
     audit.table.select(col("dimension_name"), col("driver_table"), col("business_key"),
       micros(col("hwm_date")).as("hwm_us"), col("is_processed"), col("is_initialized"))
   }

@@ -1,6 +1,6 @@
 package graft.audit
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.sql.Timestamp
@@ -69,21 +69,23 @@ class AuditControl(spark: SparkSession, root: String) {
       Timestamp.valueOf(s"$EpochDate 00:00:00"), None, false, false))).toMap
   }
 
-  /** C6: advance the HWM after a successful load. */
-  def markProcessed(entity: String, hwm: Timestamp): Unit =
-    markProcessedAll(Map(entity -> hwm))
+  /** C6: advance the HWM after a successful load; `at` stamps
+    * `last_processed_date`. */
+  def markProcessed(entity: String, hwm: Timestamp, at: Column): Unit =
+    markProcessedAll(Map(entity -> hwm), at)
 
-  /** Batch HWM advance: one audit read-modify-write per DAG level. */
-  def markProcessedAll(hwms: Map[String, Timestamp]): Unit = {
+  /** Batch HWM advance: one audit read-modify-write per DAG level. `at`
+    * stamps `last_processed_date`: a constant instant keeps the audit file
+    * byte-identical across runs, `current_timestamp()` records wall clock. */
+  def markProcessedAll(hwms: Map[String, Timestamp], at: Column): Unit = {
     if (hwms.isEmpty) return
-    val now = new Timestamp(System.currentTimeMillis())
     val touched = col("dimension_name").isin(hwms.keys.toSeq: _*)
     val hwmExpr = hwms.foldLeft(col("hwm_date")) { case (acc, (e, h)) =>
       when(col("dimension_name") === e, lit(h)).otherwise(acc)
     }
     val updated = table.withColumn("hwm_date", hwmExpr)
       .withColumn("last_processed_date",
-        when(touched, lit(now)).otherwise(col("last_processed_date")))
+        when(touched, at).otherwise(col("last_processed_date")))
       .withColumn("is_processed", when(touched, lit(true)).otherwise(col("is_processed")))
     TableIO.overwriteAtomic(updated.coalesce(1), path)
   }

@@ -50,8 +50,8 @@ object DvProbe {
   * formulation — a Scala UDF doing a per-row UTF8String→String
   * conversion, per-row Map probe, and breaking the WholeStageCodegen
   * span — measured ~500 ns/row (an 88–180× tax on a fully-dirty scan,
-  * `tools/DvCrossover`); this expression keeps the scan inside the
-  * codegen span. */
+  * SCALE.md's MOR read-amplification measurement); this expression
+  * keeps the scan inside the codegen span. */
 case class DvIsLive(left: Expression, right: Expression,
     dvByFile: Map[String, String])
     extends BinaryExpression with Predicate {

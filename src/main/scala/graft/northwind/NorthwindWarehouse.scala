@@ -29,8 +29,9 @@ import graft.scd.{Scd2, Scd2Config}
   *  - the intermediate employee rank picks its surviving territory row with
   *    a deterministic tie-break (territory_description) where the reference
   *    relies on Snowflake's arbitrary pick;
-  *  - created_at/updated_at stamp the cycle's batch time, not wall clock,
-  *    so two engines can agree bit-for-bit.
+  *  - created_at/updated_at, and the audit rows' last_processed_date,
+  *    stamp the cycle's batch time, not wall clock, so two engines (and
+  *    two runs) can agree bit-for-bit.
   *
   * Scale shape: every dim chain is HWM-pruned before its window (the SCD2
   * shuffle is O(|delta|)); the tiny joined sides (categories, region,
@@ -295,18 +296,6 @@ object NorthwindWarehouse {
     "stg_products", "stg_employees", "stg_suppliers", "stg_categories",
     "stg_shippers", "stg_region", "stg_territories", "stg_employeeterritories")
 
-  /** Phase timing for the two-cycle run, printed when GRAFT_NW_PROFILE is
-    * set — the pipeline is the bench's dominant query, so keep the cost
-    * breakdown one env var away. */
-  private def timed[A](label: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_NW_PROFILE")) f
-    else {
-      val t0 = System.nanoTime
-      val r = f
-      println(f"[nw] $label%-24s ${(System.nanoTime - t0) / 1e9}%6.2f s")
-      r
-    }
-
   /** One full `dbt run` cycle (SURVEY E1/E2) against the lake state visible
     * at the cycle's batch time.
     *
@@ -398,22 +387,20 @@ object NorthwindWarehouse {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val stgF: Map[String, Future[Unit]] = stagingNames.map(n => n -> Future {
-        timed(s"c$cycle   $n") { TableIO.overwriteAtomic(staged(n), stagingPath(n)) }
+        TableIO.overwriteAtomic(staged(n), stagingPath(n))
       }).toMap
       def ready(deps: Seq[String]): Future[Unit] =
         Future.sequence(deps.map(stgF)).map(_ => ())
 
       val dimF: Map[String, Future[(String, java.sql.Timestamp)]] =
         dims.map(dl => dl.name -> ready(dl.stagingDeps).map { _ =>
-          timed(s"c$cycle   ${dl.name}") {
-            val delta = dl.intermediate(hwms(dl.name))
-            val existing = TableIO.readOrEmpty(spark, tablePath(dl.name),
-              Scd2.fromHistory(delta, dl.cfg, dl.skCol))
-            TableIO.overwriteAtomic(Scd2.merge(existing, delta, dl.cfg, dl.skCol),
-              tablePath(dl.name))
-            dl.name -> TableIO.read(spark, tablePath(dl.name))
-              .agg(max(col("updated_at"))).first().getTimestamp(0)
-          }
+          val delta = dl.intermediate(hwms(dl.name))
+          val existing = TableIO.readOrEmpty(spark, tablePath(dl.name),
+            Scd2.fromHistory(delta, dl.cfg, dl.skCol))
+          TableIO.overwriteAtomic(Scd2.merge(existing, delta, dl.cfg, dl.skCol),
+            tablePath(dl.name))
+          dl.name -> TableIO.read(spark, tablePath(dl.name))
+            .agg(max(col("updated_at"))).first().getTimestamp(0)
         }).toMap
 
       // dbt-snapshot + static models run off the same readiness DAG but
@@ -425,20 +412,16 @@ object NorthwindWarehouse {
       // cycle exactly as `dbt run` would
       val snapF = ready(Seq("stg_employees", "stg_employeeterritories",
           "stg_territories", "stg_region")).map { _ =>
-        timed(s"c$cycle   snapshot_employee") {
-          val src = snapEmployee(spark, stg("stg_employees"),
-            stg("stg_employeeterritories"), stg("stg_territories"), stg("stg_region"))
-          val path = s"$root/snapshots/snapshot_employee"
-          val existing = TableIO.readOrEmpty(spark, path,
-            Scd2.snapshot(src.limit(0), snapEmployeeCfg, "employee_scd_id"))
-          TableIO.overwriteAtomic(
-            Scd2.snapshotMerge(existing, src, snapEmployeeCfg, "employee_scd_id"), path)
-        }
+        val src = snapEmployee(spark, stg("stg_employees"),
+          stg("stg_employeeterritories"), stg("stg_territories"), stg("stg_region"))
+        val path = s"$root/snapshots/snapshot_employee"
+        val existing = TableIO.readOrEmpty(spark, path,
+          Scd2.snapshot(src.limit(0), snapEmployeeCfg, "employee_scd_id"))
+        TableIO.overwriteAtomic(
+          Scd2.snapshotMerge(existing, src, snapEmployeeCfg, "employee_scd_id"), path)
       }
       val dimDateF = Future {
-        timed(s"c$cycle   dim_date") {
-          TableIO.overwriteAtomic(graft.operators.DimDate(spark), tablePath("dim_date"))
-        }
+        TableIO.overwriteAtomic(graft.operators.DimDate(spark), tablePath("dim_date"))
       }
 
       // 3/4. facts (fact_order.sql with its repair post-hook; B7 composite
@@ -446,25 +429,22 @@ object NorthwindWarehouse {
       val factOrderF = for {
         _ <- stgF("stg_orders")
         _ <- dimF("dim_employee"); _ <- dimF("dim_customer"); _ <- dimF("dim_shippers")
-        r <- Future(timed(s"c$cycle   fact_order") {
-          loadFactOrder(spark, root, auditState("fact_order").hwmDate,
-            stg("stg_orders"), cycleTs)
-        })
+        r <- Future(loadFactOrder(spark, root, auditState("fact_order").hwmDate,
+          stg("stg_orders"), cycleTs))
       } yield r
       val factDetailsF = for {
         _ <- stgF("stg_order_details")
         _ <- stgF("stg_orders") // order_date rides in for the year partition
         _ <- dimF("dim_products")
-        r <- Future(timed(s"c$cycle   fact_order_details") {
-          loadFactOrderDetails(spark, root, auditState("fact_order_details").hwmDate,
-            stg("stg_order_details"), stg("stg_orders"))
-        })
+        r <- Future(loadFactOrderDetails(spark, root,
+          auditState("fact_order_details").hwmDate, stg("stg_order_details"),
+          stg("stg_orders")))
       } yield r
 
       val newHwms = Await.result(Future.sequence(dims.map(dl => dimF(dl.name))), Duration.Inf)
-      audit.markProcessedAll(newHwms.toMap)
+      audit.markProcessedAll(newHwms.toMap, cycleTs)
       val factHwms = Await.result(Future.sequence(Seq(factOrderF, factDetailsF)), Duration.Inf)
-      audit.markProcessedAll(factHwms.toMap)
+      audit.markProcessedAll(factHwms.toMap, cycleTs)
       Await.result(Future.sequence(Seq(snapF, dimDateF)), Duration.Inf): Unit
     } catch {
       case t: Throwable =>
@@ -488,7 +468,7 @@ object NorthwindWarehouse {
       .select(acc.columns.map(c => col(s"__fact.$c")) :+
         AsOf.resolveSk(col("__dim.__sk")).as(skCol): _*)
 
-  private def factDims(spark: SparkSession, root: String): Seq[(String, String, String, String)] =
+  private val factDims: Seq[(String, String, String, String)] =
     Seq( // (dim table, fact key, dim key, sk col)
       ("dim_employee", "employee_id", "employee_id", "employee_sk"),
       ("dim_customer", "customer_id", "customer_id", "customer_sk"),
@@ -505,7 +485,7 @@ object NorthwindWarehouse {
       .withColumnRenamed("op", "record_status")
       .withColumn("order_year", year(col("order_date")))
     val probe = col("__fact.order_date").cast("timestamp")
-    val resolved = factDims(spark, root).foldLeft(delta) {
+    val resolved = factDims.foldLeft(delta) {
       case (acc, (dimName, fKey, dKey, skCol)) =>
         resolveDim(acc, TableIO.read(spark, s"$root/dwh/$dimName"), fKey, dKey, skCol, probe)
     }
@@ -522,9 +502,7 @@ object NorthwindWarehouse {
       .withColumn("created_at", coalesce(col("__ex_created"), cycleTs))
       .withColumn("updated_at", cycleTs)
       .drop("__ex_hash", "__ex_status", "__ex_created")
-    timed("      fo upsert") {
-      TableIO.upsertByKey(spark, path, changed, Seq("order_id"), partitionBy = Seq("order_year"))
-    }
+    TableIO.upsertByKey(spark, path, changed, Seq("order_id"), partitionBy = Seq("order_year"))
     // post-hook 1 (C7): repair rows still carrying ANY dummy SK — re-resolve
     // all three SKs against the now-current dims and bump updated_at, even
     // when the re-lookup fails again (the reference UPDATE matches them too).
@@ -539,15 +517,15 @@ object NorthwindWarehouse {
     // Delta-sized: only the dummy-carrying rows re-enter the keyed writer,
     // which rewrites only their partitions (an empty repair set writes
     // nothing) — the steady-state cycle never rewrites the whole fact
-    val skCols = factDims(spark, root).map(_._4)
+    val skCols = factDims.map(_._4)
     val fact = TableIO.read(spark, path)
     val isDummy = skCols.map(c => col(c) === dummySk).reduce(_ || _)
     val failed = fact.filter(isDummy && col("updated_at") < cycleTs).drop(skCols: _*)
     // steady-state cycles usually have nothing to repair: probe first (a
     // limit-1 scan that stops at the first dummy row) and skip the whole
     // re-resolve + upsert chain when the repair set is empty
-    if (timed("      fo repair-probe") { !failed.isEmpty }) timed("      fo repair") {
-      val reResolved = factDims(spark, root).foldLeft(failed) {
+    if (!failed.isEmpty) {
+      val reResolved = factDims.foldLeft(failed) {
         case (acc, (dimName, fKey, dKey, skCol)) =>
           resolveDim(acc, TableIO.read(spark, s"$root/dwh/$dimName"), fKey, dKey, skCol,
             col("__fact.order_date").cast("timestamp"))
@@ -555,9 +533,8 @@ object NorthwindWarehouse {
       TableIO.upsertByKey(spark, path, reResolved, Seq("order_id"), partitionBy = Seq("order_year"))
     }
     // post-hook 2 (C6): hwm from the fact's own updated_at
-    "fact_order" -> timed("      fo hwm") {
+    "fact_order" ->
       TableIO.read(spark, path).agg(max(col("updated_at"))).first().getTimestamp(0)
-    }
   }
 
   /** Returns ("fact_order_details", new HWM); the caller marks the audit row. */

@@ -81,7 +81,7 @@ class WarehouseBuilder(root: String) {
           Scd2.fromHistory(delta, cfg))
         TableIO.overwriteAtomic(Scd2.merge(existing, delta, cfg), dimPath(name))
         val newHwm = delta.agg(max(col("dl_process_date"))).first().getTimestamp(0)
-        audit.markProcessed(name, newHwm)
+        audit.markProcessed(name, newHwm, current_timestamp())
       }
     }
     this
@@ -111,7 +111,7 @@ class WarehouseBuilder(root: String) {
         }
         TableIO.upsertByKey(spark, factPath(name), resolved, factKeys)
         val newHwm = delta.agg(max(col("dl_process_date"))).first().getTimestamp(0)
-        audit.markProcessed(name, newHwm)
+        audit.markProcessed(name, newHwm, current_timestamp())
       }
       // repair pass runs even when no new facts arrived: dims may have
       // caught up since the rows were loaded (late-arriving dimensions)

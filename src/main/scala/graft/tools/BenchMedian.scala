@@ -1,11 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, GraftSession, SparkEntry}
 
-import graft.SparkEntry
-
-/** The quiesced per-query benchmark protocol — the [[CommitCost]]
-  * measurement discipline applied to the whole query registry: N passes
+/** The quiesced per-query benchmark protocol — the measurement
+  * discipline of the commit-cost probe (`tools/CommitCost`, removed after
+  * commit 086f12c) applied to the whole query registry: N passes
   * over the registry (default 5), per-query MEDIAN and SPREAD (min/max)
   * written as a markdown table. The committed table is the
   * round-over-round reference that a single contended driver run can't
@@ -36,33 +35,8 @@ object BenchMedian {
     val passes = args.lift(2).map(_.toInt).getOrElse(5)
     val only = args.drop(3).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.harness(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // the Bench warmup contract: JIT + codebook kernels compile untimed
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory) {
-      Seq("q26_ngram_jaccard", "q10_scd2_history", "q02_star_join",
-        "q60_pq_ann").foreach { q =>
-        try SparkEntry.queries(q)(spark, warmDir).count(): Unit
-        catch { case _: Throwable => () }
-      }
-    }
-    // warm the MEMOIZED northwind warehouse for the benched SF untimed:
-    // ensureBuilt caches per sfDir, so without this the first nw-family
-    // companion query in the run absorbs the whole 25-model build —
-    // BENCH_MEDIANS flagged q94_nw_dim_shipper at 141.7x max/min for
-    // exactly this (the build landing on pass 1's shuffled first-touch).
-    // q36 (fact_order) still rebuilds fresh by design — it TIMES the
-    // pipeline; the companions time their queries.
-    try graft.northwind.NorthwindWarehouse.ensureBuilt(spark, sfDir): Unit
-    catch { case _: Throwable => () }
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only.contains(n))
     // settle barrier: drain cached plans, collect the previous query's
@@ -75,21 +49,24 @@ object BenchMedian {
     }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    for (pass <- 1 to passes) {
-      // a different visiting order every pass (seeded — reruns reproduce)
-      val order = new scala.util.Random(42 + pass).shuffle(names)
-      System.err.println(s"[median] pass $pass/$passes (${order.take(3).mkString(", ")}, …)")
-      order.foreach { name =>
-        settle()
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val t =
-          try { fn(spark, sfDir).count(): Unit; (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
-            System.err.println(s"[median] $name failed: ${e.getMessage}")
-            -1.0
-          }
-        samples(name) = t :: samples(name)
+    GraftSession.withTaskClassLoader(spark) {
+      Bench.warmUp(spark, sfDir)
+      for (pass <- 1 to passes) {
+        // a different visiting order every pass (seeded — reruns reproduce)
+        val order = new scala.util.Random(42 + pass).shuffle(names)
+        System.err.println(s"[median] pass $pass/$passes (${order.take(3).mkString(", ")}, …)")
+        order.foreach { name =>
+          settle()
+          val fn = SparkEntry.queries(name)
+          val t0 = System.nanoTime()
+          val t =
+            try { fn(spark, sfDir).count(): Unit; (System.nanoTime() - t0) / 1e9 }
+            catch { case e: Throwable =>
+              System.err.println(s"[median] $name failed: ${e.getMessage}")
+              -1.0
+            }
+          samples(name) = t :: samples(name)
+        }
       }
     }
     val rows = names.map { name =>

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import graft.{Queries => Q}
 /** Prints physical-plan health checks for representative queries:
   * filter/column pushdown into the parquet scan, broadcast vs sort-merge
@@ -7,17 +6,11 @@ import graft.{Queries => Q}
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.GraftSession.configure(
-      SparkSession.builder().master("local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the full extension surface (functions, GraftPrune, SQL DML
-      // parser) — static conf, so this JVM is where the extension-built
-      // session gets audited end to end
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // the full extension surface (functions, GraftPrune, SQL DML parser)
+    // — static conf, so this JVM is where the extension-built session
+    // gets audited end to end
+    val spark = graft.GraftSession.harness("8",
+      "spark.sql.extensions" -> "graft.expressions.GraftExtensions")
     spark.sparkContext.setLogLevel("ERROR")
     def audit(name: String, checks: (String, String => Boolean)*): Unit = {
       val plan = Q.all(name)(spark, d).queryExecution.executedPlan.toString
@@ -809,7 +802,7 @@ object PlanAudit {
         "mor_scan_vectorized" -> (fs.nonEmpty && !planStr.contains("RowDataSourceScan")),
         "clean_branch_unfiltered" -> (fs.size >= 2),
         // the liveness probe is the codegen'd DvIsLive predicate — a
-        // Scala UDF here measured ~500 ns/row (tools/DvCrossover)
+        // Scala UDF here measured ~500 ns/row (SCALE.md, MOR read amplification)
         "probe_codegen" -> (planStr.contains("graft_dv_is_live") &&
           !planStr.contains("UDF")),
         "complement_exact" -> (n == 4095L))

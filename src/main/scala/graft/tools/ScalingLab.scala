@@ -5,11 +5,14 @@ import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
+
 /** Scratch diagnosis harness for the 32-core anti-scaling investigation
   * (not part of the driver contract): runs one SparkEntry query under the
   * exact Bench session confs while a listener aggregates task metrics, so
   * "more cores made it slower" can be attributed to GC, shuffle fetch,
   * scheduler overhead, or task-count explosion instead of guessed at.
+  * After each query's last run it lists that run's 15 longest stages.
   *
   *   SPARK_GRAFT_CPUS=32 runMain graft.tools.ScalingLab q119_triangle_counts 2 [sfDir]
   */
@@ -71,16 +74,15 @@ object ScalingLab {
     val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONFS", "").split(";")
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v) }.toSeq
-    val spark = extra.foldLeft(graft.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = GraftSession.harness(cpus, extra: _*)
     spark.sparkContext.setLogLevel("ERROR")
     if (extra.nonEmpty) println(s"[scaling] extra confs: ${extra.mkString(", ")}")
+    GraftSession.withTaskClassLoader(spark)(measure(spark, names, n, d, cpus))
+    spark.stop()
+  }
+
+  private def measure(spark: SparkSession, names: Seq[String], n: Int, d: String,
+      cpus: String): Unit =
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // Bench warmup discipline: JIT at the small SF, untimed
@@ -98,7 +100,7 @@ object ScalingLab {
         Thread.sleep(500)
         spark.sparkContext.removeSparkListener(agg)
         println(f"[scaling] run$i ${agg.report(wall)}")
-        if (i == n && sys.env.contains("SPARK_GRAFT_STAGE_DETAIL")) {
+        if (i == n) {
           import scala.jdk.CollectionConverters._
           agg.stageInfo.asScala.toSeq.sortBy(-_._4).take(15).foreach {
             case (id, nm, nt, rt) =>
@@ -107,6 +109,4 @@ object ScalingLab {
         }
       }
     }
-    spark.stop()
-  }
 }

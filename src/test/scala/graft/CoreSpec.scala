@@ -429,15 +429,32 @@ class CoreSpec extends AnyFunSuite with SparkSpecBase {
     audit.ensureRegistered("dim_x", "orders", "o_orderkey")
     assert(audit.table.count() == 1) // idempotent (S9)
     val hwm = ts("2024-03-01 12:00:00")
-    audit.markProcessed("dim_x", hwm)
+    val at = ts("2024-03-02 08:00:00")
+    audit.markProcessed("dim_x", hwm, lit(at))
     val i = audit.info("dim_x")
     assert(i.isProcessed && i.hwmDate == hwm && i.isInitialized)
+    assert(i.lastProcessedDate.contains(at))
+  }
+
+  test("markProcessedAll: the same inputs write byte-identical audit files") {
+    def parts(dir: String): Seq[Array[Byte]] = {
+      val audit = new AuditControl(spark, dir)
+      audit.ensureRegisteredAll(Seq(("dim_a", "t", "k"), ("dim_b", "t", "k")))
+      audit.markProcessedAll(Map("dim_a" -> ts("2024-01-05 00:00:00"),
+        "dim_b" -> ts("2024-01-06 00:00:00")), lit(ts("2024-02-01 00:00:00")))
+      new java.io.File(dir, "audit_control").listFiles
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
+        .map(f => java.nio.file.Files.readAllBytes(f.toPath))
+    }
+    val (a, b) = (parts(tmp()), parts(tmp()))
+    assert(a.nonEmpty && a.size == b.size)
+    a.zip(b).foreach { case (x, y) => assert(java.util.Arrays.equals(x, y)) }
   }
 
   test("processingRange counts days from hwm to target") {
     val audit = new AuditControl(spark, tmp())
     audit.ensureRegistered("dim_y", "t", "k")
-    audit.markProcessed("dim_y", ts("2024-03-01 00:00:00"))
+    audit.markProcessed("dim_y", ts("2024-03-01 00:00:00"), current_timestamp())
     val r = audit.processingRange("dim_y", java.time.LocalDate.parse("2024-03-04"))
     assert(r.totalDays == 3 && r.needsProcessing)
   }
