@@ -470,7 +470,7 @@ WHERE o_orderdate >= TIMESTAMP '1995-01-01' AND o_orderdate < TIMESTAMP '1995-07
 GROUP BY 1""",
 
     // q134 consumed through the batch format("graft") source — the
-    // manifest FileIndex must be invisible to results (it only removes
+    // GraftBatch scan's file skipping must be invisible to results (it only removes
     // provably-dead file IO at planning time)
     "q148_source_scan" -> """
 SELECT epoch_us(date_trunc('month', o_orderdate)) AS month_us,

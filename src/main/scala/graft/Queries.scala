@@ -2436,8 +2436,8 @@ object Queries {
 
   /** q148: q134's pruned aggregation consumed through the BATCH
     * `format("graft")` source — NO GraftPrune.install, no explicit
-    * readPruned: the manifest-backed FileIndex skips files by stats
-    * inside `listFiles` for every consumer by construction
+    * readPruned: the GraftBatch scan skips files by stats at split
+    * planning for every consumer by construction
     * ([[graft.sources.GraftBatchRead]]; GraftBatchReadSpec pins the
     * planned-file counts, this gate pins end-to-end correctness
     * through the source). */
@@ -2645,7 +2645,7 @@ object Queries {
 
   /** q171: METADATA-ONLY AGGREGATES — `count(*) / count(col) / min /
     * max` over a graft scan answered FROM THE MANIFEST
-    * ([[graft.plans.GraftPrune.rewriteMetaAgg]]): the fsRelation's
+    * ([[graft.plans.GraftPrune.rewriteMetaAgg]]): the relation's
     * entries are dv-free with exact per-file rows and [min,max,nulls],
     * so the whole aggregate subtree collapses to a LocalRelation at
     * optimization — zero data files read (PlanAudit pins the plan; at
@@ -3104,7 +3104,7 @@ object Queries {
   /** q158: the `format("graft")` WRITER end to end — half the source
     * arrives through a creating append, half through a second append,
     * an `Ignore`-mode write against the existing table must no-op, and
-    * the read back goes through the batch source (manifest FileIndex,
+    * the read back goes through the batch source (the GraftBatch scan,
     * stats skipping live). The oracle is the plain selection — a
     * writer that drops, duplicates, or lets the Ignore write through
     * breaks the hash. */

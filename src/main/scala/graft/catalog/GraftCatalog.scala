@@ -423,17 +423,29 @@ private[catalog] class GraftStagedTable(tableName: String, ident: Identifier,
   * layout as a required distribution), native DELETE/TRUNCATE, and row-level
   * UPDATE/MERGE (group-based COW, or the delta protocol on
   * `graft.deletionVectors` tables). `pin` is a version pinned by time
-  * travel: pinned tables are read-only. */
+  * travel: pinned tables are read-only. `snapshot` is a manifest the
+  * caller already resolved and `subset` an entry subset of it — every
+  * Scala-API and `format("graft")` read is this table over the snapshot
+  * it pinned ([[GraftTable.readFileSubset]]); such a table is read-only
+  * too. */
 private[graft] class GraftNamedTable(tableName: String, val path: String,
-    val pin: Option[Long]) extends Table with SupportsRead with SupportsWrite
+    val pin: Option[Long], snapshot: Option[GraftTable.Manifest] = None,
+    subset: Option[Seq[GraftTable.FileEntry]] = None)
+    extends Table with SupportsRead with SupportsWrite
     with SupportsDelete with TruncatableTable
     with SupportsRowLevelOperations with SupportsMetadataColumns {
 
-  private def manifest: GraftTable.Manifest = pin match {
+  private def manifest: GraftTable.Manifest = snapshot.getOrElse(pin match {
     case Some(v) => GraftTable.manifestAt(path, v)
     case None => GraftTable.currentManifest(path).getOrElse(
       throw new IllegalStateException(s"graft table '$path' vanished"))
-  }
+  })
+
+  /** The entries a read of this table plans before any filter: the
+    * caller's subset, else every live file of the snapshot.
+    * [[graft.plans.GraftPrune]]'s manifest folds answer from these. */
+  private[graft] def entries: Seq[GraftTable.FileEntry] =
+    subset.getOrElse(GraftTable.filesOf(path, manifest))
 
   override def name(): String = tableName
   override def schema(): StructType = StructType.fromDDL(manifest.schemaDdl)
@@ -467,7 +479,7 @@ private[graft] class GraftNamedTable(tableName: String, val path: String,
     val caps = new java.util.HashSet[TableCapability]()
     caps.add(TableCapability.BATCH_READ)
     caps.add(TableCapability.MICRO_BATCH_READ)
-    if (pin.isEmpty) {
+    if (pin.isEmpty && snapshot.isEmpty) {
       caps.add(TableCapability.BATCH_WRITE)
       caps.add(TableCapability.TRUNCATE)
       caps.add(TableCapability.STREAMING_WRITE)
@@ -476,10 +488,10 @@ private[graft] class GraftNamedTable(tableName: String, val path: String,
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftNamedScanBuilder(path, schema(), pin, options)
+    new GraftNamedScanBuilder(path, schema(), pin, options, snapshot, subset)
 
   /** `_graft_file` — the full URI of the file serving each row (Delta's
-    * `_metadata.file_path` analog) — and `_graft_pos`, the row's
+    * hidden file-path metadata analog) — and `_graft_pos`, the row's
     * position within that file (the parquet row index), both served by
     * the [[graft.sources.GraftBatch]] reader wrapper. Together they are
     * the ROW ID the delta-based (merge-on-read) row-level protocol
@@ -550,7 +562,9 @@ private[graft] class GraftNamedTable(tableName: String, val path: String,
 }
 
 private[graft] class GraftNamedScanBuilder(path: String, tableSchema: StructType,
-    pin: Option[Long], options: CaseInsensitiveStringMap) extends ScanBuilder
+    pin: Option[Long], options: CaseInsensitiveStringMap,
+    snapshot: Option[GraftTable.Manifest], subset: Option[Seq[GraftTable.FileEntry]])
+    extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -569,7 +583,7 @@ private[graft] class GraftNamedScanBuilder(path: String, tableSchema: StructType
     * the file set [[GraftNamedScan]] plans must never diverge across a
     * concurrent commit. */
   private lazy val snap: Option[GraftTable.Manifest] =
-    pin.map(GraftTable.manifestAt(path, _))
+    snapshot.orElse(pin.map(GraftTable.manifestAt(path, _)))
       .orElse(GraftTable.currentManifest(path))
 
   /** The EXACT-PRUNE claim: when every pushed filter is a recognized
@@ -623,7 +637,11 @@ private[graft] class GraftNamedScanBuilder(path: String, tableSchema: StructType
     * could not answer every aggregate. */
   override def supportCompletePushDown(agg: org.apache.spark.sql.connector
       .expressions.aggregate.Aggregation): Boolean = {
-    aggAnswer = GraftMetaAggFold.fold(path, () => snap, agg, pushed, exactInside)
+    // pushed filters without the claim bail: a partial manifest answer
+    // would still cost the scan
+    aggAnswer =
+      if (pushed.nonEmpty && exactInside.isEmpty) None
+      else GraftMetaAggFold.fold(path, () => snap, agg, exactInside.orElse(subset))
     aggAnswer.isDefined
   }
 
@@ -661,7 +679,7 @@ private[graft] class GraftNamedScanBuilder(path: String, tableSchema: StructType
           m <- snap
           pred <- graft.plans.GraftPrune.v1StatPred(
             StructType.fromDDL(m.schemaDdl), filters.toSeq)
-          entries = GraftTable.filesOf(path, m)
+          entries = subset.getOrElse(GraftTable.filesOf(path, m))
           if !entries.exists(_.renames.exists(_.nonEmpty))
           (_, inside) <- graft.plans.GraftPrune.classifyFilteredTree(entries,
             pred, forbidDv = false)
@@ -688,7 +706,7 @@ private[graft] class GraftNamedScanBuilder(path: String, tableSchema: StructType
       new GraftLocalAggScan(path, schema, values)
     case _ =>
       new GraftNamedScan(path, tableSchema, required, pushed, pin, options,
-        limit, snap, exactInside)
+        limit, snap, exactInside.orElse(subset))
   }
 }
 
@@ -733,14 +751,12 @@ private[graft] object GraftMetaAggFold {
   private case class SMax(col: String) extends Shape
 
   /** `snap` is the builder's PINNED snapshot (by-name — the syntactic
-    * vet must stay ahead of any manifest IO); `exactInside`, when the
-    * builder's exact-prune claim holds, is the provably-inside file
-    * subset the filters reduce to — the fold then answers the FILTERED
-    * aggregate by running the same per-file discipline over just those
-    * entries (every live row of an inside file passes the filter, so
-    * liveRows/null-counts/bounds are exact). Pushed filters WITHOUT a
-    * claim bail as before — a partial manifest answer would still cost
-    * the scan.
+    * vet must stay ahead of any manifest IO); `entries`, when given, is
+    * the file set the scan reads in place of the whole snapshot: the
+    * provably-inside subset of the builder's exact-prune claim (the fold
+    * then answers the FILTERED aggregate — every live row of an inside
+    * file passes the filter, so liveRows/null-counts/bounds are exact),
+    * else the table's entry subset.
     *
     * GROUP BY: single-part column references translate to the grouped
     * fold ([[GraftPrune.foldGroupedMetaAgg]]) — answered only on
@@ -749,10 +765,8 @@ private[graft] object GraftMetaAggFold {
     * complete-pushdown convention: group columns FIRST, then aggregate
     * columns, matched positionally by `V2ScanRelationPushDown`. */
   def fold(path: String, snap: () => Option[GraftTable.Manifest],
-      agg: Aggregation, pushed: Array[Filter],
-      exactInside: Option[Seq[GraftTable.FileEntry]])
+      agg: Aggregation, entries: Option[Seq[GraftTable.FileEntry]])
       : Option[(StructType, Seq[Seq[Any]])] = {
-    if (pushed.nonEmpty && exactInside.isEmpty) return None
     def ref(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
       case nr: NamedReference if nr.fieldNames.length == 1 =>
@@ -793,14 +807,14 @@ private[graft] object GraftMetaAggFold {
         (StructField(s"max_$n", f.dataType),
           GraftPrune.BoundReq(n, f.dataType, takeMax = true))
     }
-    val entries = exactInside.getOrElse(GraftTable.filesOf(path, m))
+    val files = entries.getOrElse(GraftTable.filesOf(path, m))
     if (groupRefs.isEmpty) {
-      val answers = GraftPrune.foldMetaAgg(entries, translated.map(_._2))
+      val answers = GraftPrune.foldMetaAgg(files, translated.map(_._2))
         .getOrElse(return None)
       Some((StructType(translated.map(_._1).toArray), Seq(answers)))
     } else {
       val groupFields = groupRefs.map(n => field(n).getOrElse(return None))
-      val rows = GraftPrune.foldGroupedMetaAgg(entries,
+      val rows = GraftPrune.foldGroupedMetaAgg(files,
         GraftPrune.identityDims(groupFields.map(f => f.name -> f.dataType)),
         translated.map(_._2))
         .getOrElse(return None)
@@ -814,10 +828,10 @@ private[graft] object GraftMetaAggFold {
 }
 
 private[graft] class GraftNamedScan(path: String, tableSchema: StructType,
-    required: StructType, pushed: Array[Filter], pin: Option[Long],
+    required: StructType, private[graft] val pushed: Array[Filter], pin: Option[Long],
     options: CaseInsensitiveStringMap, limit: Option[Int] = None,
     pinned: Option[GraftTable.Manifest] = None,
-    exactEntries: Option[Seq[GraftTable.FileEntry]] = None) extends Scan
+    baseEntries: Option[Seq[GraftTable.FileEntry]] = None) extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
@@ -842,7 +856,8 @@ private[graft] class GraftNamedScan(path: String, tableSchema: StructType,
 
   override def readSchema(): StructType = required
   override def description(): String = s"GraftNamed $path" +
-    pin.map(v => s" VERSION AS OF $v").getOrElse("")
+    pin.map(v => s" VERSION AS OF $v").getOrElse("") +
+    (if (pushed.isEmpty) "" else pushed.mkString(" PushedFilters: [", ", ", "]"))
 
   /** Resolved ONCE — normally the builder's pinned snapshot (the SAME
     * one its exact-prune claim classified against) — so everything
@@ -869,7 +884,33 @@ private[graft] class GraftNamedScan(path: String, tableSchema: StructType,
       // chosen by liveRows could then under-deliver — forward the hint
       // only on a bare unfiltered scan
       limit.filter(_ => pushed.isEmpty && runtime.isEmpty),
-      entriesOverride = exactEntries)
+      entriesOverride = baseEntries, onPlanned = b => lastPlanned = Some(b))
+
+  /** The entries this scan plans before the pushed filters' stats
+    * prune: the exact-prune claim's inside set (the filters then hold
+    * on every live row), else the table's subset or whole snapshot. */
+  private[graft] def entries: Seq[GraftTable.FileEntry] =
+    baseEntries.getOrElse(GraftTable.filesOf(path, manifest))
+
+  /** The batch whose partitions Spark planned last (a runtime filter
+    * re-plans; `toBatch` also runs for plan equality checks, which plan
+    * nothing). */
+  @volatile private var lastPlanned: Option[graft.sources.GraftBatch] = None
+
+  /** Files planned and files skipped by manifest stats/blooms (or a
+    * runtime file-set filter), shown on the `BatchScan` node in the SQL
+    * plan — the scan-level counterpart of [[GraftTable.PrunedScan]]'s
+    * `filesRead`/`filesTotal`. */
+  override def supportedCustomMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    Array(new GraftFilesPlannedMetric, new GraftFilesSkippedMetric)
+
+  override def reportDriverMetrics()
+      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    lastPlanned.toArray.flatMap { b =>
+      Seq(GraftScanMetrics.value(GraftScanMetrics.FilesPlanned, b.filesPlanned),
+        GraftScanMetrics.value(GraftScanMetrics.FilesSkipped, b.filesSkipped))
+    }
 
   /** Storage-partitioned joins: when the snapshot is cleanly bucketed
     * (`graft.bucketBy` declared, every surviving data-bearing file
@@ -882,7 +923,7 @@ private[graft] class GraftNamedScan(path: String, tableSchema: StructType,
       : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
     val probe = new graft.sources.GraftBatch(SparkSession.active, path, manifest,
       StructType.fromDDL(manifest.schemaDdl), required, pushed,
-      entriesOverride = exactEntries)
+      entriesOverride = baseEntries)
     probe.bucketedBy match {
       // single-column specs only: Spark's SPJ transform binding is
       // single-reference bucket() (see the partitioning() NOTE)
@@ -915,8 +956,7 @@ private[graft] class GraftNamedScan(path: String, tableSchema: StructType,
     * physical key set — an upper bound) but drop null counts. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     val entries = graft.sources.GraftBatchRead.keepByV1Filters(SparkSession.active,
-      StructType.fromDDL(manifest.schemaDdl),
-      exactEntries.getOrElse(GraftTable.filesOf(path, manifest)), pushed)
+      StructType.fromDDL(manifest.schemaDdl), this.entries, pushed)
     val (bytes, rows) = (entries.map(_.bytes).sum, entries.map(_.liveRows).sum)
     val anyDv = entries.exists(_.dv.isDefined)
     val anyRen = entries.exists(_.renames.exists(_.nonEmpty))
@@ -978,6 +1018,32 @@ private[graft] class GraftNamedScan(path: String, tableSchema: StructType,
       Option(options.get("consumerId")),
       Option(options.get("startingTimestamp")))
   }
+}
+
+private[graft] object GraftScanMetrics {
+  val FilesPlanned = "filesPlanned"
+  val FilesSkipped = "filesSkipped"
+  def value(n: String, v: Long)
+      : org.apache.spark.sql.connector.metric.CustomTaskMetric =
+    new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+      override def name(): String = n
+      override def value(): Long = v
+    }
+}
+
+/** `filesPlanned` on a graft `BatchScan` node (Spark instantiates the
+  * class by name to aggregate it, so it takes no arguments). */
+class GraftFilesPlannedMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = GraftScanMetrics.FilesPlanned
+  override def description(): String = "files planned"
+}
+
+/** `filesSkipped` on a graft `BatchScan` node. */
+class GraftFilesSkippedMetric
+    extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = GraftScanMetrics.FilesSkipped
+  override def description(): String = "files skipped by stats"
 }
 
 /** Batch writes as the REAL distributed DSv2 write

@@ -9,7 +9,7 @@ import java.util.zip.{Deflater, Inflater}
   * re-derived; reference analogue: the dbt incremental merge's
   * delete-averse posture, `models/dwh/dim_customer.sql:1-6`, which a
   * COW-only format punishes at scale). A DV is the sorted set of
-  * ROW POSITIONS (parquet `_metadata.row_index`) deleted from ONE
+  * ROW POSITIONS (the parquet row index) deleted from ONE
   * immutable data file; the file itself never rewrites. Deleting k
   * rows from a 1 GB file costs O(k) sidecar bytes instead of a 1 GB
   * rewrite — at 100 TB with GDPR point deletes, that is the whole

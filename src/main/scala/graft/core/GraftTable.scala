@@ -1726,120 +1726,32 @@ object GraftTable {
 
   // ---------------------------------------------------------------- reading
 
-  /** Read a subset of a manifest's files under its LOGICAL schema,
-    * applying each file's rename map (files grouped by identical map —
-    * parquet resolves columns by name, so one read + projection per
-    * group).
-    *
-    * The rename-free case (by far the common one) reads through the
-    * manifest-backed [[graft.sources.GraftFileIndex]] relation — the
-    * same vectorized scan a plain file read plans, but with the
-    * per-file stats/bloom skipping running inside `listFiles` against
-    * whatever filters Catalyst pushes down. Every Scala-API consumer
-    * (`read`/`readVersion`/`readAsOf`, the COW candidate scans, diffs,
-    * replicas) therefore gets automatic file skipping with no
-    * GraftPrune install and no explicit readPruned — the `format
-    * ("graft")` batch-source guarantee extended to the whole API. */
+  /** Read a subset of a manifest's files under its LOGICAL schema —
+    * the one batch read path of the format. Every Scala-API read
+    * (`read`/`readVersion`/`readAsOf`, `readPruned*`, the COW/MOR
+    * candidate scans, diffs, the `graft_table*` TVFs) and every
+    * `format("graft")` load is a DSv2 relation over
+    * [[graft.catalog.GraftNamedTable]] pinned to `m` and `subset`, and
+    * [[graft.sources.GraftBatch]] plans it: splits from the manifest,
+    * stats/bloom file skipping against whatever filters Catalyst pushes
+    * down, each file's rename map and deletion vector applied inside
+    * the reader factory, and the `_graft_file`/`_graft_pos` metadata
+    * columns (the file URI and row position the DML paths key on). */
   private[graft] def readFileSubset(spark: SparkSession, path: String, m: Manifest,
-      subset: Seq[FileEntry]): DataFrame = {
-    val logical = StructType.fromDDL(m.schemaDdl)
-    if (subset.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
-    // deletion-vectored entries read through the SAME vectorized scan
-    // plus a per-row position filter; everything else stays on the
-    // unfiltered fast path (the common case: a table with one dv'd file
-    // pays the probe only on that file's rows)
-    val (dvd, plain) = subset.partition(_.dv.isDefined)
-    val parts = Seq.newBuilder[DataFrame]
-    if (plain.nonEmpty) {
-      if (plain.forall(_.renames.forall(_.isEmpty)))
-        parts += graft.sources.GraftBatchRead.subsetDf(spark, path, m, plain, logical)
-      else parts ++= renameGroupReads(spark, path, plain, logical, dvFilter = None)
-    }
-    if (dvd.nonEmpty)
-      parts ++= renameGroupReads(spark, path, dvd, logical,
-        Some(dvLiveFilter(path, dvd,
-          col("_metadata.file_path"), col("_metadata.row_index"))))
-    parts.result().reduce(_ unionByName _)
-  }
+      subset: Seq[FileEntry]): DataFrame =
+    org.apache.spark.sql.graftbridge.ClassicBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.catalog.GraftNamedTable(s"graft.`$path`", path, pin = None,
+          Some(m), Some(subset)),
+        None, None, org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()))
 
   /** The scan-visible identity of a data file: its qualified URI,
-    * exactly as `_metadata.file_path` renders it — both the manifest
-    * FileIndex and plain `spark.read.parquet` qualify local paths
-    * through the same Hadoop `Path`, so this is the one stable join key
-    * between manifest entries and scanned rows. Keyed by FULL path (not
-    * basename): two entries with identical basenames — a shallow
-    * clone's absolute-path files next to local ones — must never apply
-    * one file's deletion vector to the other's rows. */
+    * exactly as the `_graft_file` metadata column renders it. Keyed by
+    * FULL path (not basename): two entries with identical basenames — a
+    * shallow clone's absolute-path files next to local ones — must never
+    * apply one file's deletion vector to the other's rows. */
   private def fileUri(path: String, fe: FileEntry): String =
     new org.apache.hadoop.fs.Path(new File(resolveData(path, fe)).toURI).toString
-
-  /** Normalize a scan-reported file string (`input_file_name()` /
-    * `_metadata.file_path`) to the same Hadoop-Path form as [[fileUri]],
-    * so per-file bookkeeping joins on identical full-URI keys. */
-  private def normScanUri(s: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s)
-    if (p.toUri.getScheme == null) new org.apache.hadoop.fs.Path(new File(s).toURI).toString
-    else p.toString
-  }
-
-  /** Internal column names the MOR DML projections append for row
-    * positions — guarded against collision at the operation entry. */
-  private val PosFileCol = "__gdv_file"
-  private val PosIdxCol = "__gdv_pos"
-
-  /** Per-rename-group reads of `entries` under the logical schema —
-    * optionally filtered by a deletion-vector liveness predicate, which
-    * must apply BEFORE the rename projection (it references the scan's
-    * hidden `_metadata` struct). Rename-free groups ride the manifest
-    * FileIndex (vectorized, stats-skipped); renamed groups read by
-    * physical schema and project. With `withPos` the output carries
-    * two extra columns ([[PosFileCol]], [[PosIdxCol]]) — the file
-    * basename and row position the MOR DML path keys its sidecars
-    * on. */
-  private def renameGroupReads(spark: SparkSession, path: String,
-      entries: Seq[FileEntry], logical: StructType,
-      dvFilter: Option[Column], withPos: Boolean = false): Seq[DataFrame] =
-    entries.groupBy(_.renames.getOrElse(Map.empty)).map { case (ren, fs) =>
-      val base =
-        if (ren.isEmpty)
-          graft.sources.GraftBatchRead.subsetDf(spark, path,
-            syntheticManifest(logical), fs, logical)
-        else spark.read.schema(StructType(logical.fields.map(f =>
-            f.copy(name = ren.getOrElse(f.name, f.name)))))
-          .parquet(fs.map(f => resolveData(path, f)): _*)
-      val filtered = dvFilter.map(base.filter).getOrElse(base)
-      if (ren.isEmpty && !withPos) filtered
-      else filtered.select(logical.fields.map(f =>
-        col(ren.getOrElse(f.name, f.name)).as(f.name)).toSeq ++
-        (if (withPos)
-          Seq(col("_metadata.file_path").as(PosFileCol),
-            col("_metadata.row_index").as(PosIdxCol))
-        else Nil): _*)
-    }.toSeq
-
-  /** The liveness predicate for dv'd entries: a row survives when its
-    * (file, position) is NOT in the file's deletion vector. Vectors
-    * load lazily per executor ([[DeletionVector.load]]'s cache) from a
-    * broadcast-small fileURI→sidecar map ([[fileUri]] — FULL qualified
-    * paths, so identical basenames across clone sources can never
-    * cross-apply); the probe is a binary search per row, paid only on
-    * dv'd files. `fCol`/`pCol` supply the scan's `_metadata.file_path`
-    * and `_metadata.row_index` (or already-projected copies). */
-  private def dvLiveFilter(path: String, dvd: Seq[FileEntry],
-      fCol: Column, pCol: Column): Column = {
-    val dvByFile: Map[String, String] = dvd.flatMap(fe =>
-      fe.dv.map(d => fileUri(path, fe) -> resolveDv(path, d))).toMap
-    import org.apache.spark.sql.graftbridge.ClassicBridge
-    ClassicBridge.column(graft.expressions.DvIsLive(
-      ClassicBridge.expr(fCol), ClassicBridge.expr(pCol), dvByFile))
-  }
-
-  /** [[renameGroupReads]] needs a manifest only for its schema DDL when
-    * routing a group through the FileIndex scan — synthesize one so the
-    * helper can serve arbitrary entry subsets of any snapshot. */
-  private def syntheticManifest(logical: StructType): Manifest =
-    Manifest(0L, 0L, "subset", logical.toDDL, Nil)
 
   /** The shared touched-file split every file-granular DML commit does:
     * partition the inline list, dissolve leaves holding a touched
@@ -2201,7 +2113,7 @@ object GraftTable {
   /** MERGE-ON-READ DELETE WHERE — same semantics as [[deleteWhere]]
     * (rows where `pred` is TRUE disappear; FALSE/NULL rows stay), a
     * different cost shape: NO data file is rewritten. Matching row
-    * POSITIONS (parquet `_metadata.row_index`) are found by the same
+    * POSITIONS (the scan's `_graft_pos` row index) are found by the same
     * stats-cover + exact-probe discovery, written as per-file
     * [[DeletionVector]] sidecars from the executors (one tiny encoded
     * file per touched data file, merged with any existing vector), and
@@ -2359,32 +2271,20 @@ object GraftTable {
     val cur = currentManifest(path).getOrElse(
       throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
     val logical = StructType.fromDDL(cur.schemaDdl)
-    val reserved = Seq("_metadata", PosFileCol, PosIdxCol)
-      .filter(logical.fieldNames.contains)
+    import graft.sources.GraftBatch.{FileMetaCol, MetaNames, PosMetaCol}
+    val reserved = logical.fieldNames.filter(MetaNames)
     require(reserved.isEmpty,
-      s"merge-on-read DML positions rows via the hidden _metadata struct and the " +
-        s"${PosFileCol}/${PosIdxCol} projections — a table with literal column(s) " +
-        s"${reserved.mkString(", ")} must use the copy-on-write ops")
+      s"merge-on-read DML positions rows by the $FileMetaCol/$PosMetaCol metadata " +
+        s"columns — a table with literal column(s) ${reserved.mkString(", ")} " +
+        "must use the copy-on-write ops")
     val (liveLeaves, cleanLeaves) = cur.leaves.getOrElse(Nil)
       .partition(l => mayMatch(l.stats, pruneRanges))
     val loaded = liveLeaves.map(l => l -> loadLeaf(path, l))
     val candidates = statsKeep(cur.files ++ loaded.flatMap(_._2), pruneRanges)
-    // the candidate live set (positions attached): empty-typed when no
-    // file can match, so MERGE's insert stage still sees the schema
-    val live =
-      if (candidates.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(logical.fields ++ Seq(
-            org.apache.spark.sql.types.StructField(PosFileCol, org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(PosIdxCol, org.apache.spark.sql.types.LongType))))
-      else {
-        val dvdC = candidates.filter(_.dv.isDefined)
-        val dvF = if (dvdC.isEmpty) None
-          else Some(dvLiveFilter(path, dvdC,
-            col("_metadata.file_path"), col("_metadata.row_index")))
-        renameGroupReads(spark, path, candidates, logical,
-          dvF, withPos = true).reduce(_ union _)
-      }
+    // the candidate live set, each row with its file URI and position
+    // (deleted rows are already masked by the scan)
+    val live = readFileSubset(spark, path, cur, candidates)
+      .select((logical.fieldNames.toSeq :+ FileMetaCol :+ PosMetaCol).map(col): _*)
     var matchedRows: DataFrame = null
     val matched: Map[String, (String, Long, Long)] = // fileUri -> (dv name, total, bytes)
       if (candidates.isEmpty) Map.empty
@@ -2398,7 +2298,7 @@ object GraftTable {
         // persist so the candidate scan runs once
         matchedRows = matcher(live)
         if (replace.isDefined) matchedRows.persist(): Unit
-        matchedRows.select(col(PosFileCol), col(PosIdxCol)).as[(String, Long)]
+        matchedRows.select(col(FileMetaCol), col(PosMetaCol)).as[(String, Long)]
           .groupByKey(_._1).mapGroups { (f, it) =>
             val fresh = it.map(_._2).toArray.distinct.sorted
             val merged = DeletionVector.union(
@@ -2424,8 +2324,8 @@ object GraftTable {
       val updatedEntries = touched.flatMap(updatedEntry(_))
       val images = replace match {
         case Some(f) if matched.nonEmpty =>
-          Some(f(matchedRows.drop(PosFileCol, PosIdxCol))
-            .drop(PosFileCol, PosIdxCol))
+          Some(f(matchedRows.drop(FileMetaCol, PosMetaCol))
+            .drop(FileMetaCol, PosMetaCol))
         case _ => None
       }
       val appended = extraAppend.map(_(live))
@@ -2479,7 +2379,7 @@ object GraftTable {
     val matchCounts: Map[String, Long] =
       if (candidates.isEmpty) Map.empty
       else fileRowCounts(readFileSubset(spark, path, cur, candidates)
-        .filter(pred).select(input_file_name()))
+        .filter(pred).select(col(graft.sources.GraftBatch.FileMetaCol)))
     def isTouched(fe: FileEntry) = matchCounts.contains(fileUri(path, fe))
     // every live row matches → nothing of this file survives the op
     def covered(fe: FileEntry) =
@@ -2718,17 +2618,17 @@ object GraftTable {
   }
 
   /** Rows per data file of `files` (one column: the scan's
-    * `input_file_name()`), keyed by [[normScanUri]]. Counted per
-    * partition and summed on the driver — one job, no shuffle; a file
-    * split across partitions sums exactly. */
-  private def fileRowCounts(files: DataFrame): Map[String, Long] = {
+    * `_graft_file`, the [[fileUri]] form). Counted per partition and
+    * summed on the driver — one job, no shuffle; a file split across
+    * partitions sums exactly. */
+  private[graft] def fileRowCounts(files: DataFrame): Map[String, Long] = {
     val spark = files.sparkSession
     import spark.implicits._
     files.as[String].mapPartitions { it =>
       val n = scala.collection.mutable.HashMap.empty[String, Long]
       it.foreach(f => n(f) = n.getOrElse(f, 0L) + 1L)
       n.iterator
-    }.collect().toSeq.groupMapReduce(fc => normScanUri(fc._1))(_._2)(_ + _)
+    }.collect().toSeq.groupMapReduce(_._1)(_._2)(_ + _)
   }
 
   /** The keyed-COW core: drop every row of the table whose key tuple
@@ -2793,14 +2693,15 @@ object GraftTable {
       val (hitFiles, misses): (DataFrame => DataFrame, DataFrame => DataFrame) = tuples match {
         case Some(ts) =>
           val member = memberOf(keys, schema, ts)
-          (_.filter(member).select(input_file_name()),
+          (_.filter(member).select(col(graft.sources.GraftBatch.FileMetaCol)),
             _.filter(!coalesce(member, lit(false))))
         case None =>
           // key columns renamed on the probe side: a self-derived frame
           // joined on same-name columns would resolve ambiguously
           val deltaKeys = d.select(keys.map(k => col(k).as(s"__dk_$k")): _*).distinct()
           val keyCond = keys.map(k => col(k) <=> col(s"__dk_$k")).reduce(_ && _)
-          (_.select((keys.map(col) :+ input_file_name().as("__f")): _*)
+          (_.select((keys.map(col) :+
+              col(graft.sources.GraftBatch.FileMetaCol).as("__f")): _*)
             .join(deltaKeys, keyCond, "left_semi").select(col("__f")),
             _.join(deltaKeys, keyCond, "left_anti"))
       }
@@ -3006,7 +2907,7 @@ object GraftTable {
   /** Backfill per-file stats (and bloom filters, for `bloomCols`) onto
     * the CURRENT snapshot WITHOUT rewriting any data — ANALYZE, the
     * post-hoc half of the stats story: file skipping ([[readPruned]],
-    * [[readPrunedIn]], the `format("graft")` FileIndex) becomes
+    * [[readPrunedIn]], the GraftBatch scan's split planning) becomes
     * available on columns nobody indexed at write time. Scan cost is
     * one columnar read of ONLY the listed columns over ONLY the files
     * that lack them — a re-run after appends scans just the new files,

@@ -78,9 +78,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // the non-file direct-query identifier before any injected
     // resolution rule could claim it)
     e.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
-    // catalog-table reads plan through the vectorized manifest FileIndex
-    // instead of the V1Scan row fallback (see GraftCatalogScanRule)
-    e.injectResolutionRule(s => graft.catalog.GraftCatalogScanRule(s))
   }
 }
 

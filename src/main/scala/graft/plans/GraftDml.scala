@@ -8,11 +8,9 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.graftbridge.ClassicBridge
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.lit
 
 import graft.core.GraftTable
-import graft.sources.{GraftFileIndex, GraftProjectedRelation}
 
 /** SQL TEXT for the write path — `MERGE INTO` / `DELETE FROM` / `UPDATE`
   * over `graft.`/path`` targets routed to the existing COW operators
@@ -239,18 +237,26 @@ object GraftDml extends PredicateHelper {
 
   /** The stats-cover ranges implied by the DML predicate: resolve it
     * against the table's frame and reuse the optimizer rule's extractor
-    * over the OPTIMIZED filter (casts folded, literals normalized). */
+    * over the OPTIMIZED filter (casts folded, literals normalized), plus
+    * the filters pushed into the scan (an exact-prune claim removes the
+    * Filter node and leaves them only there). */
   private[plans] def pruneRangesOf(spark: SparkSession, path: String,
       pred: Column): Seq[GraftTable.ColRange] =
     try GraftTable.read(spark, path).filter(pred).queryExecution.optimizedPlan
-      .collect { case f: Filter => GraftPrune.extractRanges(f.condition) }.flatten
+      .collect {
+        case f: Filter => GraftPrune.extractRanges(f.condition)
+        case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          s.scan match {
+            case g: graft.catalog.GraftNamedScan =>
+              g.pushed.toSeq.flatMap(graft.sources.GraftBatchRead.v1Ranges)
+            case _ => Nil
+          }
+      }.flatten
     catch { case scala.util.control.NonFatal(_) => Nil }
 }
 
 /** Matches a DML target that is a graft table: the unresolved
-  * `graft.`/path`` identifier (relation or ALTER-command form), or the
-  * already-resolved batch relation (ResolveSQLOnFile may run before
-  * injected rules). */
+  * `graft.`/path`` identifier (relation or ALTER-command form). */
 private[plans] object GraftTarget {
   /** A ≥3-part `graft.ns….table` identifier resolved through the
     * [[graft.catalog.GraftCatalog]] warehouse mapping (namespace chain =
@@ -289,14 +295,6 @@ private[plans] object GraftTarget {
     case u: org.apache.spark.sql.catalyst.analysis.UnresolvedTableOrView
         if namedPath(u.multipartIdentifier).isDefined =>
       namedPath(u.multipartIdentifier).map((_, None))
-    case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation => fs.location match {
-        case gi: GraftFileIndex => Some((gi.tableRoot, None))
-        case _ => None
-      }
-      case gp: GraftProjectedRelation => Some((gp.tablePath, None))
-      case _ => None
-    }
     case _ => None
   }
 }

@@ -12,27 +12,21 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
 import graft.core.GraftTable
 import graft.core.GraftTable.ColRange
 
-/** TRANSPARENT manifest-stats file skipping as a Catalyst optimizer rule:
-  * any `Filter` directly over a parquet scan whose files live in a
-  * GraftTable's `data/` directory gets its file list narrowed to the
-  * files whose per-file stats can satisfy the predicate — without the
-  * caller ever asking ([[GraftTable.readPruned]]/[[GraftTable.readPrunedIn]]
-  * are the explicit spellings of the same skips). Range conjuncts probe
-  * [min,max]; `IN`/`===` conjuncts additionally probe the per-file
-  * BLOOM filters when the write listed the column in `bloomCols` — on a
-  * hash-distributed layout, where every file spans the full key range,
-  * the bloom does all the skipping. The filter itself stays in the
-  * plan, so the rewrite is purely a file-set refinement: Spark plans
-  * fewer scan tasks, reads fewer footers, and the residual predicate
-  * still runs exactly.
-  *
-  * Why an optimizer rule and not a data source: the scan is already a
-  * plain V1 parquet relation with an EXPLICIT file list (how every
-  * GraftTable read is built), so skipping is just swapping that list —
-  * no custom readers, no new physical operators, and every downstream
-  * Spark optimization (pushdown into row groups, vectorized read,
-  * whole-stage codegen) is untouched. This is the smallest Catalyst
-  * surface that buys Delta-style planning-time skipping.
+/** The graft optimizer rules. Every GraftTable read is a DSv2 relation
+  * whose [[graft.sources.GraftBatch]] scan already skips files by
+  * manifest stats and blooms against the pushed filters, so the rules
+  * cover only what that pushdown cannot express:
+  *  - manifest-answered aggregates ([[GraftPrune.rewriteMetaAgg]],
+  *    [[GraftPrune.rewriteFilteredCount]],
+  *    [[GraftPrune.rewriteGroupedMetaAgg]]) — grouped, filtered and
+  *    `date_trunc` folds over the v2 relation's pinned entries;
+  *  - file skipping for a PLAIN parquet read of a GraftTable's `data/`
+  *    directory (`spark.read.parquet` over the files, bypassing the
+  *    manifest): a `Filter` directly over that scan gets its file list
+  *    narrowed to the files whose per-file stats can satisfy the
+  *    predicate. Range conjuncts probe [min,max]; `IN`/`===` conjuncts
+  *    additionally probe the per-file BLOOM filters. The filter itself
+  *    stays in the plan, so the rewrite is purely a file-set refinement.
   *
   * Safety:
   *  - only ranges PROVABLY empty on a file's stats are dropped (the
@@ -42,9 +36,9 @@ import graft.core.GraftTable.ColRange
   *  - stats are matched per FILE basename against every retained
   *    manifest (files are immutable), so version reads and already-
   *    pruned subsets skip correctly too;
-  *  - anything unexpected (non-Graft dirs, renamed-projection plans,
-  *    exotic predicates, missing stats) degrades to a no-op, never an
-  *    error — the rule can only remove provably-dead IO.
+  *  - anything unexpected (non-Graft dirs, exotic predicates, missing
+  *    stats) degrades to a no-op, never an error — the rule can only
+  *    remove provably-dead IO.
   *
   * Install per session with [[GraftPrune.install]] (idempotent; uses
   * `spark.experimental.extraOptimizations`), or globally via
@@ -53,8 +47,8 @@ case class GraftPrune(spark: SparkSession) extends Rule[LogicalPlan] with Predic
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // operational kill switch (Delta-style rule toggle): with the rule
-    // off, plans fall back to the scan-level machinery — v2 pushdown,
-    // manifest FileIndex — which must answer identically
+    // off, plans fall back to the scan-level machinery — v2 pushdown
+    // into GraftBatch — which must answer identically
     if (!GraftRules.enabled(spark)) return plan
     applyRules(plan)
   }
@@ -76,10 +70,6 @@ case class GraftPrune(spark: SparkSession) extends Rule[LogicalPlan] with Predic
       case r: HadoopFsRelation => r
       case _ => return f
     }
-    // a format("graft") batch relation already prunes inside its own
-    // manifest-backed FileIndex listing — replacing it with a static
-    // pruned list would be redundant work, not a better plan
-    if (fs.location.isInstanceOf[graft.sources.GraftFileIndex]) return f
     val files = fs.location.inputFiles
     if (files.isEmpty) return f
     val dirs = files.map(p => new File(stripScheme(p)).getParentFile).distinct
@@ -117,7 +107,7 @@ case class GraftPrune(spark: SparkSession) extends Rule[LogicalPlan] with Predic
 
 /** Session-conf kill switch for the injected optimizer rules —
   * `spark.graft.rules.enabled=false` turns them off (default on). The
-  * scan-level machinery (DSv2 pushdown, manifest FileIndex) answers
+  * scan-level machinery (DSv2 pushdown into GraftBatch) answers
   * identically without them; the switch exists for operational
   * isolation and for proving the extension-free paths in sessions whose
   * context was built with `spark.sql.extensions` (context-wide — a
@@ -142,8 +132,9 @@ object GraftPrune extends PredicateHelper {
     * inclusive [[ColRange]]s; everything else contributes nothing (the
     * residual filter keeps exactness). NULL literals yield no range —
     * a NULL comparison matches no row, but proving THAT is the
-    * filter's job, not the skipper's. Shared by the optimizer rule and
-    * the `format("graft")` batch [[graft.sources.GraftFileIndex]]. */
+    * filter's job, not the skipper's. Shared by the plain-parquet
+    * file-skipping rule and the SQL DML stats cover
+    * ([[GraftDml.pruneRangesOf]]). */
   private[graft] def extractRanges(cond: Expression): Seq[ColRange] =
     splitConjunctivePredicates(cond).flatMap {
       case GreaterThan(a: AttributeReference, l: Literal) => range(a, lo = Some(l))
@@ -205,11 +196,10 @@ object GraftPrune extends PredicateHelper {
 
   /** ANSWER groupless `count(*) / count(col) / min(col) / max(col)`
     * FROM THE MANIFEST — zero file IO (Delta/Iceberg's metadata-query
-    * trick, re-derived as a logical rewrite): a scan pinning a manifest
-    * — a [[graft.sources.GraftFileIndex]] relation, or a catalog-NAMED
-    * [[graft.catalog.GraftNamedTable]] v2 relation — folds the
-    * aggregate over manifest entries on the driver and the whole
-    * subtree collapses to a [[LocalRelation]]. At 100 TB,
+    * trick, re-derived as a logical rewrite): a v2 relation over a
+    * [[graft.catalog.GraftNamedTable]] pins a manifest and an entry
+    * set, the aggregate folds over those entries on the driver, and the
+    * whole subtree collapses to a [[LocalRelation]]. At 100 TB,
     * `SELECT count(*) FROM t` is one manifest read instead of a
     * million-file scan.
     *
@@ -1088,36 +1078,28 @@ object GraftPrune extends PredicateHelper {
     Some(Project(projected, local))
   }
 
-  private def graftEntries(lr: LogicalRelation)
-      : Option[Seq[graft.core.GraftTable.FileEntry]] = lr.relation match {
-    case fs: HadoopFsRelation => fs.location match {
-      case gi: graft.sources.GraftFileIndex => Some(gi.pinnedEntries)
-      case _ => None
-    }
-    case _ => None
-  }
-
-  /** Manifest entries behind a plan leaf that pins one: the
-    * format("graft")/Scala-API [[LogicalRelation]] shape, or a
-    * catalog-NAMED [[org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation]]
-    * over a [[graft.catalog.GraftNamedTable]] (the optimizer sees the
-    * pre-pushdown v2 relation — extension optimizer rules run before
-    * V2ScanRelationPushDown). */
+  /** Manifest entries behind a plan leaf that pins one: a v2 relation
+    * over a [[graft.catalog.GraftNamedTable]] — a catalog name, a
+    * `format("graft")` load or a Scala-API read, with its entry subset.
+    * Extension-injected rules see the relation before
+    * V2ScanRelationPushDown; [[install]]ed ones run after it and see the
+    * pushed-down scan, whose entries are the exact-prune claim's inside
+    * set when a claim removed the Filter node. */
   private def planEntries(p: LogicalPlan)
-      : Option[Seq[graft.core.GraftTable.FileEntry]] = p match {
-    case lr: LogicalRelation => graftEntries(lr)
-    case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-      r.table match {
-        case t: graft.catalog.GraftNamedTable =>
-          try {
-            val m = t.pin.map(GraftTable.manifestAt(t.path, _))
-              .orElse(GraftTable.currentManifest(t.path)).getOrElse(return None)
-            Some(GraftTable.filesOf(t.path, m))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        case _ => None
-      }
-    case _ => None
-  }
+      : Option[Seq[graft.core.GraftTable.FileEntry]] =
+    try p match {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        r.table match {
+          case t: graft.catalog.GraftNamedTable => Some(t.entries)
+          case _ => None
+        }
+      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        s.scan match {
+          case g: graft.catalog.GraftNamedScan => Some(g.entries)
+          case _ => None
+        }
+      case _ => None
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Encoded stats string → the column type's INTERNAL Catalyst value
     * (dates as epoch-day Int, timestamps as micros Long, strings as

@@ -1,12 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And => CatalystAnd, Expression}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
@@ -14,12 +8,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.GraftTable
 import graft.core.GraftTable.{ColRange, FileEntry, Manifest}
-import graft.plans.GraftPrune
 
 /** BATCH READ of a GraftTable via `format("graft")` — the batch half of
   * the DataSource registration ([[GraftStreamSource]] carries the
-  * streaming half; this object builds the relation its
-  * `RelationProvider` fallback returns):
+  * streaming half and advertises `BATCH_READ`):
   *
   * {{{
   *   spark.read.format("graft").load(path)                        // head snapshot
@@ -27,28 +19,23 @@ import graft.plans.GraftPrune
   *   spark.read.format("graft").option("timestampAsOf", "2026-01-01 00:00:00").load(path)
   * }}}
   *
-  * The scale story — what subsumes the explicit [[GraftPrune.install]]
-  * opt-in: the relation is a plain vectorized parquet
-  * [[HadoopFsRelation]] whose [[FileIndex]] is the MANIFEST
-  * ([[GraftFileIndex]]). Spark's file-source planner hands the pushed
-  * data filters to `FileIndex.listFiles` at planning time, where the
-  * per-file [min,max,nulls] stats and bloom filters prove files clean
-  * BEFORE any task is planned — stats/bloom file-skipping happens for
-  * every consumer (SQL, DataFrame, TVF-over-this) with no rule install
-  * and no API opt-in, exactly Delta's `TahoeFileIndex` shape
-  * re-derived. Everything downstream is stock Spark: row-group
-  * pushdown, vectorized decode, whole-stage codegen. No directory
-  * listing ever happens (the manifest IS the listing — on an object
-  * store at 100 TB that is the difference between one metadata read
-  * and a million S3 LISTs).
+  * The scale story: a load pins ONE manifest ([[resolveManifest]]) and
+  * reads it exactly as the Scala API does — a DSv2 relation whose scan
+  * is [[GraftBatch]] ([[GraftTable.readFileSubset]]). Catalyst pushes
+  * the query's filters into the scan builder, and the per-file
+  * [min,max,nulls] stats and bloom filters prove files clean BEFORE any
+  * task is planned — stats/bloom file-skipping happens for every
+  * consumer (SQL, DataFrame, TVF-over-this) with no rule install and
+  * no API opt-in, Delta's `TahoeFileIndex` shape re-derived. Renamed
+  * and deletion-vectored files decode inside the reader factory under
+  * Spark's own vectorized parquet readers, so one dirty file never
+  * changes how the clean ones read. No directory listing ever happens
+  * (the manifest IS the listing — on an object store at 100 TB that is
+  * the difference between one metadata read and a million S3 LISTs).
   *
-  * Tables whose live files carry rename maps (post-[[GraftTable.renameColumn]]
-  * layouts or widened histories with guaranteed-absent indirections)
-  * can't be served as one by-name parquet scan; they fall back to
-  * [[GraftProjectedRelation]], which keeps stats skipping and filter
-  * pushdown but routes rows through the per-rename-group projections
-  * of [[GraftTable.readFileSubset]] (correctness first; compaction
-  * retires the indirection and restores the fast path).
+  * This object keeps the option resolution and the `sources.Filter`
+  * translators the scan builder, `SupportsDelete` and the split planner
+  * consume.
   *
   * Reference analogue: the dialect-native table access every model
   * uses (`models/intermediate/stg_dim_customer.sql:71`) — reading a
@@ -79,41 +66,10 @@ object GraftBatchRead {
     }
   }
 
-  def relation(spark: SparkSession, path: String, m: Manifest): BaseRelation = {
-    val entries = GraftTable.filesOf(path, m)
-    val logical = StructType.fromDDL(m.schemaDdl)
-    // deletion-vectored entries need the per-row liveness filter of
-    // [[GraftTable.readFileSubset]] — same correctness-first fallback
-    // as renames (purge/compaction retires both and restores this path)
-    if (entries.forall(e => e.renames.forall(_.isEmpty) && e.dv.isEmpty))
-      fsRelation(spark, path, m, entries, logical)
-    else new GraftProjectedRelation(spark, path, m, entries, logical)
-  }
-
-  private def fsRelation(spark: SparkSession, path: String, m: Manifest,
-      entries: Seq[FileEntry], logical: StructType): HadoopFsRelation =
-    HadoopFsRelation(
-      location = new GraftFileIndex(spark, path, m, entries),
-      partitionSchema = new StructType(),
-      dataSchema = logical,
-      bucketSpec = None,
-      fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark)
-
-  /** The manifest-FileIndex scan as a DataFrame over an explicit entry
-    * subset — what [[GraftTable.readFileSubset]] routes rename-free
-    * reads through, making stats/bloom file-skipping automatic for the
-    * whole Scala API (not just `format("graft")` consumers). */
-  private[graft] def subsetDf(spark: SparkSession, path: String, m: Manifest,
-      entries: Seq[FileEntry], logical: StructType): DataFrame =
-    spark.baseRelationToDataFrame(fsRelation(spark, path, m, entries, logical))
-
-  /** Conservative V1-filter → Column translation (shared by the
-    * projected-relation fallback and the catalog's V1Scan fallback) so
-    * the exact predicate reaches the inner parquet scans (manifest
-    * file-skipping + row-group pushdown); untranslatable shapes return
-    * None and the caller drops them — Spark re-applies every filter
-    * post-scan, so dropping is only ever a missed prune. */
+  /** Conservative V1-filter → Column translation — what the catalog's
+    * `SupportsDelete` turns pushed DELETE filters into; untranslatable
+    * shapes return None and [[graft.catalog.GraftNamedTable.canDeleteWhere]]
+    * refuses them. */
   private[graft] def v1FilterToColumn(f: Filter): Option[Column] = f match {
     case EqualTo(a, v) => Some(col(a) === lit(v))
     case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
@@ -131,11 +87,13 @@ object GraftBatchRead {
     case _ => None
   }
 
-  /** The manifest-stats keep test over pushed V1 filters — the same
-    * ranges + bloom-point probing as [[keepByStats]], fed from the
-    * `sources.Filter` shapes a ScanBuilder receives. Conservative:
-    * anything unexpected keeps everything. Shared by the rename-aware
-    * V1 fallback and the DSv2 [[GraftBatch]] split planner. */
+  /** The manifest-stats keep test over pushed V1 filters — ranges
+    * probe [min,max], point probes additionally hit the blooms (one
+    * lazy probe-hash job per IN column, paid only when some file
+    * actually carries a bloom), fed from the `sources.Filter` shapes a
+    * ScanBuilder receives. Conservative: anything unexpected keeps
+    * everything (stats only ever PRUNE). Used by the [[GraftBatch]]
+    * split planner and the scan's statistics. */
   private[graft] def keepByV1Filters(spark: SparkSession,
       logical: StructType, entries: Seq[FileEntry],
       filters: Array[Filter]): Seq[FileEntry] = {
@@ -172,105 +130,5 @@ object GraftBatchRead {
       if (nn.isEmpty) Nil else Seq(a -> nn)
     case And(l, r) => v1Points(logical, l) ++ v1Points(logical, r)
     case _ => Nil
-  }
-
-  /** The manifest-stats keep test over catalyst data filters — ranges
-    * probe [min,max], point probes additionally hit the blooms (one
-    * lazy probe-hash job per IN column, paid only when some file
-    * actually carries a bloom). Throws nothing: any unexpected shape
-    * degrades to keep-everything (stats only ever PRUNE). */
-  private[sources] def keepByStats(spark: SparkSession, logical: StructType,
-      entries: Seq[FileEntry], dataFilters: Seq[Expression]): Seq[FileEntry] = {
-    if (dataFilters.isEmpty || entries.isEmpty) return entries
-    try {
-      val cond = dataFilters.reduce(CatalystAnd(_, _))
-      val ranges = GraftPrune.extractRanges(cond)
-      val points = GraftPrune.extractPoints(cond)
-      if (ranges.isEmpty && points.isEmpty) return entries
-      val hashCache = scala.collection.mutable.HashMap.empty[String, Any => Seq[Long]]
-      def hashesFor(p: GraftPrune.PointProbe): Any => Seq[Long] =
-        hashCache.getOrElseUpdate(p.col, {
-          lazy val m = GraftTable.probeHashes(spark, p.dt, p.values, GraftTable.BloomK)
-          v => m(v)
-        })
-      entries.filter(fe => GraftTable.mayMatch(fe.stats, ranges) &&
-        points.forall(pt => GraftTable.mayContainIn(fe.stats, pt.col, pt.values, hashesFor(pt))))
-    } catch { case scala.util.control.NonFatal(_) => entries }
-  }
-}
-
-/** The manifest AS a Spark [[FileIndex]]: `listFiles` never lists a
-  * directory — the pinned manifest's entries are the file set, and the
-  * pushed data filters narrow it through the per-file stats/blooms at
-  * planning time. File sizes come from the manifest too, so split
-  * planning (`maxPartitionBytes` packing) costs zero filesystem calls. */
-private[graft] class GraftFileIndex(spark: SparkSession, root: String,
-    m: Manifest, entries: Seq[FileEntry]) extends FileIndex {
-
-  /** The GraftTable root this index serves — how the SQL DML rule
-    * recovers the write target from a resolved batch relation. */
-  private[graft] def tableRoot: String = root
-
-  /** The pinned entry set — [[graft.plans.GraftPrune]]'s metadata-
-    * aggregate rewrite answers count/min/max from these. An fsRelation
-    * is only ever built over dv-free, rename-free entries
-    * ([[GraftBatchRead.relation]]), so rows and stats here are EXACT. */
-  private[graft] def pinnedEntries: Seq[FileEntry] = entries
-
-  private val logical = StructType.fromDDL(m.schemaDdl)
-  private val withStatus: Seq[(FileEntry, FileStatus)] = entries.map { fe =>
-    fe -> new FileStatus(fe.bytes, false, 1, 128L << 20, m.tsUs / 1000L,
-      new HPath(new java.io.File(GraftTable.resolveData(root, fe)).toURI))
-  }
-
-  override def rootPaths: Seq[HPath] = Seq(new HPath(new java.io.File(root).toURI))
-  override def partitionSchema: StructType = new StructType()
-  override def inputFiles: Array[String] = withStatus.map(_._2.getPath.toString).toArray
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = entries.map(_.bytes).sum
-
-  override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val keep = GraftBatchRead.keepByStats(spark, logical, entries, dataFilters)
-      .map(_.path).toSet
-    Seq(PartitionDirectory(InternalRow.empty,
-      withStatus.collect { case (fe, st) if keep(fe.path) => st }.toArray[FileStatus]))
-  }
-}
-
-/** The rename-aware fallback relation: correctness over vectorization
-  * for layouts where live files carry logical→physical rename maps.
-  * Still prunes files by stats/bloom from the pushed V1 filters and
-  * pushes the translatable ones into the inner per-group parquet scans
-  * (row-group pushdown survives); Spark re-applies every filter
-  * post-scan ([[unhandledFilters]] default), so the translation only
-  * ever has to be conservative. */
-private[graft] class GraftProjectedRelation(spark: SparkSession, path: String,
-    m: Manifest, entries: Seq[FileEntry], logical: StructType)
-    extends BaseRelation with PrunedFilteredScan {
-
-  /** See [[GraftFileIndex.tableRoot]]. */
-  private[graft] def tablePath: String = path
-  /** The pinned snapshot — how [[graft.catalog.GraftCatalogScanRule]]
-    * rebuilds this relation as the per-file-split vectorized plan in
-    * extension sessions (one dirty file must not row-convert the clean
-    * ones). */
-  private[graft] def pinnedManifest: Manifest = m
-  private[graft] def pinnedEntries: Seq[FileEntry] = entries
-
-  override def sqlContext: SQLContext = spark.sqlContext
-  override def schema: StructType = logical
-  override def needConversion: Boolean = true
-  override def sizeInBytes: Long = entries.map(_.bytes).sum
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    val kept = GraftBatchRead.keepByV1Filters(spark, logical, entries, filters)
-    val base = GraftTable.readFileSubset(spark, path, m, kept)
-    val filtered = filters.flatMap(GraftBatchRead.v1FilterToColumn).foldLeft(base)(_ filter _)
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.map(col).toIndexedSeq: _*)
-    projected.rdd
   }
 }

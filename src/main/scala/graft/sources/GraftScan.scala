@@ -65,7 +65,8 @@ import graft.core.GraftTable.{FileEntry, Manifest}
 private[graft] class GraftBatch(spark: SparkSession, path: String, m: Manifest,
     logical: StructType, required: StructType, pushed: Array[Filter],
     limitHint: Option[Int] = None,
-    entriesOverride: Option[Seq[FileEntry]] = None)
+    entriesOverride: Option[Seq[FileEntry]] = None,
+    @transient onPlanned: GraftBatch => Unit = _ => ())
     extends Batch with Serializable {
 
   import GraftBatch._
@@ -105,18 +106,20 @@ private[graft] class GraftBatch(spark: SparkSession, path: String, m: Manifest,
     else Some(sets.flatten.reduce(_ intersect _))
   }
 
-  /** Manifest entries surviving the pushed-filter stats/bloom prune —
-    * the same conservative keep test the V1 relations run — and, when
-    * a runtime file-set filter arrived, the file-identity intersect.
-    * An `entriesOverride` (the scan builder's exact-prune claim — the
-    * provably-inside subset the claimed filters reduce to) REPLACES
-    * the manifest listing as the base: with the residual Filter node
-    * gone, planning exactly those files IS the filter, and the
-    * conservative keep test on top can only drop provably-excluded
-    * files (runtime DPP sets), never add one back. */
+  /** The files the scan may plan: an `entriesOverride` — the scan
+    * builder's exact-prune claim (the provably-inside subset the claimed
+    * filters reduce to: with the residual Filter node gone, planning
+    * exactly those files IS the filter) or the caller's entry subset
+    * ([[GraftTable.readFileSubset]]) — else the whole manifest. */
+  @transient private lazy val base: Seq[FileEntry] =
+    entriesOverride.getOrElse(GraftTable.filesOf(path, m))
+
+  /** Base entries surviving the pushed-filter stats/bloom prune (a
+    * conservative keep test: it can only drop provably-excluded files,
+    * never add one back) and, when a runtime file-set filter arrived,
+    * the file-identity intersect. */
   @transient private[graft] lazy val kept: Seq[FileEntry] = {
-    val statKept = GraftBatchRead.keepByV1Filters(spark, logical,
-      entriesOverride.getOrElse(GraftTable.filesOf(path, m)), dataFilters)
+    val statKept = GraftBatchRead.keepByV1Filters(spark, logical, base, dataFilters)
     keepUris match {
       case Some(set) => statKept.filter(fe =>
         set(new HPath(new File(GraftTable.resolveData(path, fe)).toURI).toString))
@@ -152,7 +155,20 @@ private[graft] class GraftBatch(spark: SparkSession, path: String, m: Manifest,
   private[graft] lazy val bucketPartitionCount: Int =
     kept.filter(_.rows > 0).flatMap(fileBucket).distinct.size
 
+  /** Files [[planInputPartitions]] planned, and files the pushed and
+    * runtime filters skipped — the scan's driver metrics, handed to
+    * `onPlanned` once planning is done. */
+  @transient @volatile private[graft] var filesPlanned: Long = 0L
+  private[graft] def filesSkipped: Long = (base.size - kept.size).toLong
+
   override def planInputPartitions(): Array[InputPartition] = {
+    val parts = plan()
+    onPlanned(this)
+    parts
+  }
+
+  private def plan(): Array[InputPartition] = {
+    filesPlanned = 0L
     if (kept.isEmpty) return Array.empty
     val maxSplit = FilePartition.maxSplitBytes(spark,
       Seq(PartitionDirectory(InternalRow.empty, statuses.map(_._2).toArray[FileStatus])))
@@ -164,7 +180,9 @@ private[graft] class GraftBatch(spark: SparkSession, path: String, m: Manifest,
       // task per bucket (Spark's groupPartitions handles duplicate
       // keys; Iceberg plans the same shape)
       var idx = -1
-      return statuses.filter(_._1.rows > 0)
+      val live = statuses.filter(_._1.rows > 0)
+      filesPlanned = live.size.toLong
+      return live
         .groupBy { case (fe, _) => fileBucket(fe).get }
         .toSeq.sortBy(_._1).flatMap { case (b, sts) =>
           val split = sts.flatMap { case (_, st) =>
@@ -197,6 +215,7 @@ private[graft] class GraftBatch(spark: SparkSession, path: String, m: Manifest,
         b.result()
       case None => statuses
     }
+    filesPlanned = wanted.size.toLong
     val files = wanted.flatMap { case (_, st) =>
       PartitionedFileUtil.splitFiles(FileStatusWithMetadata(st, Map.empty),
         st.getPath, isSplitable = true, maxSplit, InternalRow.empty)

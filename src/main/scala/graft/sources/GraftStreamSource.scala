@@ -85,7 +85,6 @@ import graft.core.GraftTable
   * nothing else, forever. Flat schemas only (the warehouse/CDC grain);
   * nested columns refuse loudly. */
 class GraftStreamSource extends TableProvider with DataSourceRegister
-    with org.apache.spark.sql.sources.RelationProvider
     with org.apache.spark.sql.sources.CreatableRelationProvider
     with org.apache.spark.sql.sources.StreamSinkProvider {
   override def shortName(): String = "graft"
@@ -98,23 +97,6 @@ class GraftStreamSource extends TableProvider with DataSourceRegister
 
   private def csv(options: CaseInsensitiveStringMap, k: String): Seq[String] =
     Option(options.get(k)).toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-
-  /** BATCH read path: the streaming table advertises only
-    * MICRO_BATCH_READ, so `spark.read.format("graft")` falls back to
-    * this V1 relation — a vectorized parquet scan whose FileIndex IS
-    * the manifest, with stats/bloom file-skipping inside `listFiles`
-    * (see [[GraftBatchRead]]). `versionAsOf` / `timestampAsOf` pin a
-    * snapshot. */
-  override def createRelation(sqlContext: org.apache.spark.sql.SQLContext,
-      parameters: Map[String, String]): org.apache.spark.sql.sources.BaseRelation = {
-    val options = new CaseInsensitiveStringMap(parameters.asJava)
-    val path = pathOf(options)
-    require(!options.getBoolean("readChangeFeed", false),
-      "readChangeFeed is a streaming option — for batch change reads use " +
-        "GraftTable.diffVersions or the graft_table_changes TVF")
-    GraftBatchRead.relation(sqlContext.sparkSession, path,
-      GraftBatchRead.resolveManifest(path, options))
-  }
 
   /** BATCH write path: `df.write.format("graft").mode(…).save(path)` —
     * the write half of the Spark-native idiom, routed through the
@@ -139,7 +121,13 @@ class GraftStreamSource extends TableProvider with DataSourceRegister
       case SaveMode.Ignore if exists => ()
       case _ => GraftTable.overwrite(data, path, statsCols, bloomCols)
     }
-    createRelation(sqlContext, parameters)
+    // Spark only re-caches plans over the returned relation; reads go
+    // through the table's BATCH_READ
+    val ctx = sqlContext
+    new org.apache.spark.sql.sources.BaseRelation {
+      override def sqlContext: org.apache.spark.sql.SQLContext = ctx
+      override def schema: StructType = data.schema
+    }
   }
 
   /** STREAMING write path: `df.writeStream.format("graft")` — an
@@ -176,7 +164,7 @@ class GraftStreamSource extends TableProvider with DataSourceRegister
       // Spark's writer probes the V2 table (and so this schema) BEFORE
       // deciding to fall back to the V1 CreatableRelationProvider — a
       // first write to a fresh path must not die here. Reads of a
-      // missing table still fail loudly in the relation/stream.
+      // missing table still fail loudly in the scan.
       case None => new StructType()
       case Some(m) =>
         val base = StructType.fromDDL(m.schemaDdl)
@@ -186,10 +174,24 @@ class GraftStreamSource extends TableProvider with DataSourceRegister
     }
   }
 
+  /** An existing table's plain reads are [[graft.catalog.GraftNamedTable]]
+    * over the snapshot pinned HERE, at `load()` — `versionAsOf`/
+    * `timestampAsOf` or the head ([[GraftBatchRead]]): the same
+    * [[GraftBatch]] scan as the Scala API and catalog names, whose scan
+    * also serves plain micro-batch streams. Change-feed streams, and any
+    * read of a missing table, take [[GraftStreamTable]]. Neither
+    * advertises batch writes, so `df.write` falls back to
+    * `CreatableRelationProvider`. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: JMap[String, String]): Table =
-    new GraftStreamTable(properties.get("path"), schema,
-      new CaseInsensitiveStringMap(properties).getBoolean("readChangeFeed", false))
+      properties: JMap[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    val path = pathOf(options)
+    val cdf = options.getBoolean("readChangeFeed", false)
+    if (!cdf && GraftTable.exists(path))
+      new graft.catalog.GraftNamedTable(s"graft.`$path`", path, pin = None,
+        Some(GraftBatchRead.resolveManifest(path, options)))
+    else new GraftStreamTable(path, schema, cdf)
+  }
 
   override def supportsExternalMetadata(): Boolean = false
 }
@@ -207,12 +209,14 @@ private[sources] class GraftSink(path: String, streamId: String,
   override def toString: String = s"GraftSink[$path]"
 }
 
+/** The change-feed stream table (and any read of a missing table): a
+  * batch read of it refuses loudly ([[GraftScan.toBatch]]). */
 private[sources] class GraftStreamTable(path: String, schema0: StructType,
     cdf: Boolean) extends Table with SupportsRead {
   override def name(): String = s"graft.`$path`"
   override def schema(): StructType = schema0
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
+    Set(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(path, schema0, cdf, options)
 }
@@ -234,6 +238,11 @@ private[sources] class GraftScan(path: String, tableSchema: StructType,
     cdf: Boolean, options: CaseInsensitiveStringMap) extends Scan {
   override def readSchema(): StructType = tableSchema
   override def description(): String = s"GraftStream $path"
+  override def toBatch: org.apache.spark.sql.connector.read.Batch =
+    throw new IllegalArgumentException(
+      if (cdf) "readChangeFeed is a streaming option — for batch change reads use " +
+        "GraftTable.diffVersions or the graft_table_changes TVF"
+      else s"'$path' is not a GraftTable")
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     // the writer probe needs inferSchema to tolerate a missing table
     // (empty StructType); a streaming READ of one must fail loudly HERE

@@ -582,11 +582,12 @@ object PlanAudit {
     locally {
       // q148/q149's batch format("graft") source: the EXECUTED scan's
       // input partitions must be exactly the stats/bloom-surviving files
-      // (the numFiles metric vs the explicit readPruned/readPrunedIn
-      // counts), with NO optimizer rule installed — the skip comes from
-      // the manifest-backed FileIndex's own listFiles, nothing else
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+      // (the GraftBatch filesPlanned metric vs the explicit
+      // readPruned/readPrunedIn counts), with NO optimizer rule installed
+      // — the skip comes from the scan's own split planning, nothing else
+      import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
       import org.apache.spark.sql.functions.col
       import graft.core.GraftTable
       spark.experimental.extraOptimizations = spark.experimental.extraOptimizations
@@ -596,13 +597,13 @@ object PlanAudit {
         "cast(id * 2 as int) AS k", "cast(id % 100 as double) AS x")
       def scanFiles(df: org.apache.spark.sql.DataFrame): Long = {
         df.collect()
-        def find(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+        def find(p: SparkPlan): Seq[BatchScanExec] = p match {
           case a: AdaptiveSparkPlanExec => find(a.executedPlan)
           case q: QueryStageExec => find(q.plan)
-          case f: FileSourceScanExec => Seq(f)
+          case b: BatchScanExec => Seq(b)
           case o => o.children.flatMap(find)
         }
-        find(df.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
+        find(df.queryExecution.executedPlan).map(_.metrics("filesPlanned").value).sum
       }
       val rootR = s"$base/range"
       GraftTable.writeClustered(rows, rootR, col("k"), 16)
@@ -694,14 +695,13 @@ object PlanAudit {
     locally {
       // q162/q163's catalog surface: named reads are a REAL DSv2
       // Scan→Batch (GraftBatch) — identical with or without extensions
-      // (the former analysis-rule swap is retired; GraftCatalogSpec
-      // proves the stock-session side with fastEquals + auto-broadcast
+      // (no analysis rule swaps the read; GraftCatalogSpec proves the
+      // stock-session side with the analyzed-leaf + auto-broadcast
       // pins). Here: columnar v2 BatchScan, stats file-skipping at
       // split planning, manifest-true stats auto-broadcasting a small
       // named dim, grammar-native VERSION AS OF, and named DML text
       // through the parse-time rewrite
       import org.apache.spark.sql.functions.col
-      import org.apache.spark.sql.execution.FileSourceScanExec
       import org.apache.spark.sql.execution.adaptive.QueryStageExec
       import graft.core.GraftTable
       val wh = java.nio.file.Files.createTempDirectory("plan_catalog_wh").toString
@@ -767,13 +767,12 @@ object PlanAudit {
     locally {
       // q159/q161's MOR read path through format("graft") in the
       // EXTENSION session: a deletion vector on ONE file must not
-      // change the scan class of the others — GraftCatalogScanRule
-      // re-plans the V1 fallback as the per-file split, so the executed
-      // plan is vectorized FileSourceScans (clean files unfiltered,
-      // the dirty file's branch carrying the liveness filter), never a
-      // whole-relation RowDataSourceScan
+      // change how the others read — the one GraftBatch scan plans all
+      // 16 files and its reader factory masks only the dirty file,
+      // inside the columnar batch, so the executed plan is a vectorized
+      // BatchScan, never a whole-relation RowDataSourceScan
       import org.apache.spark.sql.functions.col
-      import org.apache.spark.sql.execution.FileSourceScanExec
+      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
       import org.apache.spark.sql.execution.adaptive.QueryStageExec
       import graft.core.GraftTable
       val root = java.nio.file.Files.createTempDirectory("plan_morvec").toString + "/t"
@@ -787,24 +786,30 @@ object PlanAudit {
       val dvd = GraftTable.filesOf(root, GraftTable.currentManifest(root).get)
         .count(_.dv.isDefined)
       val df = spark.read.format("graft").load(root)
-      val n = df.count()
-      def find(p: org.apache.spark.sql.execution.SparkPlan): Seq[FileSourceScanExec] =
+      val n = df.collect().length.toLong
+      def find(p: org.apache.spark.sql.execution.SparkPlan): Seq[BatchScanExec] =
         p match {
           case q: QueryStageExec => find(q.plan)
-          case f: FileSourceScanExec => Seq(f)
+          case b: BatchScanExec => Seq(b)
           case o => o.children.flatMap(find)
         }
       val planned = df.queryExecution.executedPlan
       val fs = find(planned)
       val planStr = planned.toString
+      val kept = fs.map(_.scan).collect {
+        case s: graft.catalog.GraftNamedScan =>
+          s.toBatch.asInstanceOf[graft.sources.GraftBatch].kept
+      }.flatten
       val checks = Seq(
         "one_file_dirty" -> (dvd == 1),
-        "mor_scan_vectorized" -> (fs.nonEmpty && !planStr.contains("RowDataSourceScan")),
-        "clean_branch_unfiltered" -> (fs.size >= 2),
-        // the liveness probe is the codegen'd DvIsLive predicate — a
-        // Scala UDF here measured ~500 ns/row (SCALE.md, MOR read amplification)
-        "probe_codegen" -> (planStr.contains("graft_dv_is_live") &&
-          !planStr.contains("UDF")),
+        "mor_scan_vectorized" -> (fs.nonEmpty && planStr.contains("ColumnarToRow") &&
+          !planStr.contains("RowDataSourceScan")),
+        // the clean files ride the same scan, unmasked
+        "clean_branch_unfiltered" -> (kept.size == 16 && kept.count(_.dv.isDefined) == 1),
+        // the mask is DvMaskBatchReader's, inside the columnar batch — a
+        // Scala UDF filter here measured ~500 ns/row (SCALE.md, MOR read
+        // amplification)
+        "probe_codegen" -> (planStr.contains("ColumnarToRow") && !planStr.contains("UDF")),
         "complement_exact" -> (n == 4095L))
       val results = checks.map { case (l, ok) => s"$l=${if (ok) "OK" else "MISS"}" }
       println(s"[plan] q159_mor_vectorized: ${results.mkString(" ")} (scans=${fs.size})")
@@ -1376,8 +1381,8 @@ object PlanAudit {
         s" (masked=$masked)")
     }
     locally {
-      // auto-broadcast from manifest sizes: GraftFileIndex.sizeInBytes
-      // answers from the manifest (zero file listings), so a graft dim
+      // auto-broadcast from manifest sizes: the GraftBatch scan's
+      // statistics answer from the manifest (zero file listings), so a graft dim
       // under the broadcast threshold broadcast-joins WITHOUT an
       // explicit broadcast() hint — checked on the PRE-AQE plan, so the
       // decision provably came from the manifest-reported size, not a
@@ -1407,12 +1412,12 @@ object PlanAudit {
     }
     locally {
       // named-table metadata aggregates in the EXTENSION session: the
-      // catalog scan rule swaps the v2 relation for the manifest scan
-      // at analysis and the injected optimizer rule folds the
-      // aggregate — `SELECT count(*) FROM gmeta.ns.t` by NAME plans
-      // zero file scans
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+      // injected optimizer rule (or the scan's own aggregate pushdown)
+      // folds the aggregate over the v2 relation's manifest entries —
+      // `SELECT count(*) FROM gmeta.ns.t` by NAME plans zero file scans
+      import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
       import graft.core.GraftTable
       val wh = java.nio.file.Files.createTempDirectory("plan_cat_meta").toString
       spark.conf.set("spark.sql.catalog.gmeta", classOf[graft.catalog.GraftCatalog].getName)
@@ -1421,17 +1426,16 @@ object PlanAudit {
       GraftTable.overwrite(spark.range(0, 3000).selectExpr("id AS k"), s"$wh/ns/t")
       val agg = spark.sql("SELECT count(*) AS n, min(k) AS mn, max(k) AS mx FROM gmeta.ns.t")
       val row = agg.collect().head
-      def find(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      def find(p: SparkPlan): Seq[BatchScanExec] = p match {
         case a: AdaptiveSparkPlanExec => find(a.executedPlan)
         case q: QueryStageExec => find(q.plan)
-        case f: FileSourceScanExec => Seq(f)
+        case b: BatchScanExec => Seq(b)
         case o => o.children.flatMap(find)
       }
       val nScans = find(agg.queryExecution.executedPlan).size
-      // named-dim auto-broadcast: the extension scan rule swaps in the
-      // manifest FileIndex, whose sizeInBytes is manifest-true — a
-      // small named dim must plan a broadcast join PRE-AQE (V1ScanWrapper
-      // hides scan stats, so this only works through the rule)
+      // named-dim auto-broadcast: the GraftBatch scan reports
+      // manifest-true statistics — a small named dim must plan a
+      // broadcast join PRE-AQE
       GraftTable.overwrite(spark.range(0, 200000).selectExpr(
         "id % 3000 AS k", "id AS x"), s"$wh/ns/fact")
       val j = spark.sql("SELECT * FROM gmeta.ns.fact f JOIN gmeta.ns.t d ON f.k = d.k")
@@ -1453,8 +1457,7 @@ object PlanAudit {
         def findAll(p: SparkPlan): Int = p match {
           case a: AdaptiveSparkPlanExec => findAll(a.executedPlan)
           case q: QueryStageExec => findAll(q.plan)
-          case _: FileSourceScanExec => 1
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => 1
+          case _: BatchScanExec => 1
           case o => o.children.map(findAll).sum
         }
         findAll(df.queryExecution.executedPlan)
@@ -1534,8 +1537,9 @@ object PlanAudit {
       // scan must plan ZERO file scans (the Aggregate collapses to a
       // constant-folded projection over the manifest fold), while
       // unsupported shapes (sum) and post-DV tables keep real plans
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+      import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
       import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
       import graft.core.GraftTable
       graft.plans.GraftPrune.install(spark)
@@ -1545,10 +1549,10 @@ object PlanAudit {
         statsCols = Seq("k", "x"))
       def scans(df: org.apache.spark.sql.DataFrame): Int = {
         df.collect()
-        def find(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+        def find(p: SparkPlan): Seq[BatchScanExec] = p match {
           case a: AdaptiveSparkPlanExec => find(a.executedPlan)
           case q: QueryStageExec => find(q.plan)
-          case f: FileSourceScanExec => Seq(f)
+          case b: BatchScanExec => Seq(b)
           case o => o.children.flatMap(find)
         }
         find(df.queryExecution.executedPlan).size
@@ -1583,7 +1587,7 @@ object PlanAudit {
       // a LocalTableScan); the straddling window keeps a real scan;
       // and a plain filtered SELECT under the claim carries no
       // FilterExec while returning exactly the predicate's rows
-      import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
+      import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
       import graft.core.GraftTable
@@ -1610,7 +1614,7 @@ object PlanAudit {
         def walk(p: SparkPlan): (Int, Int) = p match {
           case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
           case q: QueryStageExec => walk(q.plan)
-          case _: FileSourceScanExec | _: BatchScanExec => (1, 0)
+          case _: BatchScanExec => (1, 0)
           case f: FilterExec => val (s, n) = walk(f.child); (s, n + 1)
           case l: org.apache.spark.sql.execution.LocalTableScanExec =>
             local = true; (0, 0)
@@ -1649,7 +1653,7 @@ object PlanAudit {
       // the manifest (LocalTableScan, zero files); a multi-valued
       // layout bails to the real scan; IN over the partition column
       // folds, IN over the range-valued key stays advisory
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+      import org.apache.spark.sql.execution.SparkPlan
       import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
       import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
       import graft.core.GraftTable
@@ -1673,7 +1677,7 @@ object PlanAudit {
         def walk(p: SparkPlan): Int = p match {
           case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
           case q: QueryStageExec => walk(q.plan)
-          case _: FileSourceScanExec | _: BatchScanExec => 1
+          case _: BatchScanExec => 1
           case _: org.apache.spark.sql.execution.LocalTableScanExec =>
             local = true; 0
           case o => o.children.map(walk).sum

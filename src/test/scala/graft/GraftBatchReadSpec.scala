@@ -1,17 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.GraftTable
 
-/** The batch `format("graft")` relation ([[graft.sources.GraftBatchRead]]):
-  * a vectorized parquet scan whose FileIndex is the manifest — stats and
-  * bloom file-skipping happen inside `listFiles` for every consumer,
-  * with NO GraftPrune.install and no API opt-in. */
+/** The batch `format("graft")` read ([[graft.sources.GraftBatchRead]]):
+  * the manifest-planned DSv2 `GraftBatch` scan — stats and bloom
+  * file-skipping happen at split planning for every consumer, with NO
+  * GraftPrune.install and no API opt-in. */
 class GraftBatchReadSpec extends AnyFunSuite with SparkSpecBase {
 
   private def tmp(): String =
@@ -20,18 +18,9 @@ class GraftBatchReadSpec extends AnyFunSuite with SparkSpecBase {
   private def kv(rows: (Int, String)*) =
     df("k INT, v STRING", rows.map(r => Row(Int.box(r._1), r._2)): _*)
 
-  /** Files the EXECUTED file-source scan actually planned (the
-    * `numFiles` metric — populated by `FileIndex.listFiles` with the
-    * pushed data filters, i.e. after manifest-stats skipping). */
-  private def scannedFiles(q: DataFrame): Long = {
-    q.collect()
-    def find(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(find)
-    }
-    find(q.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
-  }
+  /** Files the EXECUTED scan planned (the `filesPlanned` metric —
+    * after manifest-stats skipping against the pushed filters). */
+  private def scannedFiles(q: DataFrame): Long = plannedFiles(q)
 
   private def graftDf(path: String): DataFrame =
     spark.read.format("graft").load(path)

@@ -154,24 +154,16 @@ class GraftSqlSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("TVF scans file-skip exactly like an API read — no rule install needed") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val path = tmp()
     GraftTable.writeClustered(
       Seq.tabulate(800)(i => (i, i % 7)).toDF("k", "grp"), path, col("k"), 8,
       statsCols = Seq("k"))
-    // since round 9 the TVF's plan reads through the manifest FileIndex,
-    // so the skip happens inside the executed scan's listFiles with NO
-    // GraftPrune install — measure at the numFiles metric
+    // the TVF's plan reads through the GraftBatch scan, so the skip
+    // happens at its split planning with NO GraftPrune install —
+    // measure at the filesPlanned metric
     val q = spark.sql(s"SELECT k, grp FROM graft_table('$path') WHERE k BETWEEN 100 AND 150")
     assert(q.count() === 51L)
-    def find(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
-      case s: QueryStageExec => find(s.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case o => o.children.flatMap(find)
-    }
-    val planned = find(q.queryExecution.executedPlan).map(_.metrics("numFiles").value).sum
+    val planned = plannedFiles(q)
     assert(planned <= 2, s"TVF scan must file-skip: planned $planned/8")
   }
 

@@ -47,6 +47,24 @@ trait SparkSpecBase {
     finally sc.removeSparkListener(listener)
   }
 
+  /** Files the EXECUTED scans of `q` planned, after running it: a graft
+    * `BatchScan`'s `filesPlanned` driver metric (what the manifest
+    * stats/blooms left to read), a plain parquet scan's `numFiles`. */
+  def plannedFiles(q: DataFrame): Long = {
+    q.collect()
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    def find(p: SparkPlan): Seq[Long] = p match {
+      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
+      case s: QueryStageExec => find(s.plan)
+      case f: FileSourceScanExec => Seq(f.metrics("numFiles").value)
+      case b: BatchScanExec => b.metrics.get("filesPlanned").map(_.value).toSeq
+      case o => o.children.flatMap(find)
+    }
+    find(q.queryExecution.executedPlan).sum
+  }
+
   def df(schema: String, rows: Row*): DataFrame =
     spark.createDataFrame(rows.asJava,
       org.apache.spark.sql.types.StructType.fromDDL(schema))
