@@ -1704,15 +1704,15 @@ object Queries {
     java.nio.file.Files.createTempDirectory("graft_vt_ruled_in").toString
 
   /** q139: q131's bloom point-lookup with NO explicit readPrunedIn — a
-    * plain `.isin` filter over the hash-distributed table, narrowed to
-    * bloom-surviving files by the [[graft.plans.GraftPrune]] optimizer
-    * rule alone (its round-8 IN-list path; GraftPruneSpec pins the
-    * planned-file skipping and no-false-skip, this gate pins end-to-end
-    * correctness through the rule). */
+    * plain `.isin` filter over the hash-distributed table, pushed into
+    * the [[graft.sources.GraftBatch]] scan, whose split planner keeps
+    * only the bloom-surviving files
+    * ([[graft.sources.GraftBatchRead.keepByV1Filters]]; GraftPruneSpec
+    * pins the planned-file skipping and no-false-skip, this gate pins
+    * end-to-end correctness through the pushdown). */
   def ruledBloomScanQ(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftPrune.install(s)
     // immutable fixture (bloom layout + probe list); the timed operator
-    // is the rule-narrowed .isin scan
+    // is the bloom-narrowed .isin scan
     val (path, probes) = Fixture.ensure("q139", d) {
       val root = q139Root
       TableIO.clearDir(root)
@@ -2405,13 +2405,13 @@ object Queries {
     java.nio.file.Files.createTempDirectory("graft_vt_rule").toString
 
   /** q134: the q104 pruned scan with NO explicit readPruned — the
-    * [[graft.plans.GraftPrune]] optimizer rule alone must narrow the
-    * plain `.filter` over the clustered table to the stats-surviving
-    * files (GraftPruneSpec pins the planned-file counts and no-false-
-    * skip; this gate pins end-to-end correctness through the rule). */
+    * plain `.filter` over the clustered table is pushed into the
+    * [[graft.sources.GraftBatch]] scan, whose split planner keeps only
+    * the stats-surviving files (GraftPruneSpec pins the planned-file
+    * counts and no-false-skip; this gate pins end-to-end correctness
+    * through the pushdown). */
   def ruledScanQ(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftPrune.install(s)
-    // immutable clustered layout; the timed operator is the rule-
+    // immutable clustered layout; the timed operator is the stats-
     // narrowed scan
     val path = Fixture.ensure("q134", d) {
       val root = q134Root
@@ -2644,12 +2644,13 @@ object Queries {
   }
 
   /** q171: METADATA-ONLY AGGREGATES — `count(*) / count(col) / min /
-    * max` over a graft scan answered FROM THE MANIFEST
-    * ([[graft.plans.GraftPrune.rewriteMetaAgg]]): the relation's
-    * entries are dv-free with exact per-file rows and [min,max,nulls],
-    * so the whole aggregate subtree collapses to a LocalRelation at
-    * optimization — zero data files read (PlanAudit pins the plan; at
-    * 100 TB this is one manifest read vs a million-file scan). The
+    * max` over a graft scan answered FROM THE MANIFEST by the v2
+    * complete aggregate pushdown ([[graft.catalog.GraftMetaAggFold]]
+    * over the shared [[graft.plans.GraftPrune.foldMetaAgg]]): the
+    * relation's entries are dv-free with exact per-file rows and
+    * [min,max,nulls], so the scan becomes a local manifest-answered row
+    * at optimization — zero data files read (PlanAudit pins the plan;
+    * at 100 TB this is one manifest read vs a million-file scan). The
     * oracle computes the same aggregates the real way — a stale or
     * wrong manifest fold breaks the hash. */
   def metaAggQ(s: SparkSession, d: String): DataFrame = {
@@ -2664,7 +2665,6 @@ object Queries {
         statsCols = Seq("o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"))
       p
     }
-    graft.plans.GraftPrune.install(s)
     GraftTable.read(s, path).agg(
       count(lit(1)).as("n_rows"),
       count(col("o_orderpriority")).as("n_prios"),
@@ -2684,7 +2684,9 @@ object Queries {
     * from the manifest with zero data IO. The window is derived from
     * the manifest's own per-file bounds (exact whatever the range
     * partitioner chose); the result also carries a straddling window's
-    * count (executed for real) so both paths gate against the oracle. */
+    * count (executed for real) so both paths gate against the oracle.
+    * Both counts plan in a [[graft.plans.GraftPrune.ruled]] child
+    * session, so `s` keeps its optimizer. */
   def metaCountFilteredQ(s: SparkSession, d: String): DataFrame = {
     import graft.core.GraftTable
     import org.apache.spark.sql.expressions.Window
@@ -2709,11 +2711,11 @@ object Queries {
         ranked.filter(col("rn") === r).select(col("o_orderkey")).head().getLong(0)
       (p, keyAt(n / 8 + 1), keyAt(n / 2)) // slices 2..4, exactly
     }
-    graft.plans.GraftPrune.install(s)
-    val clean = GraftTable.read(s, path)
+    val ruled = graft.plans.GraftPrune.ruled(s)
+    val clean = GraftTable.read(ruled, path)
       .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
       .groupBy().count().collect().head.getLong(0)
-    val straddle = GraftTable.read(s, path)
+    val straddle = GraftTable.read(ruled, path)
       .filter(col("o_orderkey") >= lo + 1 && col("o_orderkey") <= hi)
       .groupBy().count().collect().head.getLong(0)
     s.range(1).select(lit(lo).as("lo"), lit(hi).as("hi"),
@@ -2817,10 +2819,11 @@ object Queries {
     * period, so each year's aggregates fold from that year's file
     * stats — zero files read (GroupedMetaAggSpec pins the finer-grain
     * bail; PlanAudit pins the plan). The most common BI rollup a
-    * date-partitioned 100 TB table serves. */
+    * date-partitioned 100 TB table serves. The rollup plans in a
+    * [[graft.plans.GraftPrune.ruled]] child session, so `s` keeps its
+    * optimizer. */
   def metaYearRollupQ(s: SparkSession, d: String): DataFrame = {
     import graft.core.GraftTable
-    graft.plans.GraftPrune.install(s)
     val path = Fixture.ensure("q184", d) {
       val r = java.nio.file.Files.createTempDirectory("graft_metayr").toString
       val p = s"$r/orders_yr"
@@ -2835,7 +2838,7 @@ object Queries {
       }
       p
     }
-    GraftTable.read(s, path)
+    GraftTable.read(graft.plans.GraftPrune.ruled(s), path)
       .groupBy(date_trunc("year", col("o_orderdate")).as("yr"))
       .agg(count(lit(1)).as("n_orders"),
         min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))

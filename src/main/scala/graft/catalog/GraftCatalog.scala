@@ -956,7 +956,7 @@ private[graft] class GraftNamedScan(path: String, tableSchema: StructType,
     * physical key set — an upper bound) but drop null counts. */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
     val entries = graft.sources.GraftBatchRead.keepByV1Filters(SparkSession.active,
-      StructType.fromDDL(manifest.schemaDdl), this.entries, pushed)
+      StructType.fromDDL(manifest.schemaDdl), this.entries, pushed)(_.stats)
     val (bytes, rows) = (entries.map(_.bytes).sum, entries.map(_.liveRows).sum)
     val anyDv = entries.exists(_.dv.isDefined)
     val anyRen = entries.exists(_.renames.exists(_.nonEmpty))

@@ -57,9 +57,9 @@ import graft.core.GraftTable
   *
   * Scale shape: identical to the Scala ops by construction — DELETE and
   * UPDATE derive their stats-cover prune ranges from the optimized
-  * predicate (the [[GraftPrune.extractRanges]] extractor over the
-  * resolved filter), MERGE inherits the upsert's key-bounds cover; only
-  * files provably holding matches rewrite.
+  * predicate (the filters Spark pushes into the graft scan —
+  * [[GraftDml.pruneRangesOf]]), MERGE inherits the upsert's key-bounds
+  * cover; only files provably holding matches rewrite.
   *
   * Translation contract (refusals are loud, never silent drops):
   * DELETE/UPDATE take any row predicate. MERGE `ON` must be a
@@ -236,15 +236,14 @@ object GraftDml extends PredicateHelper {
   }
 
   /** The stats-cover ranges implied by the DML predicate: resolve it
-    * against the table's frame and reuse the optimizer rule's extractor
-    * over the OPTIMIZED filter (casts folded, literals normalized), plus
-    * the filters pushed into the scan (an exact-prune claim removes the
-    * Filter node and leaves them only there). */
+    * against the table's frame, optimize (casts folded, literals
+    * normalized), and read the ranges off the filters Spark pushed into
+    * the graft scan — the `sources.Filter`s every file-stats consumer
+    * reads ([[graft.sources.GraftBatchRead.v1Ranges]]). */
   private[plans] def pruneRangesOf(spark: SparkSession, path: String,
       pred: Column): Seq[GraftTable.ColRange] =
     try GraftTable.read(spark, path).filter(pred).queryExecution.optimizedPlan
       .collect {
-        case f: Filter => GraftPrune.extractRanges(f.condition)
         case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
           s.scan match {
             case g: graft.catalog.GraftNamedScan =>

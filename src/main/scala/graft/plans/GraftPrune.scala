@@ -3,14 +3,14 @@ package graft.plans
 import java.io.File
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.graftbridge.ClassicBridge
 
 import graft.core.GraftTable
-import graft.core.GraftTable.ColRange
+import graft.sources.GraftBatchRead
 
 /** The graft optimizer rules. Every GraftTable read is a DSv2 relation
   * whose [[graft.sources.GraftBatch]] scan already skips files by
@@ -24,9 +24,17 @@ import graft.core.GraftTable.ColRange
   *    directory (`spark.read.parquet` over the files, bypassing the
   *    manifest): a `Filter` directly over that scan gets its file list
   *    narrowed to the files whose per-file stats can satisfy the
-  *    predicate. Range conjuncts probe [min,max]; `IN`/`===` conjuncts
-  *    additionally probe the per-file BLOOM filters. The filter itself
-  *    stays in the plan, so the rewrite is purely a file-set refinement.
+  *    predicate, by the scan's own keep test
+  *    ([[graft.sources.GraftBatchRead.keepByV1Filters]]: range filters probe
+  *    [min,max]; `IN`/`=` filters also probe the per-file BLOOM
+  *    filters). The filter itself stays in the plan, so the rewrite is
+  *    purely a file-set refinement.
+  *
+  * Every rule reads the predicate in ONE form: each condition goes
+  * through Spark's own pushdown translator
+  * ([[ClassicBridge.translateFilter]]) into the `sources.Filter`s the v2
+  * scan builder receives, so the folds, the plain-parquet rule, the v2
+  * exact-prune claim and split planning all see the same shapes.
   *
   * Safety:
   *  - only ranges PROVABLY empty on a file's stats are dropped (the
@@ -40,9 +48,10 @@ import graft.core.GraftTable.ColRange
   *    stats) degrades to a no-op, never an error — the rule can only
   *    remove provably-dead IO.
   *
-  * Install per session with [[GraftPrune.install]] (idempotent; uses
-  * `spark.experimental.extraOptimizations`), or globally via
-  * `spark.sql.extensions=graft.expressions.GraftExtensions`. */
+  * Register it context-wide with
+  * `spark.sql.extensions=graft.expressions.GraftExtensions`, or per
+  * session with [[GraftPrune.install]]; [[GraftPrune.ruled]] plans with
+  * it in a child session without changing the caller's. */
 case class GraftPrune(spark: SparkSession) extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -74,29 +83,14 @@ case class GraftPrune(spark: SparkSession) extends Rule[LogicalPlan] with Predic
     if (files.isEmpty) return f
     val dirs = files.map(p => new File(stripScheme(p)).getParentFile).distinct
     if (dirs.length != 1 || dirs(0) == null || !GraftTable.isDataDir(dirs(0))) return f
-    val ranges = GraftPrune.extractRanges(cond)
-    val points = GraftPrune.extractPoints(cond)
-    if (ranges.isEmpty && points.isEmpty) return f
-    val root = dirs(0).getParentFile.getPath
-    val stats = GraftTable.statsForFiles(root)
-    // one lazy probe-hash job per IN column — paid only when some file's
-    // stats actually carry a bloom for it (the readPrunedIn discipline)
-    val hashCache = scala.collection.mutable.HashMap.empty[String, Any => Seq[Long]]
-    def hashesFor(p: GraftPrune.PointProbe): Any => Seq[Long] =
-      hashCache.getOrElseUpdate(p.col, {
-        lazy val m = GraftTable.probeHashes(spark, p.dt, p.values, GraftTable.BloomK)
-        v => m(v)
-      })
-    val kept = files.filter { p =>
-      val name = p.split('/').last
-      stats.get(name).forall { s =>
-        GraftTable.mayMatch(s, ranges) &&
-          points.forall(pt => GraftTable.mayContainIn(s, pt.col, pt.values, hashesFor(pt)))
-      }
-    }
+    // each conjunct Spark's pushdown can translate; the rest stay residual
+    val filters = splitConjunctivePredicates(cond).flatMap(ClassicBridge.translateFilter)
+    lazy val stats = GraftTable.statsForFiles(dirs(0).getParentFile.getPath)
+    val kept = GraftBatchRead.keepByV1Filters(spark, lr.schema, files.toSeq,
+      filters.toArray)(p => stats.getOrElse(p.split('/').last, Map.empty))
     if (kept.length == files.length) return f // nothing to skip — fixpoint
     val idx = new InMemoryFileIndex(spark,
-      kept.map(new org.apache.hadoop.fs.Path(_)).toIndexedSeq,
+      kept.map(new org.apache.hadoop.fs.Path(_)),
       Map.empty[String, String], Some(fs.dataSchema))
     Filter(cond, lr.copy(relation = fs.copy(location = idx)(spark)))
   }
@@ -119,78 +113,25 @@ object GraftRules {
 }
 
 object GraftPrune extends PredicateHelper {
-  /** Idempotent per-session install into the experimental optimizer
-    * hook — the in-session counterpart of the `spark.sql.extensions`
-    * registration. */
+  /** Idempotent install into `spark`'s experimental optimizer hook —
+    * the in-session counterpart of the `spark.sql.extensions`
+    * registration. It changes how every later query of `spark` plans,
+    * and an installed rule runs after v2 pushdown (it sees the pushed
+    * scan), so library code that only needs the rule for its own
+    * queries uses [[ruled]] instead. */
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_.isInstanceOf[GraftPrune]))
       spark.experimental.extraOptimizations = cur :+ GraftPrune(spark)
   }
 
-  /** Conjuncts of the shape `attr <op> literal` (either side) become
-    * inclusive [[ColRange]]s; everything else contributes nothing (the
-    * residual filter keeps exactness). NULL literals yield no range —
-    * a NULL comparison matches no row, but proving THAT is the
-    * filter's job, not the skipper's. Shared by the plain-parquet
-    * file-skipping rule and the SQL DML stats cover
-    * ([[GraftDml.pruneRangesOf]]). */
-  private[graft] def extractRanges(cond: Expression): Seq[ColRange] =
-    splitConjunctivePredicates(cond).flatMap {
-      case GreaterThan(a: AttributeReference, l: Literal) => range(a, lo = Some(l))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => range(a, lo = Some(l))
-      case LessThan(a: AttributeReference, l: Literal) => range(a, hi = Some(l))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) => range(a, hi = Some(l))
-      case EqualTo(a: AttributeReference, l: Literal) => range(a, lo = Some(l), hi = Some(l))
-      case GreaterThan(l: Literal, a: AttributeReference) => range(a, hi = Some(l))
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => range(a, hi = Some(l))
-      case LessThan(l: Literal, a: AttributeReference) => range(a, lo = Some(l))
-      case LessThanOrEqual(l: Literal, a: AttributeReference) => range(a, lo = Some(l))
-      case EqualTo(l: Literal, a: AttributeReference) => range(a, lo = Some(l), hi = Some(l))
-      case _ => Nil
-    }
-
-  private def range(a: AttributeReference, lo: Option[Literal] = None,
-      hi: Option[Literal] = None): Seq[ColRange] = {
-    def ext(l: Literal): Option[Any] =
-      Option(CatalystTypeConverters.convertToScala(l.value, l.dataType))
-    (lo, hi) match {
-      case (Some(l), _) if l.value == null => Nil
-      case (_, Some(l)) if l.value == null => Nil
-      case _ => Seq(ColRange(a.name, lo.flatMap(ext), hi.flatMap(ext)))
-    }
+  /** A child of `spark` — same confs, catalog and cache — with the rule
+    * installed; `spark` itself plans as before. */
+  def ruled(spark: SparkSession): SparkSession = {
+    val child = ClassicBridge.cloneSession(spark)
+    install(child)
+    child
   }
-
-  private[graft] case class PointProbe(col: String,
-      dt: org.apache.spark.sql.types.DataType, values: Seq[Any])
-
-  /** Conjuncts of the shape `attr IN (literals…)` (both the `In` form
-    * and the set-optimized `InSet` the optimizer rewrites long lists
-    * into) become point probes, checked through
-    * [[GraftTable.mayContainIn]] — range containment per value PLUS the
-    * per-file/per-leaf bloom when the write listed the column in
-    * `bloomCols`. On a hash-distributed layout, where every file spans
-    * the full key range and min/max prune nothing, the bloom does all
-    * the skipping — this makes q131's explicit `readPrunedIn` shape
-    * automatic for plain `isin`/`===` filters. NULL probe values drop
-    * (IN never matches NULL); an all-NULL list contributes nothing. */
-  private[graft] def extractPoints(cond: Expression): Seq[PointProbe] =
-    splitConjunctivePredicates(cond).flatMap {
-      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        point(a, vs.collect { case Literal(v, dt) if v != null =>
-          CatalystTypeConverters.convertToScala(v, dt) })
-      case InSet(a: AttributeReference, hset) =>
-        point(a, hset.toSeq.filter(_ != null)
-          .map(CatalystTypeConverters.convertToScala(_, a.dataType)))
-      case EqualTo(a: AttributeReference, Literal(v, dt)) if v != null =>
-        point(a, Seq(CatalystTypeConverters.convertToScala(v, dt)))
-      case EqualTo(Literal(v, dt), a: AttributeReference) if v != null =>
-        point(a, Seq(CatalystTypeConverters.convertToScala(v, dt)))
-      case _ => Nil
-    }
-
-  private def point(a: AttributeReference, values: Seq[Any]): Seq[PointProbe] =
-    if (values.isEmpty) Nil else Seq(PointProbe(a.name, a.dataType, values))
 
   // --------------------------------------------- metadata-only aggregates
 
@@ -271,27 +212,28 @@ object GraftPrune extends PredicateHelper {
   }
 
   /** FILTERED metadata aggregates: `count(*) / min / max` under a
-    * conjunctive range / equality / IS NOT NULL filter answer from
-    * stats when EVERY file classifies cleanly — provably fully-inside
-    * the predicate (all its non-null rows satisfy every bound) or
-    * provably fully-outside (no row can satisfy). One straddling file
-    * blocks the rewrite (a partial answer would need real IO — stats
-    * answer, never guess). On a layout clustered like the predicate —
-    * the date-partitioned 100 TB shape — `SELECT count(*), max(ts)
-    * WHERE d BETWEEN x AND y` becomes a manifest fold with at most the
-    * two boundary files forcing a real scan, and usually none.
+    * range / equality / IN / IS NOT NULL filter, with AND/OR nesting,
+    * answer from stats when EVERY file classifies cleanly — provably
+    * fully-inside the predicate or provably fully-outside
+    * ([[classifyFilteredTree]]). One straddling file blocks the rewrite
+    * (a partial answer would need real IO — stats answer, never guess).
+    * On a layout clustered like the predicate — the date-partitioned
+    * 100 TB shape — `SELECT count(*), max(ts) WHERE d BETWEEN x AND y`
+    * becomes a manifest fold with at most the two boundary files
+    * forcing a real scan, and usually none.
     *
-    * Null discipline: a comparison or IS NOT NULL excludes null rows,
-    * so a fully-inside file contributes `rows − nulls(col)` to the
-    * count when ONE column is constrained; with several constrained
-    * columns the null sets may overlap, so all involved columns must
-    * be null-free in every contributing file (else bail). MIN/MAX are
-    * stricter still: a row null in a constrained column is excluded by
-    * the filter yet may carry ANY other column's extremum — bounds
-    * fold only when every inside file is null-free on every
-    * constrained column. Strictness is preserved — this extraction is
-    * separate from the PRUNING one, which relaxes strict bounds (safe
-    * to over-keep, fatal to over-answer). */
+    * The condition reaches the classifier the way filter pushdown sees
+    * it: Spark's translator turns it into `sources.Filter`s
+    * ([[ClassicBridge.translateFilter]]), [[v1StatPred]] compiles those.
+    * Null discipline: a count over a ONE-column predicate folds `rows −
+    * nulls` per inside file (a NULL fails every leaf on that column);
+    * anything else needs inside files null-free on every involved
+    * column. MIN/MAX are stricter still: a row null in a constrained
+    * column is excluded by the filter yet may carry ANY other column's
+    * extremum, and a deletion vector may have killed the extremum row.
+    * Strictness is preserved — this classification is separate from
+    * the PRUNING keep test, which relaxes strict bounds (safe to
+    * over-keep, fatal to over-answer). */
   private[graft] def rewriteFilteredCount(agg: Aggregate): Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.aggregate._
     def stripProjects(p: LogicalPlan): LogicalPlan = p match {
@@ -299,11 +241,11 @@ object GraftPrune extends PredicateHelper {
         stripProjects(c)
       case other => other
     }
-    val (cond, entries) = stripProjects(agg.child) match {
-      case Filter(c, ch) =>
-        (c, planEntries(stripProjects(ch)).getOrElse(return None))
+    val (cond, leaf) = stripProjects(agg.child) match {
+      case Filter(c, ch) => (c, stripProjects(ch))
       case _ => return None
     }
+    val entries = planEntries(leaf).getOrElse(return None)
     if (entries.exists(_.renames.exists(_.nonEmpty))) return None
     // every aggregate must be answerable under a filter: count(non-null
     // literal), or min/max of a stats-tagged column; wrappers fold
@@ -322,30 +264,9 @@ object GraftPrune extends PredicateHelper {
       case Min(_) | Max(_) => true
       case _ => false
     })
-    // parse the conjunction; an OR falls back to the tri-state TREE
-    // (which is stricter on nulls: every inside file must be null-free
-    // on every involved column — the conjunction path's single-column
-    // rows-minus-nulls counting has no sound OR analogue)
-    var total = 0L
-    var inside = List.empty[graft.core.GraftTable.FileEntry]
-    catalystStatCmps(cond) match {
-      case Some((statCmps, notNulls, nullCmp)) =>
-        // classify: inside files (every non-null row passes), outside
-        // files (no row can pass), or bail on the first straddler
-        if (!nullCmp) {
-          val (t, ins) = classifyFiltered(entries, statCmps, notNulls,
-            requireNullFree = wantsBounds, forbidDv = wantsBounds)
-            .getOrElse(return None)
-          total = t
-          inside = ins
-        }
-      case None =>
-        val pred = catalystStatPred(cond).getOrElse(return None)
-        val (t, ins) = classifyFilteredTree(entries, pred, forbidDv = wantsBounds)
-          .getOrElse(return None)
-        total = t
-        inside = ins
-    }
+    val (total, inside) = classifyFilteredTree(entries,
+      statPredOf(leaf, cond).getOrElse(return None),
+      forbidDv = wantsBounds, countOnly = !wantsBounds).getOrElse(return None)
     def filteredBound(a: AttributeReference, takeMax: Boolean): Any = {
       val tag = GraftTable.statTag(a.dataType).get
       val ss = inside.map(fe => fe.stats.getOrElse(a.name, return None))
@@ -377,222 +298,21 @@ object GraftPrune extends PredicateHelper {
   private[graft] case class StatCmp(col: String, tag: String, enc: String,
       strict: Boolean, lower: Boolean)
 
-  /** Parse a CATALYST conjunction into [[StatCmp]]s + IS-NOT-NULL
-    * columns — the shared front of [[rewriteFilteredCount]] and
-    * [[rewriteGroupedMetaAgg]]. Returns None on any unrecognized
-    * conjunct; the third member flags a comparison against a NULL
-    * literal (the predicate drops every row — callers answer the empty
-    * result without classifying anything). */
-  private[graft] def catalystStatCmps(cond: Expression)
-      : Option[(Seq[StatCmp], Set[String], Boolean)] = {
-    var cmps = List.empty[StatCmp]
-    var notNulls = Set.empty[String]
-    var nullCmp = false // a comparison vs NULL literal drops every row
-    def lit(a: AttributeReference, l: Literal): Option[String] =
-      GraftTable.statTag(a.dataType).flatMap { tag =>
-        if (l.value == null) { nullCmp = true; None }
-        else Some(GraftTable.encode(tag,
-          CatalystTypeConverters.convertToScala(l.value, l.dataType)))
-      }
-    def add(a: AttributeReference, l: Literal, strict: Boolean, lower: Boolean): Boolean =
-      lit(a, l) match {
-        case Some(e) =>
-          cmps ::= StatCmp(a.name, GraftTable.statTag(a.dataType).get, e, strict, lower)
-          true
-        case None => nullCmp // only "recognized" if it was the NULL case
-      }
-    val recognized = splitConjunctivePredicates(cond).forall {
-      case IsNotNull(a: AttributeReference) => notNulls += a.name; true
-      case GreaterThan(a: AttributeReference, l: Literal) => add(a, l, strict = true, lower = true)
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => add(a, l, strict = false, lower = true)
-      case LessThan(a: AttributeReference, l: Literal) => add(a, l, strict = true, lower = false)
-      case LessThanOrEqual(a: AttributeReference, l: Literal) => add(a, l, strict = false, lower = false)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        add(a, l, strict = false, lower = true) && add(a, l, strict = false, lower = false)
-      case GreaterThan(l: Literal, a: AttributeReference) => add(a, l, strict = true, lower = false)
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => add(a, l, strict = false, lower = false)
-      case LessThan(l: Literal, a: AttributeReference) => add(a, l, strict = true, lower = true)
-      case LessThanOrEqual(l: Literal, a: AttributeReference) => add(a, l, strict = false, lower = true)
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        add(a, l, strict = false, lower = true) && add(a, l, strict = false, lower = false)
-      case _ => false
-    }
-    if (!recognized && !nullCmp) None else Some((cmps, notNulls, nullCmp))
-  }
-
-  /** The shared inside/outside file classification under a recognized
-    * conjunction — the ONE discipline behind the extension rule's
-    * filtered fold ([[rewriteFilteredCount]]) and the stock-session v2
-    * exact-prune claim ([[graft.catalog.GraftMetaAggFold]]). Every
-    * data-bearing file must classify provably fully-inside (all its
-    * non-null rows satisfy every bound) or provably fully-outside (no
-    * row can satisfy); ONE straddler returns None — stats answer,
-    * never guess. Returns the exact filtered row count and the inside
-    * entries.
-    *
-    *  - `requireNullFree`: every inside file must be null-free on every
-    *    involved column (the MIN/MAX discipline — an excluded null row
-    *    may carry another column's extremum — and the exact-prune
-    *    claim's, where EVERY row of a planned file must pass);
-    *  - `forbidDv`: no inside file may carry a deletion vector (bounds
-    *    folding — the vector may have killed the extremum row). Counts
-    *    tolerate vectors when the involved columns are null-free:
-    *    every LIVE row passes, so `liveRows` is exact. */
   /** One recognized `IN`-list conjunct: `encs` are the (non-null) list
     * values in the column's encoded stat domain, pre-sorted by
     * [[GraftTable.cmp]] order so range-disjointness tests are two
     * binary comparisons. */
   private[graft] case class StatIn(col: String, tag: String, encs: Seq[String])
 
-  private[graft] def classifyFiltered(
-      entries: Seq[graft.core.GraftTable.FileEntry],
-      cmps: Seq[StatCmp], notNulls: Set[String],
-      requireNullFree: Boolean, forbidDv: Boolean,
-      ins: Seq[StatIn] = Nil)
-      : Option[(Long, List[graft.core.GraftTable.FileEntry])] = {
-    val involved = (cmps.map(_.col) ++ ins.map(_.col) ++ notNulls).distinct
-    if (involved.isEmpty) return None // no constraint — bare fold handles
-    var total = 0L
-    var inside = List.empty[graft.core.GraftTable.FileEntry]
-    // every involved column needs stats (incl. exact null counts) on
-    // every data-bearing file
-    entries.foreach { fe =>
-      if (fe.rows > 0) {
-        val st = involved.map(c => c -> fe.stats.getOrElse(c, return None)).toMap
-        // a file whose recorded stat tag disagrees with the bound's
-        // (a type-evolved history) can't be compared against the
-        // pre-encoded bound — bail, never guess
-        if (cmps.exists(c => st(c.col).t != c.tag)) return None
-        if (ins.exists(c => st(c.col).t != c.tag)) return None
-        if (st.values.exists(s => s.min.isEmpty && s.max.isEmpty)) {
-          // an involved column is all-NULL in this file → no row passes
-        } else {
-          def satisfied(c: StatCmp): Boolean = {
-            val s = st(c.col)
-            if (c.lower) s.min.exists(mn => { val r = GraftTable.cmp(c.tag, mn, c.enc)
-              if (c.strict) r > 0 else r >= 0 })
-            else s.max.exists(mx => { val r = GraftTable.cmp(c.tag, mx, c.enc)
-              if (c.strict) r < 0 else r <= 0 })
-          }
-          def failed(c: StatCmp): Boolean = {
-            val s = st(c.col)
-            if (c.lower) s.max.exists(mx => { val r = GraftTable.cmp(c.tag, mx, c.enc)
-              if (c.strict) r <= 0 else r < 0 })
-            else s.min.exists(mn => { val r = GraftTable.cmp(c.tag, mn, c.enc)
-              if (c.strict) r >= 0 else r > 0 })
-          }
-          // IN-list: provably inside only for a SINGLE-VALUED file whose
-          // value is a list member (the partition-shaped layout);
-          // provably outside when no list value lands in [min,max] — a
-          // row can only pass by EQUALING a member, so a member-free
-          // range excludes every row
-          def inSatisfied(c: StatIn): Boolean = {
-            val s = st(c.col)
-            (s.min, s.max) match {
-              case (Some(mn), Some(mx)) => GraftTable.cmp(c.tag, mn, mx) == 0 &&
-                c.encs.exists(e => GraftTable.cmp(c.tag, e, mn) == 0)
-              case _ => false
-            }
-          }
-          def inFailed(c: StatIn): Boolean = {
-            val s = st(c.col)
-            (s.min, s.max) match {
-              case (Some(mn), Some(mx)) => !c.encs.exists(e =>
-                GraftTable.cmp(c.tag, e, mn) >= 0 && GraftTable.cmp(c.tag, e, mx) <= 0)
-              case _ => false
-            }
-          }
-          if (cmps.exists(failed) || ins.exists(inFailed))
-            () // provably outside → contributes nothing
-          else if (cmps.forall(satisfied) && ins.forall(inSatisfied)) {
-            val nulls = involved.map(st(_).nulls)
-            if (requireNullFree && nulls.exists(_ != 0L)) return None
-            if (forbidDv && fe.dv.isDefined) return None
-            if (fe.dv.isDefined) {
-              // dead rows' nullity is unknown — a dv'd inside file
-              // counts exactly only when the involved columns are
-              // null-free (then every LIVE row passes)
-              if (nulls.forall(_ == 0L)) total += fe.liveRows
-              else return None
-            }
-            else if (involved.size == 1) total += fe.rows - nulls.head
-            else if (nulls.forall(_ == 0L)) total += fe.rows
-            else return None
-            inside ::= fe
-          } else return None // straddler — a partial answer needs real IO
-        }
-      }
-    }
-    Some((total, inside))
-  }
+  /** `cond` as a [[StatPred]] against `leaf`'s columns: Spark's pushdown
+    * translator first, then [[v1StatPred]] — the one compile step every
+    * file-stats consumer shares. None when any part has no stats form. */
+  private def statPredOf(leaf: LogicalPlan, cond: Expression): Option[StatPred] =
+    ClassicBridge.translateFilter(cond).flatMap(f => v1StatPred(leaf.schema, Seq(f)))
 
-  /** The CATALYST twin of [[v1StatPred]]: compile a catalyst predicate
-    * into the tri-state tree, for the extension-rule folds
-    * ([[rewriteFilteredCount]]/[[rewriteGroupedMetaAgg]] fall back to
-    * it when the plain conjunction parse hits an OR). `InSet` (the
-    * optimizer's large-IN form, internal values) compiles like `In`;
-    * NULL members drop — they never match. */
-  private[graft] def catalystStatPred(cond: Expression): Option[StatPred] = {
-    def cmp(a: AttributeReference, l: Literal, strict: Boolean, lower: Boolean)
-        : Option[StatPred] =
-      if (l.value == null) Some(PNever)
-      else GraftTable.statTag(a.dataType).map(tag => PCmp(StatCmp(a.name, tag,
-        GraftTable.encode(tag,
-          CatalystTypeConverters.convertToScala(l.value, l.dataType)), strict, lower)))
-    def inList(a: AttributeReference, internal: Seq[Any]): Option[StatPred] =
-      GraftTable.statTag(a.dataType).map { tag =>
-        val encs = internal.filter(_ != null).map(v => GraftTable.encode(tag,
-          CatalystTypeConverters.convertToScala(v, a.dataType)))
-          .sortWith((x, y) => GraftTable.cmp(tag, x, y) < 0)
-        PIn(StatIn(a.name, tag, encs))
-      }
-    def compile(e: Expression): Option[StatPred] = e match {
-      case IsNotNull(a: AttributeReference) => Some(PNotNull(a.name))
-      case GreaterThan(a: AttributeReference, l: Literal) => cmp(a, l, strict = true, lower = true)
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => cmp(a, l, strict = false, lower = true)
-      case LessThan(a: AttributeReference, l: Literal) => cmp(a, l, strict = true, lower = false)
-      case LessThanOrEqual(a: AttributeReference, l: Literal) => cmp(a, l, strict = false, lower = false)
-      case EqualTo(a: AttributeReference, l: Literal) =>
-        for (lo <- cmp(a, l, strict = false, lower = true);
-             hi <- cmp(a, l, strict = false, lower = false)) yield PAnd(Seq(lo, hi))
-      case GreaterThan(l: Literal, a: AttributeReference) => cmp(a, l, strict = true, lower = false)
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => cmp(a, l, strict = false, lower = false)
-      case LessThan(l: Literal, a: AttributeReference) => cmp(a, l, strict = true, lower = true)
-      case LessThanOrEqual(l: Literal, a: AttributeReference) => cmp(a, l, strict = false, lower = true)
-      case EqualTo(l: Literal, a: AttributeReference) =>
-        for (lo <- cmp(a, l, strict = false, lower = true);
-             hi <- cmp(a, l, strict = false, lower = false)) yield PAnd(Seq(lo, hi))
-      case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        inList(a, vs.map(_.asInstanceOf[Literal].value))
-      case InSet(a: AttributeReference, hset) => inList(a, hset.toSeq)
-      case And(l, r) => for (x <- compile(l); y <- compile(r)) yield PAnd(Seq(x, y))
-      case Or(l, r) => for (x <- compile(l); y <- compile(r)) yield POr(Seq(x, y))
-      case _ => None
-    }
-    compile(cond)
-  }
-
-  /** Tri-state classification of one file against a stats predicate
-    * TREE — the exact-prune claim generalized past conjunctions to
-    * arbitrary AND/OR nesting (OR-of-ranges, OR of IN lists — the BI
-    * shapes round-13's claim degraded on). Leaf semantics per file:
-    *
-    *  - a comparison/IN over an all-NULL column is OUTSIDE at that LEAF
-    *    (no row satisfies it) — under OR another branch may still admit
-    *    the file, which the old conjunction classifier could not model;
-    *  - AND: any Outside → Outside; all Inside → Inside; else straddle;
-    *  - OR: any Inside → Inside; all Outside → Outside; else straddle;
-    *  - one straddling file kills the whole claim (stats answer, never
-    *    guess).
-    *
-    * Claim discipline (every ROW of an inside file must pass, because
-    * the claimed filters become the file prune with zero residual): an
-    * inside file must be null-free on EVERY involved column — a null
-    * row fails every comparison leaf it hits, and whether some OR
-    * branch rescues it is row-level knowledge stats don't carry — so
-    * nulls anywhere degrade to advisory. Deletion-vector files
-    * contribute liveRows (every live row passes); `forbidDv` bails on
-    * them instead for callers folding bounds. */
+  /** A file-stats predicate: what [[v1StatPred]] compiles pushed or
+    * translated `sources.Filter`s into, and [[classifyFilteredTree]]
+    * classifies files against. */
   private[graft] sealed trait StatPred
   private[graft] case class PCmp(cmp: StatCmp) extends StatPred
   private[graft] case class PIn(in: StatIn) extends StatPred
@@ -611,12 +331,39 @@ object GraftPrune extends PredicateHelper {
     case PNever => Set.empty
   }
 
+  /** The ONE inside/outside file classification behind the extension
+    * rule's filtered folds ([[rewriteFilteredCount]],
+    * [[rewriteGroupedMetaAgg]]) and the stock-session v2 exact-prune
+    * claim ([[graft.catalog.GraftMetaAggFold]]). Every data-bearing
+    * file must classify provably fully-inside (all its rows pass) or
+    * provably fully-outside (no row can pass); ONE straddler returns
+    * None — stats answer, never guess. Returns the exact filtered row
+    * count and the inside entries. Per file, against the tree:
+    *
+    *  - a comparison/IN over an all-NULL column is OUTSIDE at that LEAF
+    *    (no row satisfies it) — under OR another branch may still admit
+    *    the file;
+    *  - AND: any Outside → Outside; all Inside → Inside; else straddle;
+    *  - OR: any Inside → Inside; all Outside → Outside; else straddle;
+    *  - a file whose recorded stat tag disagrees with the leaf's (a
+    *    type-evolved history) straddles that leaf.
+    *
+    * Nulls: an inside file must be null-free on EVERY involved column —
+    * a null row fails every leaf it hits, and whether some OR branch
+    * rescues it is row-level knowledge stats don't carry. The one
+    * exception is `countOnly` (the caller reads only the count, never
+    * the inside files' rows or bounds) over a ONE-column tree: a NULL
+    * fails every leaf on that column and every AND/OR of them, so a
+    * dv-free inside file adds `rows − nulls`. Deletion-vector files
+    * contribute liveRows (every live row passes); `forbidDv` bails on
+    * them instead for callers folding bounds (the vector may have
+    * killed the extremum row). A tree of NULL comparisons alone classifies
+    * every file outside. */
   private[graft] def classifyFilteredTree(
       entries: Seq[graft.core.GraftTable.FileEntry],
-      pred: StatPred, forbidDv: Boolean)
+      pred: StatPred, forbidDv: Boolean, countOnly: Boolean = false)
       : Option[(Long, List[graft.core.GraftTable.FileEntry])] = {
     val involved = predCols(pred)
-    if (involved.isEmpty) return None
     var total = 0L
     var inside = List.empty[graft.core.GraftTable.FileEntry]
     sealed trait Cls
@@ -626,6 +373,7 @@ object GraftPrune extends PredicateHelper {
     entries.foreach { fe =>
       if (fe.rows > 0) {
         val st = involved.map(c => c -> fe.stats.getOrElse(c, return None)).toMap
+        val rowsMinusNulls = countOnly && involved.size == 1 && fe.dv.isEmpty
         def leafBounds(col: String, tag: String): Option[(String, String)] = {
           val s = st(col)
           if (s.t != tag) None // type-evolved history — treated as straddle below
@@ -637,6 +385,7 @@ object GraftPrune extends PredicateHelper {
             val s = st(c)
             if (s.nulls == 0L) Inside
             else if (s.min.isEmpty && s.max.isEmpty) Outside // all-NULL
+            else if (rowsMinusNulls) Inside // every non-null row passes
             else Straddle
           case PCmp(c) => leafBounds(c.col, c.tag) match {
             case None => if (st(c.col).min.isEmpty && st(c.col).max.isEmpty &&
@@ -676,9 +425,10 @@ object GraftPrune extends PredicateHelper {
         eval(pred) match {
           case Outside => ()
           case Inside =>
-            if (st.values.exists(_.nulls != 0L)) return None // row-level unknown
+            val nulls = st.values.map(_.nulls).sum
+            if (nulls != 0L && !rowsMinusNulls) return None // row-level unknown
             if (forbidDv && fe.dv.isDefined) return None
-            total += (if (fe.dv.isDefined) fe.liveRows else fe.rows)
+            total += (if (fe.dv.isDefined) fe.liveRows else fe.rows - nulls)
             inside ::= fe
           case Straddle => return None
         }
@@ -721,54 +471,6 @@ object GraftPrune extends PredicateHelper {
     }
     val ps = filters.map(f => compile(f).getOrElse(return None))
     if (ps.isEmpty) None else Some(if (ps.size == 1) ps.head else PAnd(ps))
-  }
-
-  /** Translate a pushed V1 conjunction into [[StatCmp]]s + IS-NOT-NULL
-    * columns against `schema` — the stock-session twin of
-    * [[rewriteFilteredCount]]'s catalyst parse. EVERY filter must be a
-    * recognized shape over a stats-tagged TOP-LEVEL column with a
-    * non-null literal, else None (the caller keeps the filters
-    * residual — correct, just unfolded). V1 shapes always carry the
-    * attribute on the left and external Scala values. */
-  private[graft] def v1StatCmps(schema: org.apache.spark.sql.types.StructType,
-      filters: Seq[org.apache.spark.sql.sources.Filter])
-      : Option[(Seq[StatCmp], Set[String], Seq[StatIn])] = {
-    import org.apache.spark.sql.sources._
-    var cmps = List.empty[StatCmp]
-    var notNulls = Set.empty[String]
-    var inLists = List.empty[StatIn]
-    def add(a: String, v: Any, strict: Boolean, lower: Boolean): Boolean =
-      v != null && schema.fields.find(_.name == a).exists { f =>
-        GraftTable.statTag(f.dataType).exists { tag =>
-          cmps ::= StatCmp(a, tag, GraftTable.encode(tag, v), strict, lower); true
-        }
-      }
-    // IN lists (the second-most-common BI probe after BETWEEN): list
-    // values encode into the stat domain; a NULL member contributes no
-    // match (x IN (…, NULL) is never TRUE for a non-member) so it just
-    // drops from the list. An ALL-null list means zero rows pass — an
-    // empty StatIn, which classifyFiltered's inFailed marks outside for
-    // every file.
-    def addIn(a: String, vs: Array[Any]): Boolean =
-      schema.fields.find(_.name == a).exists { f =>
-        GraftTable.statTag(f.dataType).exists { tag =>
-          val encs = vs.filter(_ != null).map(GraftTable.encode(tag, _)).toSeq
-            .sortWith((x, y) => GraftTable.cmp(tag, x, y) < 0)
-          inLists ::= StatIn(a, tag, encs); true
-        }
-      }
-    val ok = filters.forall {
-      case IsNotNull(a) if schema.fieldNames.contains(a) => notNulls += a; true
-      case GreaterThan(a, v) => add(a, v, strict = true, lower = true)
-      case GreaterThanOrEqual(a, v) => add(a, v, strict = false, lower = true)
-      case LessThan(a, v) => add(a, v, strict = true, lower = false)
-      case LessThanOrEqual(a, v) => add(a, v, strict = false, lower = false)
-      case EqualTo(a, v) =>
-        add(a, v, strict = false, lower = true) && add(a, v, strict = false, lower = false)
-      case In(a, vs) => addIn(a, vs)
-      case _ => false
-    }
-    if (ok) Some((cmps, notNulls, inLists)) else None
   }
 
   /** The ONE manifest fold behind BOTH metadata-aggregate surfaces —
@@ -892,11 +594,11 @@ object GraftPrune extends PredicateHelper {
 
   /** The GROUP-BY twin of [[rewriteMetaAgg]]/[[rewriteFilteredCount]]:
     * `SELECT k, count(*) / count(c) / min / max … [WHERE recognized
-    * conjunction] GROUP BY k` over a graft scan becomes a
+    * predicate] GROUP BY k` over a graft scan becomes a
     * [[LocalRelation]] of manifest-folded rows when the layout is
     * partition-shaped on the grouping columns ([[foldGroupedMetaAgg]])
     * and — under WHERE — every file classifies cleanly
-    * ([[classifyFiltered]], the exact-prune discipline: inside files
+    * ([[classifyFilteredTree]], the exact-prune discipline: inside files
     * contribute whole, outside files nothing, one straddler bails).
     * At 100 TB this answers the second-most-common BI probe
     * (`GROUP BY day/enum` rollups) with one manifest read. */
@@ -1017,23 +719,14 @@ object GraftPrune extends PredicateHelper {
           e.transform { case x: AttributeReference if x.exprId == a.exprId =>
             Literal(v, a.dataType) }.eval()))
     }
-    // WHERE: classify every file provably in/out (count discipline is
-    // requireNullFree — every row of an inside file must pass, they
-    // contribute whole files to their groups); no straddlers
+    // WHERE: classify every file provably in/out (inside files
+    // contribute whole files to their groups, so every row must pass);
+    // no straddlers
     val entries = condOpt match {
       case None => allEntries
-      case Some(cond) => catalystStatCmps(cond) match {
-        case Some((cmps, notNulls, nullCmp)) =>
-          if (nullCmp) Nil // predicate can never hold → zero groups
-          else classifyFiltered(allEntries, cmps, notNulls,
-            requireNullFree = true, forbidDv = reqs.exists(_.isInstanceOf[BoundReq]))
-            .getOrElse(return None)._2
-        case None => // OR shapes: the tri-state tree
-          val pred = catalystStatPred(cond).getOrElse(return None)
-          classifyFilteredTree(allEntries, pred,
-            forbidDv = reqs.exists(_.isInstanceOf[BoundReq]))
-            .getOrElse(return None)._2
-      }
+      case Some(cond) =>
+        classifyFilteredTree(allEntries, statPredOf(leaf, cond).getOrElse(return None),
+          forbidDv = reqs.exists(_.isInstanceOf[BoundReq])).getOrElse(return None)._2
     }
     val folded = foldGroupedMetaAgg(entries, specs.map(_._2), reqs)
       .getOrElse(return None)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.GraftTable
-import graft.core.GraftTable.{ColRange, FileEntry, Manifest}
+import graft.core.GraftTable.{ColRange, ColStats, Manifest}
 
 /** BATCH READ of a GraftTable via `format("graft")` — the batch half of
   * the DataSource registration ([[GraftStreamSource]] carries the
@@ -91,25 +91,31 @@ object GraftBatchRead {
     * probe [min,max], point probes additionally hit the blooms (one
     * lazy probe-hash job per IN column, paid only when some file
     * actually carries a bloom), fed from the `sources.Filter` shapes a
-    * ScanBuilder receives. Conservative: anything unexpected keeps
-    * everything (stats only ever PRUNE). Used by the [[GraftBatch]]
-    * split planner and the scan's statistics. */
-  private[graft] def keepByV1Filters(spark: SparkSession,
-      logical: StructType, entries: Seq[FileEntry],
-      filters: Array[Filter]): Seq[FileEntry] = {
+    * ScanBuilder receives. `statsOf` looks up a file's per-column stats
+    * (empty when none are known: the file is kept); it is never called
+    * when no filter yields a range or point probe. Conservative:
+    * anything unexpected keeps everything (stats only ever PRUNE). Used
+    * by the [[GraftBatch]] split planner, the scan's statistics and
+    * [[graft.plans.GraftPrune]]'s plain-parquet rule, whose files are
+    * paths. */
+  private[graft] def keepByV1Filters[T](spark: SparkSession, logical: StructType,
+      files: Seq[T], filters: Array[Filter])(statsOf: T => Map[String, ColStats]): Seq[T] = {
     try {
       val ranges = filters.toSeq.flatMap(v1Ranges)
       val points = filters.toSeq.flatMap(v1Points(logical, _))
+      if (ranges.isEmpty && points.isEmpty) return files
       val hashCache = scala.collection.mutable.HashMap.empty[String, Any => Seq[Long]]
       def hashesFor(c: String, vs: Seq[Any]): Any => Seq[Long] =
         hashCache.getOrElseUpdate(c, {
           lazy val h = GraftTable.probeHashes(spark, logical(c).dataType, vs, GraftTable.BloomK)
           v => h(v)
         })
-      entries.filter(fe => GraftTable.mayMatch(fe.stats, ranges) &&
-        points.forall { case (c, vs) =>
-          GraftTable.mayContainIn(fe.stats, c, vs, hashesFor(c, vs)) })
-    } catch { case scala.util.control.NonFatal(_) => entries }
+      files.filter { f =>
+        val stats = statsOf(f)
+        GraftTable.mayMatch(stats, ranges) && points.forall { case (c, vs) =>
+          GraftTable.mayContainIn(stats, c, vs, hashesFor(c, vs)) }
+      }
+    } catch { case scala.util.control.NonFatal(_) => files }
   }
 
   private[graft] def v1Ranges(f: Filter): Seq[ColRange] = f match {

@@ -119,7 +119,7 @@ private[graft] class GraftBatch(spark: SparkSession, path: String, m: Manifest,
     * never add one back) and, when a runtime file-set filter arrived,
     * the file-identity intersect. */
   @transient private[graft] lazy val kept: Seq[FileEntry] = {
-    val statKept = GraftBatchRead.keepByV1Filters(spark, logical, base, dataFilters)
+    val statKept = GraftBatchRead.keepByV1Filters(spark, logical, base, dataFilters)(_.stats)
     keepUris match {
       case Some(set) => statKept.filter(fe =>
         set(new HPath(new File(GraftTable.resolveData(path, fe)).toURI).toString))

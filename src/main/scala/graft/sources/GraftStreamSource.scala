@@ -494,7 +494,7 @@ private[graft] class GraftMicroBatchStream(path: String, tableSchema: StructType
       val eligible = parts.flatMap(_._2).groupBy(_.path).map(_._2.head).toSeq
       val kept = GraftBatchRead.keepByV1Filters(
         org.apache.spark.sql.SparkSession.active, tableSchema, eligible,
-        pruneFilters).map(_.path).toSet
+        pruneFilters)(_.stats).map(_.path).toSet
       parts.collect { case (p, tag) if tag.forall(fe => kept(fe.path)) => p }.toArray
     }
   }

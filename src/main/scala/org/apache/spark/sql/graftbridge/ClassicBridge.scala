@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 /** Minimal bridge into the `private[sql]` classic-session internals the
   * SQL DML router needs (the same seam Delta/Iceberg open with their
   * own `org.apache.spark.sql.*` shim files): wrap a Catalyst expression
-  * as a public [[Column]], and resolve a parsed logical plan to a
-  * [[DataFrame]]. Nothing else crosses this boundary. */
+  * as a public [[Column]], resolve a parsed logical plan to a
+  * [[DataFrame]], translate a predicate the way filter pushdown does,
+  * and clone a session. */
 object ClassicBridge {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
@@ -19,6 +20,19 @@ object ClassicBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Spark's own Catalyst → `sources.Filter` translator, the one V2
+    * filter pushdown runs: `InSet` becomes `In`, a literal on the left
+    * flips, values are external Scala values; top-level columns only.
+    * None when any part of `e` has no `sources.Filter` form. */
+  def translateFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy.translateFilter(
+      e, supportNestedPredicatePushdown = false)
+
+  /** A child of `spark` carrying its confs, catalog, cache and optimizer
+    * hooks; changes to the child never reach `spark`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 
   /** Rebind a streaming micro-batch's ALREADY-COMPUTED rows as a batch
     * DataFrame (the `Sink.addBatch` contract hands a DF that cannot be

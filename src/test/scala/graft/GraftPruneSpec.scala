@@ -426,4 +426,19 @@ class GraftPruneSpec extends AnyFunSuite with SparkSpecBase {
       assert(canon(q) == expect)
     }
   }
+
+  test("registry queries leave the caller's optimizer as they found it") {
+    val sf = sys.env.getOrElse("GRAFT_TESTDATA", sys.props("user.home") + "/testdata") +
+      "/sf0.001"
+    assume(new java.io.File(sf).isDirectory, s"testdata not present at $sf")
+    // a fresh session: no rule installed by an earlier test
+    val s = spark.newSession()
+    Seq("q139_ruled_bloom_scan", "q134_ruled_scan", "q171_meta_agg",
+        "q172_meta_count_filtered", "q184_meta_year_rollup").foreach { q =>
+      val before = s.experimental.extraOptimizations
+      SparkEntry.queries(q)(s, sf).collect()
+      assert(s.experimental.extraOptimizations == before,
+        s"$q changed the caller's optimizer: ${s.experimental.extraOptimizations}")
+    }
+  }
 }

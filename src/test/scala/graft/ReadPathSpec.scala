@@ -169,13 +169,18 @@ class ReadPathSpec extends AnyFunSuite with SparkSpecBase {
     assert(changes.added.size == 3, s"staged ${changes.added.size} files for 3 touched")
   }
 
-  test("no second read path in src/main: no V1 relation, no hidden metadata struct") {
+  /** The library's Scala sources, read from the project root. */
+  private def mainSources(): Seq[File] = {
     val root = new File("src/main/scala")
     assert(root.isDirectory, s"run from the project root (cwd ${new File(".").getAbsolutePath})")
-    val banned = """HadoopFsRelation\(|baseRelationToDataFrame|_metadata\.file_path|_metadata\.row_index""".r
     def sources(f: File): Seq[File] =
       if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty[File]).toSeq.flatMap(sources)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    sources(root)
+  }
+
+  test("no second read path in src/main: no V1 relation, no hidden metadata struct") {
+    val banned = """HadoopFsRelation\(|baseRelationToDataFrame|_metadata\.file_path|_metadata\.row_index""".r
     // GraftPrune's plain-parquet rule rewrites hand-built parquet scans of
     // a data dir: from its `def` to the end of its body
     def pruneRule(lines: Seq[String]): Range = {
@@ -183,7 +188,7 @@ class ReadPathSpec extends AnyFunSuite with SparkSpecBase {
       if (start < 0) 0 until 0
       else start to lines.indexWhere(_.startsWith("  }"), start)
     }
-    val hits = sources(root).flatMap { f =>
+    val hits = mainSources().flatMap { f =>
       val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       val lines = text.split("\n", -1).toSeq
       val allowed = if (f.getName == "GraftPrune.scala") pruneRule(lines) else 0 until 0
@@ -192,5 +197,22 @@ class ReadPathSpec extends AnyFunSuite with SparkSpecBase {
         .map(i => s"${f.getPath}:${i + 1}: ${lines(i).trim}")
     }
     assert(hits.isEmpty, "GraftTable reads must plan the GraftBatch scan:\n" + hits.mkString("\n"))
+  }
+
+  test("one predicate translator in src/main: no Catalyst comparison pattern over " +
+      "an attribute and a literal") {
+    // stats consumers read sources.Filters (Spark's pushdown translator
+    // makes them from Catalyst); a `case GreaterThan(a: AttributeReference,
+    // l: Literal)`-style extractor is a second translator
+    val banned = ("""\b(GreaterThan|GreaterThanOrEqual|LessThan|LessThanOrEqual|EqualTo)\(\s*""" +
+      """(\w+\s*:\s*AttributeReference\s*,\s*(\w+\s*:\s*)?Literal\b""" +
+      """|(\w+\s*:\s*)?Literal(\([^)]*\))?\s*,\s*\w+\s*:\s*AttributeReference)""").r
+    val hits = mainSources().flatMap { f =>
+      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n", -1)
+      lines.indices.filter(i => banned.findFirstIn(lines(i)).isDefined)
+        .map(i => s"${f.getPath}:${i + 1}: ${lines(i).trim}")
+    }
+    assert(hits.isEmpty, "translate with ClassicBridge.translateFilter and compile " +
+      "with GraftPrune.v1StatPred instead:\n" + hits.mkString("\n"))
   }
 }
