@@ -2817,8 +2817,10 @@ object Queries {
     * through `PullOutGroupingExpressions`' extracted shape): per file,
     * trunc(min) == trunc(max) proves the whole file lands in one
     * period, so each year's aggregates fold from that year's file
-    * stats — zero files read (GroupedMetaAggSpec pins the finer-grain
-    * bail; PlanAudit pins the plan). The most common BI rollup a
+    * stats — zero files read (GroupedMetaAggSpec pins the fold on DATE
+    * and TIMESTAMP_NTZ columns — `o_orderdate` is the latter — under a
+    * fixed-offset zone, the scan under a DST zone, and the finer-grain
+    * bail). The most common BI rollup a
     * date-partitioned 100 TB table serves. The rollup plans in a
     * [[graft.plans.GraftPrune.ruled]] child session, so `s` keeps its
     * optimizer. */

@@ -701,22 +701,21 @@ object GraftTable {
     else schema.fields.toSeq.filter(f => statTag(f.dataType).isDefined).take(DefaultStatsCols)
   }
 
-  /** Write `df` into a hidden stage dir, move the part files into `data/`
-    * under commit-unique names, and return their manifest entries with
-    * stats. The stats pass re-reads only the staged files (columnar, just
-    * the stats columns) — the post-write pass a format without in-flight
-    * footer aggregation pays; O(batch), never O(table). Spark still
-    * writes one zero-row part file for an empty frame; it is deleted and
-    * gets no entry (its row count came with the stats, so no extra job),
-    * so an empty write commits its parent's file list verbatim. */
+  /** Write `df` into a hidden stage dir, one file per non-empty
+    * partition, then hand the files to [[stageWritten]] (stats, move
+    * into `data/` under commit-unique names, CHECKs against `checks`).
+    * The files come from the same executor writer as the v2 write
+    * surfaces ([[graft.sources.GraftRowFileWriter]] over
+    * [[org.apache.spark.sql.graftbridge.ClassicBridge.parquetWriteConf]]),
+    * in one job over `df`'s rows; an empty partition opens no file, so
+    * an empty write stages nothing and commits its parent's file list
+    * verbatim. */
   private def stageFiles(df: DataFrame, path: String, statsCols: Seq[String],
-      clusterBy: Option[(Column, Int)], bloomCols: Seq[String] = Nil,
-      bucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
+      clusterBy: Option[(Column, Int)], checks: Map[String, String],
+      bloomCols: Seq[String] = Nil, bucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
     val spark = df.sparkSession
-    enforceChecks(df, path)
-    val commitId = java.util.UUID.randomUUID.toString.take(8)
-    val stage = new File(path, ".stage-" + commitId)
-    TableIO.clearDir(stage.toString)
+    val stage = new File(path, ".stage-" + java.util.UUID.randomUUID.toString.take(8))
+    stage.mkdirs()
     // a declared `graft.bucketBy` keeps EVERY driver-staged write path
     // (append / upsert / SQL INSERT) single-bucket-per-file — the
     // repartition IS Spark's shuffle assignment, so the id recorded by
@@ -737,24 +736,32 @@ object GraftTable {
         case None => df
       }
     }
-    // timestamps write as standard INT64 micros, never legacy INT96:
-    // INT96 footers carry no usable min/max (the footer-stats fast path
-    // would fall back to a re-read job for every timestamp column), and
-    // micros is what every modern engine (and this format's own readers)
-    // expects. The key is session conf, not a writer option — so the
-    // staged write runs on a cached micros-pinned CLONE of the session
-    // (never a mutate/restore on the user's own conf, which races
-    // concurrent writers and leaks into unrelated writes).
-    org.apache.spark.sql.graftbridge.ClassicBridge.withMicrosTimestampWrites(out)
-      .write.mode("overwrite").parquet(stage.toString)
-    val parts = Option(stage.listFiles).getOrElse(Array.empty[File])
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).sortBy(_.getName)
-    if (parts.isEmpty) { TableIO.clearDir(stage.toString); return Nil }
-    val (entries, empty) = stagePartEntries(spark, df.schema, path, commitId, parts.toSeq,
-      statsCols, bloomCols, effBucket).partition(_.rows > 0)
-    empty.foreach(fe => new File(resolveData(path, fe)).delete(): Unit)
-    TableIO.clearDir(stage.toString)
-    entries
+    val conf = org.apache.spark.sql.graftbridge.ClassicBridge.parquetWriteConf(spark, df.schema)
+    val dir = stage.getAbsolutePath
+    try {
+      val parts = org.apache.spark.sql.graftbridge.ClassicBridge.writePartitions(out) {
+        (task, rows) =>
+          val w = new graft.sources.GraftRowFileWriter(dir, "part", task.partitionId,
+            task.taskAttemptId, conf)
+          try { rows.foreach(w.write); w.commit() }
+          catch { case e: Throwable => w.abort(); throw e }
+      }.collect { case graft.sources.GraftWrittenFile(f) if f.nonEmpty => new File(f) }
+      stageWritten(spark, path, df.schema, parts.toSeq, checks, statsCols, bloomCols, effBucket)
+    } finally TableIO.clearDir(stage.toString)
+  }
+
+  /** The stage step every write shares, over parquet files already on
+    * disk (from [[stageFiles]] or straight from executor DataWriters):
+    * stats, move into `data/` ([[stagePartEntries]]), then the one CHECK
+    * step ([[checkStaged]]) against `checks`. */
+  private def stageWritten(spark: SparkSession, path: String, schema: StructType,
+      parts: Seq[File], checks: Map[String, String], statsCols: Seq[String],
+      bloomCols: Seq[String], bucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
+    if (parts.isEmpty) return Nil
+    val staged = stagePartEntries(spark, schema, path,
+      java.util.UUID.randomUUID.toString.take(8), parts, statsCols, bloomCols, bucket)
+    checkStaged(spark, path, schema, staged, checks)
+    staged
   }
 
   /** FOOTER-DERIVED file stats — the zero-job fast path under
@@ -935,13 +942,13 @@ object GraftTable {
       }
     }
 
-  /** The shared tail of every staged write: given parquet part files
-    * already on disk (the driver's staged `df.write`, or files streamed
-    * straight from executor DataWriters — [[commitStreamFiles]]), run
-    * the stats/bloom pass over exactly those files and MOVE them into
-    * `data/` under commit-unique names, returning their manifest
-    * entries. O(batch) reads, column-pruned to the indexed columns;
-    * never O(table). */
+  /** The stats half of [[stageWritten]]: given parquet files the one
+    * executor writer ([[graft.sources.GraftRowFileWriter]]) already
+    * wrote — for [[stageFiles]] or for a v2 batch, streaming or
+    * row-level write — run the stats/bloom pass over exactly those
+    * files and MOVE them into `data/` under commit-unique names,
+    * returning their manifest entries. O(batch) reads, column-pruned to
+    * the indexed columns; never O(table). */
   private def stagePartEntries(spark: SparkSession, schema: StructType,
       path: String, commitId: String, parts: Seq[File], explicitStats: Seq[String],
       explicitBlooms: Seq[String],
@@ -1075,34 +1082,38 @@ object GraftTable {
   private def activeChecks(path: String): Map[String, String] =
     currentManifest(path).flatMap(_.checks).getOrElse(Map.empty)
 
-  /** Write-time CHECK enforcement (SQL semantics: a row violates only
-    * when the predicate evaluates FALSE — NULL passes). One limit-1 job
-    * over the batch when any checks are active, zero cost otherwise;
-    * every staged write (append/overwrite/COW rewrite/stream append/
-    * evolve) funnels through here. Staging validates the then-current
-    * set; the retry loops RE-validate whenever the rebased head carries
+  /** The one CHECK step of every write (SQL semantics: a row violates
+    * only when the predicate evaluates FALSE — NULL passes): one limit-1
+    * job over the STAGED files themselves (never a recompute of the
+    * frame that produced them) when any checks are given, zero cost
+    * otherwise; a violation deletes those files before it throws. The
+    * stage step runs it against the checks read before staging; the
+    * commit loops run it again whenever the head they rebase on carries
     * a different set (a concurrent [[addCheck]] scanned the table it
     * saw, never our uncommitted stage — without the re-check the loser
-    * would attach a check it never ran, and addCheck's whole-table
-    * invariant would be silently false). The COW paths need no loop
-    * guard: any concurrent commit fails them loudly. */
-  private def enforceChecks(df: DataFrame, path: String): Unit =
-    enforceChecks(df, path, activeChecks(path))
-
-  private def enforceChecks(df: DataFrame, path: String,
-      active: Map[String, String]): Unit = {
-    if (active.isEmpty) return
-    val viol = active.toSeq.map { case (n, sql) => (n, expr(sql) <=> lit(false)) }
-    val hit = df.filter(viol.map(_._2).reduce(_ || _))
-      .select(viol.map { case (n, c) => c.as(n) }: _*).head(1)
-    hit.headOption.foreach { row =>
-      val names = viol.map(_._1).zipWithIndex.collect { case (n, i) if row.getBoolean(i) => n }
-      throw new IllegalArgumentException(
-        s"write to '$path' violates CHECK constraint(s) " +
-          names.map(n => s"$n [${active(n)}]").mkString(", ") +
-          " — fix the batch or dropCheck first")
+    * would attach a check it never ran). */
+  private def checkStaged(spark: SparkSession, path: String, schema: StructType,
+      staged: Seq[FileEntry], checks: Map[String, String]): Unit =
+    if (staged.nonEmpty && checks.nonEmpty) {
+      val viol = checks.toSeq.map { case (n, sql) => (n, expr(sql) <=> lit(false)) }
+      val hit =
+        try spark.read.schema(schema).parquet(staged.map(resolveData(path, _)): _*)
+          .filter(viol.map(_._2).reduce(_ || _))
+          .select(viol.map { case (n, c) => c.as(n) }: _*).head(1)
+        catch { case e: Throwable => reclaim(path, staged); throw e }
+      hit.headOption.foreach { row =>
+        reclaim(path, staged)
+        val names = viol.map(_._1).zipWithIndex.collect { case (n, i) if row.getBoolean(i) => n }
+        throw new IllegalArgumentException(
+          s"write to '$path' violates CHECK constraint(s) " +
+            names.map(n => s"$n [${checks(n)}]").mkString(", ") +
+            " — fix the batch or dropCheck first")
+      }
     }
-  }
+
+  /** Delete staged files a refused commit leaves in no manifest. */
+  private def reclaim(path: String, staged: Seq[FileEntry]): Unit =
+    staged.foreach(fe => new File(resolveData(path, fe)).delete(): Unit)
 
   private def sameSchema(ddl: String, schema: StructType): Boolean = {
     val a = StructType.fromDDL(ddl).fields.map(f => (f.name, f.dataType)).toSeq
@@ -1122,52 +1133,77 @@ object GraftTable {
 
   private def writeOp(df: DataFrame, path: String, op: String, statsCols: Seq[String],
       clusterBy: Option[(Column, Int)], bloomCols: Seq[String] = Nil,
-      bucket: Option[(Seq[String], Int)] = None): Long = {
-    var validatedChecks = activeChecks(path)
-    val staged = stageFiles(df, path, statsCols, clusterBy, bloomCols, bucket)
+      bucket: Option[(Seq[String], Int)] = None,
+      mark: Option[(String, Long)] = None): Long = {
+    val checks = activeChecks(path)
+    commitStaged(df.sparkSession, path, op, df.schema,
+      stageFiles(df, path, statsCols, clusterBy, checks, bloomCols, bucket), checks, mark)
+  }
+
+  /** The ONE CAS loop behind every staged `overwrite`, `append` and
+    * `stream_append` — the Scala API ([[writeOp]]) and the v2 batch and
+    * streaming commits ([[commitWritten]]) alike: rebase `staged` on
+    * whatever head it finds until its conditional PUT wins. On each
+    * rebase it re-runs the CHECK step against a moved check set (on the
+    * staged files, never a recompute of the source frame). Appends and
+    * stream appends refuse a drop/rename fence (the overwrite/create
+    * paths reclaim a name deliberately; an append never does) and a
+    * schema that differs from the table's by name or type. A `mark`
+    * (stream id → batch id) makes the commit exactly-once: a head whose
+    * mark for that stream already reached the batch means a replay
+    * committed first, and the commit returns -1. Every refusal deletes
+    * the staged files. */
+  private def commitStaged(spark: SparkSession, path: String, op: String,
+      schema: StructType, staged: Seq[FileEntry], checked: Map[String, String],
+      mark: Option[(String, Long)]): Long = {
+    def refuse(e: Throwable): Nothing = { reclaim(path, staged); throw e }
+    val append = op != "overwrite"
+    var validated = checked
     betweenStageAndCommitForTests()
     var committed = -1L
     while (committed < 0) {
       val cur = currentManifest(path)
+      val marks = cur.flatMap(_.streamMarks)
+      if (mark.exists { case (id, b) => marks.flatMap(_.get(id)).exists(_ >= b) }) {
+        reclaim(path, staged)
+        return -1L
+      }
       val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        enforceChecks(df, path, curChecks)
-        validatedChecks = curChecks
+      if (curChecks != validated) {
+        checkStaged(spark, path, schema, staged, curChecks)
+        validated = curChecks
       }
-      val (inline, parentLeaves) = op match {
-        case "overwrite" => (staged, Nil)
-        case "append" =>
-          // a rebase that finds the table GONE behind a drop/rename
-          // fence must not quietly re-create it — the overwrite/create
-          // paths reclaim a name deliberately; an append never does
-          if (cur.isEmpty && tombstoned(path))
-            throw new IllegalStateException(
-              s"graft table '$path' was ${tombstoneReason(path)} — append aborted")
-          cur.foreach(m => require(sameSchema(m.schemaDdl, df.schema),
-            s"append schema mismatch vs '$path' v${m.version}: table has " +
-              s"[${m.schemaDdl}], append has [${df.schema.toDDL}] — overwrite to evolve"))
-          (cur.map(_.files).getOrElse(Nil) ++ staged,
-            cur.flatMap(_.leaves).getOrElse(Nil))
+      if (append && cur.isEmpty && tombstoned(path))
+        refuse(new IllegalStateException(
+          s"graft table '$path' was ${tombstoneReason(path)} — append aborted"))
+      cur.filter(m => append && !sameSchema(m.schemaDdl, schema)).foreach { m =>
+        refuse(new IllegalArgumentException(
+          s"$op schema mismatch vs '$path' v${m.version}: table has " +
+            s"[${m.schemaDdl}], append has [${schema.toDDL}] — overwrite to evolve"))
       }
-      val (files, leaves) = packCommit(path, inline, parentLeaves)
-      // append keeps the TABLE's declared schema (the batch conforms to
-      // it; it must not redefine it) — adopting the batch's DDL could
+      val (files, leaves) =
+        if (append) packCommit(path, cur.map(_.files).getOrElse(Nil) ++ staged,
+          cur.flatMap(_.leaves).getOrElse(Nil))
+        else packCommit(path, staged, Nil)
+      // an append keeps the TABLE's declared schema (the batch conforms
+      // to it; it must not redefine it) — adopting the batch's DDL could
       // flip an evolved always-nullable column to NOT NULL while old
       // files still null-fill it, poisoning every consumer that trusts
       // declared nullability (metadata count(col), join planning).
       // Nullability only ever WIDENS: a batch that declares a column
       // nullable relaxes the table's claim.
       val nextDdl = cur match {
-        case Some(m) if op == "append" =>
-          val batchNullable = df.schema.map(f => f.name -> f.nullable).toMap
+        case Some(m) if append =>
+          val batchNullable = schema.map(f => f.name -> f.nullable).toMap
           StructType(StructType.fromDDL(m.schemaDdl).fields.map(f =>
             f.copy(nullable = f.nullable ||
               batchNullable.getOrElse(f.name, f.nullable)))).toDDL
-        case _ => df.schema.toDDL
+        case _ => schema.toDDL
       }
       val next = Manifest(cur.map(_.version + 1).getOrElse(1L),
-        commitTs(cur), op, nextDdl, files, cur.flatMap(_.streamMarks), leaves,
-        Some(ChangeLog(logEntries(staged), Nil, truncate = op == "overwrite")),
+        commitTs(cur), op, nextDdl, files,
+        mark.map(marks.getOrElse(Map.empty) + _) orElse marks, leaves,
+        Some(ChangeLog(logEntries(staged), Nil, truncate = !append)),
         checks = cur.flatMap(_.checks), properties = cur.flatMap(_.properties))
       if (tryCommit(path, next)) committed = next.version
       // else: another writer took this version — rebase on its snapshot and retry
@@ -1242,8 +1278,8 @@ object GraftTable {
     // it instead of overwriting — no committed batch is ever dropped.
     var stagedAgainst: Option[Option[String]] = None
     var staged: Seq[FileEntry] = Nil
-    var stagedDf: DataFrame = df
-    var validatedChecks = activeChecks(path)
+    var stagedSchema: StructType = df.schema
+    var validatedChecks = Map.empty[String, String]
     var committed = -1L
     while (committed < 0) {
       val cur = currentManifest(path)
@@ -1251,19 +1287,19 @@ object GraftTable {
         case Some(c) => mergeInto(StructType.fromDDL(c.schemaDdl))
         case None => (df.schema, Nil)
       }
+      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
       if (!stagedAgainst.contains(cur.map(_.schemaDdl))) {
         val aligned = df.select(merged.fields.map { f =>
           if (df.columns.contains(f.name)) col(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         }.toSeq: _*)
-        validatedChecks = activeChecks(path)
-        staged = stageFiles(aligned, path, statsCols, None)
-        stagedDf = aligned
+        staged = stageFiles(aligned, path, statsCols, None, curChecks)
+        stagedSchema = aligned.schema
+        validatedChecks = curChecks
         stagedAgainst = Some(cur.map(_.schemaDdl))
       }
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
       if (curChecks != validatedChecks) {
-        enforceChecks(stagedDf, path, curChecks)
+        checkStaged(df.sparkSession, path, stagedSchema, staged, curChecks)
         validatedChecks = curChecks
       }
       // pre-existing files route each NEW column to a guaranteed-absent
@@ -1299,173 +1335,27 @@ object GraftTable {
     require(streamId.nonEmpty, "need a stable stream id")
     val hwm = currentManifest(path).flatMap(_.streamMarks).flatMap(_.get(streamId))
     if (hwm.exists(_ >= batchId)) return -1L
-    var validatedChecks = activeChecks(path)
-    val staged = stageFiles(df, path, statsCols, None, bloomCols)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
-      // re-check under the current snapshot: a racing replay of the same
-      // batch may have committed while we staged
-      if (cur.flatMap(_.streamMarks).flatMap(_.get(streamId)).exists(_ >= batchId))
-        return -1L
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        enforceChecks(df, path, curChecks)
-        validatedChecks = curChecks
-      }
-      cur.foreach(m => require(sameSchema(m.schemaDdl, df.schema),
-        s"append schema mismatch vs '$path' v${m.version}"))
-      val marks = cur.flatMap(_.streamMarks).getOrElse(Map.empty) + (streamId -> batchId)
-      val (files, leaves) = packCommit(path,
-        cur.map(_.files).getOrElse(Nil) ++ staged,
-        cur.flatMap(_.leaves).getOrElse(Nil))
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L), commitTs(cur),
-        "stream_append", df.schema.toDDL, files, Some(marks), leaves,
-        Some(ChangeLog(logEntries(staged), Nil)), checks = cur.flatMap(_.checks), properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
-    }
-    committed
+    writeOp(df, path, "stream_append", statsCols, None, bloomCols,
+      mark = Some(streamId -> batchId))
   }
 
-  /** EXACTLY-ONCE streaming commit of files ALREADY WRITTEN by
-    * executor-side `DataWriter` tasks — the V2 `StreamingWrite` half of
-    * [[appendStream]] (`writeStream.toTable("graft.ns.t")`,
-    * [[graft.sources.GraftStreamingWrite]]). The rows never pass
-    * through the driver: each task streamed its partition straight to a
-    * staged parquet file; this commit runs the same stats/bloom pass +
-    * move as every other write ([[stagePartEntries]] — O(batch)), then
-    * the same HWM-guarded CAS loop as [[appendStream]]. A replayed
-    * epoch (at-least-once delivery after a checkpoint/commit race)
-    * deletes its re-staged files and commits nothing; CHECK constraints
-    * enforce on a read-back of the staged files (one limit-1 job, only
-    * when checks are active). Returns the committed version, -1 for a
-    * skipped replay. */
-  def commitStreamFiles(spark: SparkSession, path: String, streamId: String,
-      batchId: Long, staged: Seq[File], schema: StructType,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
-    require(streamId.nonEmpty, "need a stable stream id")
-    def stagedDf = spark.read.schema(schema).parquet(staged.map(_.toString): _*)
-    def markOf(m: Option[Manifest]) = m.flatMap(_.streamMarks).flatMap(_.get(streamId))
-    if (markOf(currentManifest(path)).exists(_ >= batchId)) {
-      staged.foreach(_.delete()); return -1L
-    }
-    var validatedChecks = activeChecks(path)
-    if (staged.nonEmpty && validatedChecks.nonEmpty)
-      try enforceChecks(stagedDf, path, validatedChecks)
-      catch { case e: Throwable => staged.foreach(_.delete()); throw e }
-    val entries =
-      if (staged.isEmpty) Nil
-      else stagePartEntries(spark, schema, path,
-        java.util.UUID.randomUUID.toString.take(8), staged, statsCols, bloomCols)
-    def movedDf = spark.read.schema(schema).parquet(
-      entries.map(fe => new File(path, fe.path).toString): _*)
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
-      if (markOf(cur).exists(_ >= batchId)) {
-        // replay raced us after staging: the moved files are in data/
-        // but in no manifest — reclaim them now rather than waiting for
-        // vacuum
-        entries.foreach(fe => new File(path, fe.path).delete())
-        return -1L
-      }
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        if (entries.nonEmpty) enforceChecks(movedDf, path, curChecks)
-        validatedChecks = curChecks
-      }
-      cur.foreach(m => require(sameSchema(m.schemaDdl, schema),
-        s"streaming write schema mismatch vs '$path' v${m.version}"))
-      val marks = cur.flatMap(_.streamMarks).getOrElse(Map.empty) + (streamId -> batchId)
-      val (files, leaves) = packCommit(path,
-        cur.map(_.files).getOrElse(Nil) ++ entries,
-        cur.flatMap(_.leaves).getOrElse(Nil))
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L), commitTs(cur),
-        "stream_append", schema.toDDL, files, Some(marks), leaves,
-        Some(ChangeLog(logEntries(entries), Nil)), checks = cur.flatMap(_.checks),
-        properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
-    }
-    committed
-  }
-
-  /** The commit half of the DSv2 BATCH write
+  /** The commit half of the DSv2 BATCH and STREAMING writes
     * ([[graft.sources.GraftBatchWrite]] — stock-session `INSERT INTO` /
-    * `INSERT OVERWRITE` / CTAS on catalog names): fold files ALREADY
-    * WRITTEN by executor DataWriter tasks into the manifest. The rows
-    * never pass through the driver — the insert's own tasks streamed
-    * their partitions straight to staged parquet (for bucketed tables,
-    * under the write's required distribution, so every file is
-    * single-bucket and the layout survives). Same stats/bloom pass +
-    * move ([[stagePartEntries]] — O(batch), property-declared indexing
-    * included), same CHECK enforcement and CAS rebase semantics as the
-    * driver-staged [[append]]/[[overwrite]]. Returns the committed
-    * version. */
-  private[graft] def commitBatchFiles(spark: SparkSession, path: String,
-      stagedParts: Seq[File], schema: StructType, overwrite: Boolean,
-      statsCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil): Long = {
-    val op = if (overwrite) "overwrite" else "append"
-    var validatedChecks = activeChecks(path)
-    if (stagedParts.nonEmpty && validatedChecks.nonEmpty) {
-      def stagedDf = spark.read.schema(schema).parquet(stagedParts.map(_.toString): _*)
-      try enforceChecks(stagedDf, path, validatedChecks)
-      catch { case e: Throwable => stagedParts.foreach(_.delete()); throw e }
-    }
-    val staged =
-      if (stagedParts.isEmpty) Nil
-      else stagePartEntries(spark, schema, path,
-        java.util.UUID.randomUUID.toString.take(8), stagedParts, statsCols, bloomCols)
-    def movedDf = spark.read.schema(schema).parquet(
-      staged.map(fe => new File(path, fe.path).toString): _*)
-    def reclaim(): Unit = staged.foreach(fe => new File(path, fe.path).delete())
-    betweenStageAndCommitForTests()
-    var committed = -1L
-    while (committed < 0) {
-      val cur = currentManifest(path)
-      val curChecks = cur.flatMap(_.checks).getOrElse(Map.empty)
-      if (curChecks != validatedChecks) {
-        if (staged.nonEmpty)
-          try enforceChecks(movedDf, path, curChecks)
-          catch { case e: Throwable => reclaim(); throw e }
-        validatedChecks = curChecks
-      }
-      val (inline, parentLeaves) = op match {
-        case "overwrite" => (staged, Nil)
-        case _ =>
-          if (cur.isEmpty && tombstoned(path)) {
-            reclaim()
-            throw new IllegalStateException(
-              s"graft table '$path' was ${tombstoneReason(path)} — append aborted")
-          }
-          cur.foreach { m =>
-            if (!sameSchema(m.schemaDdl, schema)) {
-              reclaim()
-              throw new IllegalArgumentException(
-                s"append schema mismatch vs '$path' v${m.version}: table has " +
-                  s"[${m.schemaDdl}], append has [${schema.toDDL}] — overwrite to evolve")
-            }
-          }
-          (cur.map(_.files).getOrElse(Nil) ++ staged,
-            cur.flatMap(_.leaves).getOrElse(Nil))
-      }
-      val (files, leaves) = packCommit(path, inline, parentLeaves)
-      // same nullability discipline as writeOp: append keeps the table's
-      // declared schema, nullability only ever widens
-      val nextDdl = cur match {
-        case Some(m) if op == "append" =>
-          val batchNullable = schema.map(f => f.name -> f.nullable).toMap
-          StructType(StructType.fromDDL(m.schemaDdl).fields.map(f =>
-            f.copy(nullable = f.nullable ||
-              batchNullable.getOrElse(f.name, f.nullable)))).toDDL
-        case _ => schema.toDDL
-      }
-      val next = Manifest(cur.map(_.version + 1).getOrElse(1L),
-        commitTs(cur), op, nextDdl, files, cur.flatMap(_.streamMarks), leaves,
-        Some(ChangeLog(logEntries(staged), Nil, truncate = op == "overwrite")),
-        checks = cur.flatMap(_.checks), properties = cur.flatMap(_.properties))
-      if (tryCommit(path, next)) committed = next.version
-    }
-    committed
+    * `INSERT OVERWRITE` / CTAS on catalog names;
+    * [[graft.sources.GraftStreamingWrite]] — `writeStream.toTable`):
+    * fold files ALREADY WRITTEN by executor DataWriter tasks into the
+    * manifest through the same two steps as the driver-staged
+    * [[append]]/[[overwrite]]/[[appendStream]] — [[stageWritten]] (stats,
+    * move, CHECKs) and the [[commitStaged]] CAS loop. The rows never
+    * pass through the driver. `op` is `overwrite`, `append` or
+    * `stream_append`; a stream append carries its (stream id, epoch)
+    * `mark`, and a replayed epoch deletes its files and returns -1. */
+  private[graft] def commitWritten(spark: SparkSession, path: String, op: String,
+      parts: Seq[File], schema: StructType, statsCols: Seq[String] = Nil,
+      bloomCols: Seq[String] = Nil, mark: Option[(String, Long)] = None): Long = {
+    val checks = activeChecks(path)
+    commitStaged(spark, path, op, schema,
+      stageWritten(spark, path, schema, parts, checks, statsCols, bloomCols), checks, mark)
   }
 
   /** The commit half of a DSv2 GROUP-BASED row-level operation
@@ -1493,18 +1383,7 @@ object GraftTable {
     val removedDv: Map[String, Option[DvRef]] =
       removed.map(fe => fe.path -> fe.dv).toMap
     var validatedChecks = activeChecks(path)
-    if (stagedParts.nonEmpty && validatedChecks.nonEmpty) {
-      def stagedDf = spark.read.schema(schema).parquet(stagedParts.map(_.toString): _*)
-      try enforceChecks(stagedDf, path, validatedChecks)
-      catch { case e: Throwable => stagedParts.foreach(_.delete()); throw e }
-    }
-    val entries =
-      if (stagedParts.isEmpty) Nil
-      else stagePartEntries(spark, schema, path,
-        java.util.UUID.randomUUID.toString.take(8), stagedParts, Nil, Nil)
-    def reclaim(): Unit = entries.foreach(fe => new File(path, fe.path).delete())
-    def movedDf = spark.read.schema(schema).parquet(
-      entries.map(fe => new File(path, fe.path).toString): _*)
+    val entries = stageWritten(spark, path, schema, stagedParts, validatedChecks, Nil, Nil)
     betweenStageAndCommitForTests()
     try {
       var committed = -1L
@@ -1513,7 +1392,7 @@ object GraftTable {
           throw new IllegalStateException(s"graft table '$path' vanished mid-operation"))
         val curChecks = cur.checks.getOrElse(Map.empty)
         if (curChecks != validatedChecks) {
-          if (entries.nonEmpty) enforceChecks(movedDf, path, curChecks)
+          checkStaged(spark, path, schema, entries, curChecks)
           validatedChecks = curChecks
         }
         val loaded = cur.leaves.getOrElse(Nil).map(l => l -> loadLeaf(path, l))
@@ -1543,7 +1422,7 @@ object GraftTable {
         if (tryCommit(path, next)) committed = next.version
       }
       committed
-    } catch { case e: Throwable => reclaim(); throw e }
+    } catch { case e: Throwable => reclaim(path, entries); throw e }
   }
 
   /** The commit half of a DSv2 DELTA-BASED (merge-on-read) row-level
@@ -1563,13 +1442,6 @@ object GraftTable {
   private[graft] def applyDeltaCommit(spark: SparkSession, path: String,
       pinned: Manifest, posParts: Seq[File], dataParts: Seq[File],
       schema: StructType, op: String): Long = {
-    var validatedChecks = activeChecks(path)
-    if (dataParts.nonEmpty && validatedChecks.nonEmpty) {
-      def stagedDf = spark.read.schema(schema).parquet(dataParts.map(_.toString): _*)
-      try enforceChecks(stagedDf, path, validatedChecks)
-      catch { case e: Throwable =>
-        (posParts ++ dataParts).foreach(_.delete()); throw e }
-    }
     val cur = currentManifest(path).getOrElse(
       throw new IllegalStateException(s"graft table '$path' vanished mid-operation"))
     val loaded = cur.leaves.getOrElse(Nil).map(l => l -> loadLeaf(path, l))
@@ -1604,34 +1476,19 @@ object GraftTable {
     // statement resurrects as update images — never merge blind
     val pinnedDv: Map[String, Option[DvRef]] = filesOf(path, pinned)
       .map(fe => fileUri(path, fe) -> fe.dv).toMap
-    try merged.keys.foreach { uri =>
+    val entries = stageWritten(spark, path, schema, dataParts, Map.empty, Nil, Nil)
+    // a refusal must reclaim EVERYTHING this statement placed: the staged
+    // data entries, the freshly-written dv sidecars (already in DvDir from
+    // the executor mapGroups job), and the staged position parts
+    try {
+    merged.keys.foreach { uri =>
       val now = byUri.get(uri)
       if (now.isEmpty || now.map(_.dv) != pinnedDv.get(uri))
         throw new java.util.ConcurrentModificationException(
           s"row-level $op on '$path' lost a race: scanned file '$uri' was " +
             "rewritten or re-vectored by a concurrent commit — re-run the statement")
-    } catch { case e: Throwable =>
-      // the executor job already placed the merged sidecars in DvDir —
-      // a refused statement must not orphan them (or the staged positions)
-      merged.values.foreach { case (dvName, _, _) =>
-        new File(new File(path, DvDir), dvName).delete() }
-      posParts.foreach(_.delete())
-      throw e
     }
-    val entries =
-      if (dataParts.isEmpty) Nil
-      else stagePartEntries(spark, schema, path,
-        java.util.UUID.randomUUID.toString.take(8), dataParts, Nil, Nil)
-    // failure must reclaim EVERYTHING this statement placed: the staged
-    // data entries, the freshly-written dv sidecars (already in DvDir from
-    // the executor mapGroups job), and the staged position parts
-    def reclaim(): Unit = {
-      entries.foreach(fe => new File(path, fe.path).delete())
-      merged.values.foreach { case (dvName, _, _) =>
-        new File(new File(path, DvDir), dvName).delete() }
-      posParts.foreach(_.delete())
-    }
-    try {
+    checkStaged(spark, path, schema, entries, cur.checks.getOrElse(Map.empty))
     def touchedBy(fe: FileEntry) = merged.contains(fileUri(path, fe))
     def updatedEntry(fe: FileEntry): Option[FileEntry] = {
       val (dvName, total, bytes) = merged(fileUri(path, fe))
@@ -1655,7 +1512,13 @@ object GraftTable {
         s"commit v${next.version} of '$path' lost the race — re-run the $op")
     posParts.foreach(_.delete())
     next.version
-    } catch { case e: Throwable => reclaim(); throw e }
+    } catch { case e: Throwable =>
+      reclaim(path, entries)
+      merged.values.foreach { case (dvName, _, _) =>
+        new File(new File(path, DvDir), dvName).delete() }
+      posParts.foreach(_.delete())
+      throw e
+    }
   }
 
   /** Overwrite with a CLUSTERED layout: range-partition by `clusterBy`
@@ -2332,7 +2195,8 @@ object GraftTable {
       val statsCols =
         (touched.flatMap(_.stats.keys) ++ candidates.flatMap(_.stats.keys)).distinct
       val staged = (images.toSeq ++ appended.toSeq).reduceOption(_ unionByName _)
-        .map(df => stageFiles(df, path, statsCols, None)).getOrElse(Nil)
+        .map(df => stageFiles(df, path, statsCols, None, cur.checks.getOrElse(Map.empty)))
+        .getOrElse(Nil)
       val (files, leaves) = packCommit(path,
         untouched ++ updatedEntries ++ staged, carriedRefs)
       val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
@@ -2399,13 +2263,13 @@ object GraftTable {
     val rewritten =
       if (partial.isEmpty) Nil
       else stageFiles(transform(readFileSubset(spark, path, cur, partial)),
-        path, statsCols, None)
+        path, statsCols, None, cur.checks.getOrElse(Map.empty))
     // replace data stages with the TABLE's stats columns (not just the
     // touched files') so a mostly-metadata replace keeps skippability
     val tableStatsCols = (cur.files.flatMap(_.stats.keys) ++
       cur.leaves.getOrElse(Nil).flatMap(_.stats.keys)).distinct
     val staged = rewritten ++ extraStage.map(df =>
-      stageFiles(df, path, tableStatsCols, None)).getOrElse(Nil)
+      stageFiles(df, path, tableStatsCols, None, cur.checks.getOrElse(Map.empty))).getOrElse(Nil)
     val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged,
       cleanLeaves ++ carriedLive.map(_._1))
     val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
@@ -2720,16 +2584,18 @@ object GraftTable {
       val survivors = dirtyLeaves.flatMap(_._2).filterNot(isTouched)
       val touchedRows = readFileSubset(spark, path, cur, touched)
       val kept = misses(touchedRows)
-      val rewritten = replacement match {
-        case Some(r) => kept.unionByName(r(touchedRows).select(schema.fieldNames.map(col): _*))
-        case None => kept
+      // driver-local rows ride in the files they rewrite: a task per maxPartitionBytes of each
+      val rewritten = replacement.fold(kept) { r =>
+        val u = kept.unionByName(r(touchedRows).select(schema.fieldNames.map(col): _*))
+        val split = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+        if (tuples.isEmpty) u else u.coalesce(math.max(1L, touched.map(_.bytes / split + 1).sum).toInt)
       }
       // nothing to rewrite when no file is touched and nothing replaces
       // — every replacement row carries a key of the key set, so an
       // empty key set replaces nothing: skip the staging job
       val staged =
         if (touched.isEmpty && (replacement.isEmpty || ks.rows == 0)) Nil
-        else stageFiles(rewritten, path, statsCols, None)
+        else stageFiles(rewritten, path, statsCols, None, cur.checks.getOrElse(Map.empty))
       val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged,
         cleanLeaves ++ carriedLive.map(_._1))
       val next = Manifest(cur.version + 1, commitTs(Some(cur)), op,
@@ -2846,7 +2712,7 @@ object GraftTable {
 
   /** Add a named CHECK constraint (Delta table constraints, re-derived):
     * a SQL boolean expression every FUTURE write must satisfy, enforced
-    * at staging on every write path ([[enforceChecks]] — SQL semantics,
+    * at staging on every write path ([[checkStaged]] — SQL semantics,
     * NULL passes). The add itself validates the CURRENT snapshot in one
     * limit-1 scan and refuses if any existing row violates, so a
     * committed check is an invariant of the whole table, not just new
@@ -3667,7 +3533,8 @@ object GraftTable {
       case Some(_) => readFileSubset(spark, path, cur, small)
       case None => readFileSubset(spark, path, cur, small).repartition(nOut)
     }
-    val staged = stageFiles(packed, path, statsCols, clusterBy.map(c => (c, nOut)))
+    val staged = stageFiles(packed, path, statsCols, clusterBy.map(c => (c, nOut)),
+      cur.checks.getOrElse(Map.empty))
     val (files, leaves) = packCommit(path, big ++ staged, Nil)
     val next = Manifest(cur.version + 1, commitTs(Some(cur)), "compact",
       cur.schemaDdl, files, cur.streamMarks, leaves,
@@ -3702,7 +3569,8 @@ object GraftTable {
     if (touched.isEmpty) return (0, cur.version)
     val cols = if (statsCols.nonEmpty) statsCols
       else touched.flatMap(_.stats.keys).distinct
-    val staged = stageFiles(readFileSubset(spark, path, cur, touched), path, cols, None)
+    val staged = stageFiles(readFileSubset(spark, path, cur, touched), path, cols, None,
+      cur.checks.getOrElse(Map.empty))
     val (files, leaves) = packCommit(path, inUntouched ++ survivors ++ staged, cleanRefs)
     val next = Manifest(cur.version + 1, commitTs(Some(cur)), "purge_dv",
       cur.schemaDdl, files, cur.streamMarks, leaves,

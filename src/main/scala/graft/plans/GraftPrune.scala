@@ -604,7 +604,8 @@ object GraftPrune extends PredicateHelper {
     * (`GROUP BY day/enum` rollups) with one manifest read. */
   /** The single stats column under a MONOTONIC grouping expression —
     * the shapes where endpoint equality proves per-file constancy:
-    * `date_trunc(unit, ts)` / `trunc(d, fmt)` (period starts are
+    * `date_trunc(unit, ts)` (also over a DATE or TIMESTAMP_NTZ `x`,
+    * which analyzes to `cast(x AS TIMESTAMP)`) / `trunc(d, fmt)` (period starts are
     * non-decreasing for every unit), `year(d)`, `cast(ts as date)`.
     * NOT general expressions: `x % 2` agrees at endpoints while the
     * interior differs — the whitelist IS the correctness proof. */
@@ -618,6 +619,13 @@ object GraftPrune extends PredicateHelper {
       // holds only under a FIXED-OFFSET session zone (UTC, +08:00 …),
       // where instant order IS wall order.
       case a: AttributeReference if sessionZoneIsFixedOffset => Some(a)
+      // a DATE or TIMESTAMP_NTZ analyzes to cast(x AS TIMESTAMP): x's
+      // wall time read in the session zone, an order-preserving shift
+      // under the same fixed-offset gate
+      case Cast(a: AttributeReference, org.apache.spark.sql.types.TimestampType, _, _)
+          if (a.dataType == org.apache.spark.sql.types.DateType ||
+            a.dataType == org.apache.spark.sql.types.TimestampNTZType) &&
+            sessionZoneIsFixedOffset => Some(a)
       case _ => None
     }
     case t: TruncDate if t.format.foldable => t.date match {

@@ -25,10 +25,10 @@ import graft.core.GraftTable
   *    DataFrame on the driver side of the API and re-ran it through
   *    `df.write.parquet` into a stage dir — a separate job over the
   *    same rows. Here each executor task streams its partition straight
-  *    into its own staged parquet file (Spark's own parquet-mr write
-  *    support, bit-compatible with the driver staging path); the commit
-  *    is one manifest CAS over O(batch files) entries. At 100 TB the
-  *    insert's own tasks ARE the write.
+  *    into its own staged parquet file ([[GraftRowFileWriter]] — the
+  *    same writer the Scala API's staged writes use); the commit is one
+  *    manifest CAS over O(batch files) entries. At 100 TB the insert's
+  *    own tasks ARE the write.
   *  - '''The layout is planned, not re-imposed.''' A table declaring
   *    `graft.bucketBy` reports [[requiredDistribution]] clustered on
   *    the bucket columns with [[requiredNumPartitions]] = numBuckets,
@@ -41,12 +41,12 @@ import graft.core.GraftTable
   *    plain SQL INSERTs — no OPTIMIZE round-trip to restore the layout.
   *    [[requiredOrdering]] sorts within the bucket so parquet row-group
   *    stats on the key stay tight (the same consolation prize the
-  *    driver staging path buys with `sortWithinPartitions`).
+  *    Scala API's bucketed writes buy with `sortWithinPartitions`).
   *
-  * Checks, stats, blooms, and property-declared indexing ride the same
-  * commit tail as every other write ([[GraftTable.commitBatchFiles]] →
-  * `stagePartEntries`). Streaming writes keep the epoch-committing
-  * [[GraftStreamingWrite]] — same staged-file discipline, plus the
+  * Checks, stats, blooms, property-declared indexing and the commit CAS
+  * are the same two steps as every other staged write
+  * ([[GraftTable.commitWritten]]). Streaming writes keep the
+  * epoch-committing [[GraftStreamingWrite]] — same steps, plus the
   * exactly-once high-water mark.
   *
   * Reference analogue: every model materializes through a plain SQL
@@ -127,8 +127,8 @@ private[graft] class GraftBatchWrite(path: String,
     val files = messages.collect {
       case GraftWrittenFile(f) if f.nonEmpty => new File(f)
     }.toSeq
-    GraftTable.commitBatchFiles(SparkSession.active, path, files, schema,
-      overwrite = overwriteAll, statsCols, bloomCols): Unit
+    GraftTable.commitWritten(SparkSession.active, path,
+      if (overwriteAll) "overwrite" else "append", files, schema, statsCols, bloomCols): Unit
     // this job's subdir is now fully ours: the commit moved every named
     // file into data/, so whatever remains is our own dead task
     // attempts' orphans — reclaim the whole dir

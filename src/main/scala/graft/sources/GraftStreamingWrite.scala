@@ -15,14 +15,12 @@ import graft.core.GraftTable
 /** The DSv2 `StreamingWrite` for named graft tables
   * (`writeStream.toTable("graft.ns.t")` — [[graft.catalog.GraftCatalog]]):
   * a genuinely DISTRIBUTED streaming append. Each executor task streams
-  * its partition straight into its own staged parquet file (Spark's own
-  * `ParquetWriteSupport` over parquet-mr, bit-compatible with the
-  * driver staging path — [[ClassicBridge.parquetRowWriter]]); the
-  * driver-side epoch commit folds the staged files into the manifest
-  * through [[GraftTable.commitStreamFiles]] — the same stats/bloom
-  * pass, CHECK enforcement, and stream-HWM exactly-once CAS loop as
-  * the V1 path sink, but with ZERO row traffic through the driver and
-  * no second write of the data.
+  * its partition straight into its own staged parquet file
+  * ([[GraftRowFileWriter]], the one writer behind every GraftTable
+  * write); the driver-side epoch commit folds the staged files into the
+  * manifest through [[GraftTable.commitWritten]] — the same stats/bloom
+  * pass, CHECK step, and stream-HWM exactly-once CAS loop as the V1
+  * path sink, but with ZERO row traffic through the driver.
   *
   * At 100 TB the shape is the right one: a 1000-task micro-batch
   * writes 1000 files in parallel, the commit is one manifest CAS of
@@ -52,8 +50,8 @@ private[graft] class GraftStreamingWrite(path: String, streamId: String,
     val files = messages.collect {
       case GraftWrittenFile(f) if f.nonEmpty => new File(f)
     }.toSeq
-    GraftTable.commitStreamFiles(spark, path, streamId, epochId, files,
-      schema, statsCols, bloomCols): Unit
+    GraftTable.commitWritten(spark, path, "stream_append", files, schema,
+      statsCols, bloomCols, mark = Some(streamId -> epochId)): Unit
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
@@ -81,8 +79,9 @@ private[graft] class GraftStreamWriterFactory(stageDir: String,
     new GraftRowFileWriter(stageDir, s"ep$epochId-r$runId", partitionId, taskId, conf)
 }
 
-/** The per-task writer behind BOTH v2 write surfaces (streaming epochs
-  * and batch INSERTs — [[GraftBatchWriterFactory]]): lazily opens its
+/** The per-task writer behind every GraftTable write (streaming epochs,
+  * batch INSERTs — [[GraftBatchWriterFactory]] — and the Scala API's
+  * staged writes, `GraftTable.stageFiles`): lazily opens its
   * parquet file on the first row (an empty partition stages nothing),
   * streams rows through Spark's write support (no buffering beyond
   * parquet's own row groups). */
@@ -92,6 +91,7 @@ private[graft] class GraftRowFileWriter(stageDir: String, namePrefix: String,
 
   private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
   private var file: File = _
+  private var rows = 0L
 
   override def write(row: InternalRow): Unit = {
     if (writer == null) {
@@ -99,10 +99,14 @@ private[graft] class GraftRowFileWriter(stageDir: String, namePrefix: String,
       writer = ClassicBridge.parquetRowWriter(conf.value, file.getAbsolutePath)
     }
     writer.write(row)
+    rows += 1
   }
 
   override def commit(): WriterCommitMessage = {
-    if (writer != null) writer.close()
+    if (writer != null) {
+      writer.close()
+      ClassicBridge.recordTaskOutput(file.length, rows)
+    }
     GraftWrittenFile(if (file == null) "" else file.getAbsolutePath)
   }
 

@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * own `org.apache.spark.sql.*` shim files): wrap a Catalyst expression
   * as a public [[Column]], resolve a parsed logical plan to a
   * [[DataFrame]], translate a predicate the way filter pushdown does,
-  * and clone a session. */
+  * clone a session, and write a frame's partitions with Spark's own
+  * parquet write support. */
 object ClassicBridge {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
@@ -44,42 +45,16 @@ object ClassicBridge {
     spark.internalCreateDataFrame(rows, data.schema, isStreaming = false)
   }
 
-  /** Re-bind `df`'s (already analyzed) plan to a FRESH clone of its
-    * session whose only divergence is
-    * `spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS` — so the
-    * driver staging write emits standard INT64-micros timestamps (INT96
-    * footers carry no usable stats) WITHOUT mutating the user's session
-    * conf: a save/set/restore on the shared session races concurrent
-    * writers (the loser's restore clobbers the winner's) and briefly
-    * changes the format of unrelated `df.write.parquet` calls on other
-    * threads. The clone is created per staged write rather than cached:
-    * `cloneSession` copies the CURRENT session conf, so later user
-    * changes (rebase modes, compression codec, ANSI flags) reach every
-    * subsequent staged write, and nothing retains the clone past the
-    * write — a cached clone would both freeze the conf at first use and
-    * pin the parent session's state for the JVM lifetime. The clone
-    * shares the SparkContext and the analyzed plan needs no
-    * re-resolution; its cost is a conf/state copy, noise next to the
-    * write job it fronts. */
-  def withMicrosTimestampWrites(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val classic = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val clone = classic.cloneSession()
-    clone.conf.set(
-      org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
-      "TIMESTAMP_MICROS")
-    org.apache.spark.sql.classic.Dataset.ofRows(clone, df.queryExecution.analyzed)
-  }
-
   // ----------------------------------------------- executor parquet writing
 
   /** A serializable Hadoop conf carrying everything
     * [[org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport]]
     * reads at `init` — the row schema plus the session's parquet write
     * dialect (legacy format, timestamp encoding, rebase modes, zone) —
-    * so an executor-side writer produces files BIT-COMPATIBLE with the
-    * driver's `df.write.parquet` staging path. Built once on the driver,
-    * shipped inside the writer factory. */
+    * for [[parquetRowWriter]], the one file writer behind every GraftTable
+    * write (the driver-staged Scala API through [[writePartitions]], and
+    * the v2 batch and streaming writers). Built once on the driver,
+    * shipped inside the task closure or writer factory. */
   def parquetWriteConf(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.util.SerializableConfiguration = {
@@ -91,9 +66,9 @@ object ClassicBridge {
     ParquetWriteSupport.setSchema(schema, conf)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
       sql.writeLegacyParquetFormat.toString)
-    // always standard INT64 micros, never legacy INT96 — matches the
-    // driver staging path (GraftTable.stageFiles forces the same), and
-    // INT96 footers carry no min/max for the footer-stats fast path
+    // always standard INT64 micros, never legacy INT96: INT96 footers
+    // carry no min/max for the footer-stats fast path, and micros is
+    // what this format's readers and every modern engine expect
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
     conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key,
       sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString)
@@ -107,6 +82,30 @@ object ClassicBridge {
     conf.set("spark.sql.parquet.compression.codec", sql.parquetCompressionCodec)
     new org.apache.spark.util.SerializableConfiguration(conf)
   }
+
+  /** Run `write` over every partition of `df`'s rows in ONE job, inside
+    * a SQL execution of `df`'s own plan (so AQE, SQL metrics and query
+    * listeners see the write as they see a `df.write…save`), returning
+    * each partition's result in partition order. The rows are Spark's
+    * internal rows in `df.schema`'s layout, reused between calls — a
+    * writer must consume each before pulling the next. */
+  def writePartitions[T: scala.reflect.ClassTag](df: DataFrame)(
+      write: (org.apache.spark.TaskContext,
+        Iterator[org.apache.spark.sql.catalyst.InternalRow]) => T): Array[T] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("save")) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd, write)
+    }
+  }
+
+  /** Count a file the running task wrote in its output metrics, as
+    * Spark's own file writers do (the setters are Spark-internal). */
+  def recordTaskOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get).foreach { task =>
+      val m = task.taskMetrics.outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
 
   /** An executor-side [[org.apache.parquet.hadoop.ParquetWriter]] of
     * [[org.apache.spark.sql.catalyst.InternalRow]]s — Spark's own write

@@ -213,4 +213,46 @@ class GraftBatchWriteSpec extends AnyFunSuite with SparkSpecBase {
     assert(spark.table("ins.ns.race").count() == 30,
       "the insert must rebase over the racing append, dropping neither batch")
   }
+
+  test("one writer: the Scala API, SQL INSERT and writeStream.toTable write the same files") {
+    val cols = Seq("cast(id as int) AS k", "concat('s', cast(id as string)) AS s",
+      "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, cast(id as int), 0, 0) AS ts",
+      "cast(id * 1.25 as decimal(10,2)) AS amt")
+    val batch = spark.range(0, 20).selectExpr(cols: _*).coalesce(1)
+    // the graft stream source reads flat primitive schemas: stream the ids
+    // and derive the same columns inside the query
+    GraftTable.overwrite(spark.range(0, 20).toDF().coalesce(1), s"$warehouse/ns/par_ids")
+    val api = s"$warehouse/ns/par_api"
+    GraftTable.append(batch, api)
+    val sql = s"$warehouse/ns/par_sql"
+    GraftTable.create(sql, batch.schema)
+    batch.createOrReplaceTempView("par_batch")
+    spark.sql("INSERT INTO ins.ns.par_sql SELECT * FROM par_batch")
+    val q = spark.readStream.table("ins.ns.par_ids").selectExpr(cols: _*).writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft_par_ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .toTable("ins.ns.par_stream")
+    q.awaitTermination(60000)
+    val stream = s"$warehouse/ns/par_stream"
+    def footer(p: String): String = {
+      val files = GraftTable.filesOf(p, GraftTable.currentManifest(p).get)
+      assert(files.size == 1, s"$p: ${files.map(_.path)}")
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(GraftTable.resolveData(p, files.head)),
+        spark.sparkContext.hadoopConfiguration)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try r.getFooter.getFileMetaData.getSchema.toString finally r.close()
+    }
+    def stats(p: String) = GraftTable.filesOf(p, GraftTable.currentManifest(p).get).map(_.stats)
+    val schema = footer(api)
+    assert(schema.contains("int64 ts (TIMESTAMP(MICROS,true))"), schema)
+    assert(schema.contains("required int32 k"), schema)
+    assert(footer(sql) == schema)
+    assert(footer(stream) == schema)
+    assert(stats(api).head.keySet == Set("k", "s", "ts", "amt"))
+    assert(stats(sql) == stats(api))
+    assert(stats(stream) == stats(api))
+    assert(jobsDuring(GraftTable.overwrite(batch, s"$warehouse/ns/par_over")) == 1)
+  }
+
 }

@@ -337,8 +337,8 @@ class GraftCatalogSpec extends AnyFunSuite with SparkSpecBase {
     val before = GraftTable.currentManifest(sinkPath).get.version
     val sid = GraftTable.currentManifest(sinkPath).get.streamMarks.get
       .keys.find(_.startsWith("q:")).get
-    assert(GraftTable.commitStreamFiles(spark, sinkPath, sid, 0L, Nil,
-      spark.table("graft.strm.sink2").schema) == -1L)
+    assert(GraftTable.commitWritten(spark, sinkPath, "stream_append", Nil,
+      spark.table("graft.strm.sink2").schema, mark = Some(sid -> 0L)) == -1L)
     assert(GraftTable.currentManifest(sinkPath).get.version == before)
   }
 

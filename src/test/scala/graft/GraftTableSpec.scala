@@ -1147,4 +1147,72 @@ class GraftTableSpec extends AnyFunSuite with SparkSpecBase {
     // nothing committed
     assert(GraftTable.currentVersion(path).contains(1L))
   }
+
+  test("stream appends keep the table's declared nullability (appendStream and toTable)") {
+    val root = tmp()
+    val stock = spark.newSession()
+    stock.conf.set("spark.sql.catalog.gts", classOf[graft.catalog.GraftCatalog].getName)
+    stock.conf.set("spark.sql.catalog.gts.warehouse", root)
+    stock.sql("CREATE NAMESPACE IF NOT EXISTS gts.ns")
+    // `extra` joins nullable through appendEvolve; the old row holds NULL
+    def evolved(name: String): String = {
+      val p = s"$root/ns/$name"
+      GraftTable.overwrite(df("k INT, label STRING", Row(Int.box(1), "a")), p)
+      GraftTable.appendEvolve(df("k INT, label STRING, extra INT",
+        Row(Int.box(2), "b", Int.box(7))), p)
+      p
+    }
+    // every column of the batch is NOT NULL
+    val batch = spark.range(1)
+      .selectExpr("cast(id+20 as int) k", "'s' label", "cast(5 as int) extra")
+    def assertKept(p: String): Unit = {
+      assert(GraftTable.currentManifest(p).get.schemaDdl == "k INT,label STRING,extra INT")
+      assert(GraftTable.read(spark, p).filter("extra IS NULL").count() == 1L)
+    }
+    val api = evolved("api")
+    assert(GraftTable.appendStream(batch, api, "s1", 0L) > 0L)
+    assertKept(api)
+    val sink = evolved("sink")
+    GraftTable.overwrite(batch, s"$root/ns/src")
+    val q = stock.readStream.table("gts.ns.src").writeStream
+      .option("checkpointLocation", java.nio.file.Files.createTempDirectory("gts_ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .toTable("gts.ns.sink")
+    q.awaitTermination(60000)
+    assert(GraftTable.currentManifest(sink).get.op == "stream_append")
+    assertKept(sink)
+  }
+
+  test("stream appends refuse a drop fence like append, and delete their staged files") {
+    val path = tmp() + "/t"
+    GraftTable.overwrite(kv(1 -> "a"), path)
+    val schema = GraftTable.read(spark, path).schema
+    GraftTable.markDropped(path, "dropped")
+    GraftTable.reclaimDropped(path)
+    def refused(write: => Long): Unit = {
+      val e = intercept[IllegalStateException](write)
+      assert(e.getMessage.contains("append aborted"), e.getMessage)
+    }
+    refused(GraftTable.append(kv(2 -> "b"), path))
+    refused(GraftTable.appendStream(kv(2 -> "b"), path, "s", 0L))
+    // the v2 commits: one executor-written file each, deleted on refusal
+    def written(): java.io.File = {
+      val d = tmp() + "/w"
+      kv(3 -> "c").coalesce(1).write.parquet(d)
+      new java.io.File(d).listFiles.find(_.getName.endsWith(".parquet")).get
+    }
+    val f1 = written()
+    refused(GraftTable.commitWritten(spark, path, "stream_append", Seq(f1), schema,
+      mark = Some("s" -> 0L)))
+    val f2 = written()
+    refused {
+      new graft.sources.GraftStreamingWrite(path, "q:x", schema, Nil, Nil, spark)
+        .commit(0L, Array(graft.sources.GraftWrittenFile(f2.getAbsolutePath)))
+      0L
+    }
+    assert(!GraftTable.exists(path))
+    assert(Option(new java.io.File(path, "data").listFiles).forall(_.isEmpty),
+      "refused commits must not leave their staged files behind")
+  }
+
 }

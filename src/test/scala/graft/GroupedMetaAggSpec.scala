@@ -20,7 +20,8 @@ import graft.catalog.GraftCatalog
   *  - `WHERE k IN (…)` classifies files under the exact-prune claim:
   *    single-valued member files are provably inside, member-free
   *    ranges provably outside, anything else stays advisory. */
-class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
+class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase
+    with org.scalatest.BeforeAndAfterAll {
 
   private val warehouse = Files.createTempDirectory("graft_gmagg").toString
 
@@ -62,7 +63,16 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
     count(df.queryExecution.executedPlan)
   }
 
-  private def real = spark.read.format("graft").load(path)
+  private def realIn(s: org.apache.spark.sql.SparkSession) = s.read.format("graft").load(path)
+  private def real = realIn(spark)
+
+  // every extension-rule case plans in a GraftPrune.ruled child session:
+  // the shared test session must leave this suite without the rule
+  override def afterAll(): Unit =
+    try assert(!spark.experimental.extraOptimizations
+      .exists(_.isInstanceOf[graft.plans.GraftPrune]),
+      "a case installed GraftPrune on the shared session")
+    finally super.afterAll()
 
   test("stock session: GROUP BY over a partition-shaped layout folds with zero scans") {
     path
@@ -98,31 +108,28 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
 
   test("extension rule: GROUP BY over a graft read becomes a LocalRelation") {
     path
-    graft.plans.GraftPrune.install(spark)
-    val q = real.groupBy("k").agg(count(lit(1)).as("n"),
+    val ruled = graft.plans.GraftPrune.ruled(spark)
+    val q = realIn(ruled).groupBy("k").agg(count(lit(1)).as("n"),
       min(col("x")).as("mx"), max(col("x")).as("xx"))
     assert(scansIn(q) == 0,
       s"the rule must fold the grouped aggregate:\n${q.queryExecution.executedPlan}")
     // oracle: the same rollup with the rules off
-    val saved = spark.conf.getOption(graft.plans.GraftRules.Key)
-    spark.conf.set(graft.plans.GraftRules.Key, "false")
-    try assert(canon(q) == canon(real.groupBy("k").agg(count(lit(1)).as("n"),
+    ruled.conf.set(graft.plans.GraftRules.Key, "false")
+    assert(canon(q) == canon(realIn(ruled).groupBy("k").agg(count(lit(1)).as("n"),
       min(col("x")).as("mx"), max(col("x")).as("xx"))))
-    finally saved.fold(spark.conf.unset(graft.plans.GraftRules.Key))(
-      spark.conf.set(graft.plans.GraftRules.Key, _))
   }
 
   test("extension rule: filtered grouped fold classifies files, straddler bails") {
     path
-    graft.plans.GraftPrune.install(spark)
-    val clean = real.filter(col("k") >= 20 && col("k") <= 40)
+    val ruled = graft.plans.GraftPrune.ruled(spark)
+    val clean = realIn(ruled).filter(col("k") >= 20 && col("k") <= 40)
       .groupBy("k").agg(count(lit(1)).as("n"))
     assert(scansIn(clean) == 0, "boundary-aligned grouped WHERE folds")
     assert(clean.collect().map(r => (r.getInt(0), r.getLong(1))).toMap ==
       Map(20 -> 70L, 30 -> 80L, 40 -> 90L))
     // a bound cutting through k=30's x-range straddles that FILE —
     // the whole rewrite must bail, results stay exact
-    val straddle = real.filter(col("x") > 3010L).groupBy("k").agg(count(lit(1)).as("n"))
+    val straddle = realIn(ruled).filter(col("x") > 3010L).groupBy("k").agg(count(lit(1)).as("n"))
     assert(scansIn(straddle) > 0, "a straddling file needs real IO")
     assert(canon(straddle) == canon(real.filter(col("x") > 3010L)
       .groupBy("k").agg(count(lit(1)).as("n"))))
@@ -167,8 +174,8 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
 
   test("SELECT DISTINCT over the partition column answers from the manifest") {
     path
-    graft.plans.GraftPrune.install(spark)
-    val q = real.select("k").distinct()
+    val ruled = graft.plans.GraftPrune.ruled(spark)
+    val q = realIn(ruled).select("k").distinct()
     assert(scansIn(q) == 0,
       s"the distinct set IS the manifest's group keys:\n${q.queryExecution.executedPlan}")
     assert(q.collect().map(_.getInt(0)).sorted.sameElements(Array(10, 20, 30, 40)))
@@ -188,29 +195,25 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
       if (y == 0) GraftTable.overwrite(slice.coalesce(1), p)
       else GraftTable.append(slice.coalesce(1), p)
     }
-    graft.plans.GraftPrune.install(spark)
-    def yearly = spark.read.format("graft").load(p)
+    val ruled = graft.plans.GraftPrune.ruled(spark)
+    def yearly = ruled.read.format("graft").load(p)
       .groupBy(date_trunc("year", col("ts")).as("yr"))
       .agg(count(lit(1)).as("n"), min(col("x")).as("mn"), max(col("x")).as("mx"))
     val q = yearly
     assert(scansIn(q) == 0,
       s"year files fold the yearly rollup:\n${q.queryExecution.executedPlan}")
-    val saved = spark.conf.getOption(graft.plans.GraftRules.Key)
-    spark.conf.set(graft.plans.GraftRules.Key, "false")
-    try assert(canon(q) == canon(yearly))
-    finally saved.fold(spark.conf.unset(graft.plans.GraftRules.Key))(
-      spark.conf.set(graft.plans.GraftRules.Key, _))
+    ruled.conf.set(graft.plans.GraftRules.Key, "false")
+    assert(canon(q) == canon(yearly))
+    ruled.conf.unset(graft.plans.GraftRules.Key)
     // monthly grain over year-wide files: every file straddles months —
     // the whole rewrite bails, results exact
-    def monthly = spark.read.format("graft").load(p)
+    def monthly = ruled.read.format("graft").load(p)
       .groupBy(date_trunc("month", col("ts")).as("m"))
       .agg(count(lit(1)).as("n"))
     val qm = monthly
     assert(scansIn(qm) > 0, "month groups inside a year file need real IO")
-    spark.conf.set(graft.plans.GraftRules.Key, "false")
-    try assert(canon(qm) == canon(monthly))
-    finally saved.fold(spark.conf.unset(graft.plans.GraftRules.Key))(
-      spark.conf.set(graft.plans.GraftRules.Key, _))
+    ruled.conf.set(graft.plans.GraftRules.Key, "false")
+    assert(canon(qm) == canon(monthly))
   }
 
   test("date_trunc fold is GATED on a fixed-offset session timezone: a DST " +
@@ -224,13 +227,13 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
         "timestamp'2021-11-07 05:00:10Z' + " +
           "make_interval(0, 0, 0, 0, 0, cast(id as int), 0) AS ts",
         "id AS x").coalesce(1), p)
-    graft.plans.GraftPrune.install(spark)
-    def hourly = spark.read.format("graft").load(p)
+    val ruled = graft.plans.GraftPrune.ruled(spark)
+    def hourly = ruled.read.format("graft").load(p)
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("n"))
-    val savedTz = spark.conf.get("spark.sql.session.timeZone")
+    val savedTz = ruled.conf.get("spark.sql.session.timeZone")
     try {
-      spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+      ruled.conf.set("spark.sql.session.timeZone", "America/New_York")
       val q = hourly
       assert(scansIn(q) > 0,
         s"a DST session zone must bail to the real scan:\n${q.queryExecution.executedPlan}")
@@ -240,7 +243,7 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
       // the repeated wall hour proves the hazard is real: two distinct
       // wall hours despite only one "01:xx" label direction
       assert(rows.length == 2, s"fall-back hour folds two instant-hours: ${rows.toSeq}")
-    } finally spark.conf.set("spark.sql.session.timeZone", savedTz)
+    } finally ruled.conf.set("spark.sql.session.timeZone", savedTz)
     // UTC (fixed offset): unchanged — a file constant under the grouping
     // still folds with zero scans (the gate is the ZONE, not the shape)
     val pu = s"$warehouse/ns/dst_utc"
@@ -252,12 +255,41 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
       if (h == 0) GraftTable.overwrite(slice.coalesce(1), pu)
       else GraftTable.append(slice.coalesce(1), pu)
     }
-    val qu = spark.read.format("graft").load(pu)
+    val qu = ruled.read.format("graft").load(pu)
       .groupBy(date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("n"))
     assert(scansIn(qu) == 0,
       s"UTC keeps the hour-clustered fold:\n${qu.queryExecution.executedPlan}")
     assert(qu.collect().map(_.getLong(1)).sorted.sameElements(Array(50L, 50L)))
+  }
+
+  test("extension rule: GROUP BY date_trunc over DATE and TIMESTAMP_NTZ columns " +
+      "folds under a fixed-offset zone and scans under a DST zone (q184's shape)") {
+    // date_trunc on either type analyzes to date_trunc(unit, cast(d AS TIMESTAMP))
+    Seq("date" -> "d", "timestamp_ntz" -> "cast(d as timestamp_ntz)").foreach { case (t, e) =>
+      val p = s"$warehouse/ns/by_$t"
+      (0 until 3).foreach { y =>
+        val slice = spark.range(0, 200).selectExpr(
+          s"date_add(date'${1992 + y}-01-01', cast(id as int)) AS d", s"id + ${y * 1000} AS x")
+          .selectExpr(s"$e AS d", "x")
+        if (y == 0) GraftTable.overwrite(slice.coalesce(1), p)
+        else GraftTable.append(slice.coalesce(1), p)
+      }
+      val ruled = graft.plans.GraftPrune.ruled(spark)
+      def yearly = ruled.read.format("graft").load(p)
+        .groupBy(date_trunc("year", col("d")).as("yr"))
+        .agg(count(lit(1)).as("n"), min(col("x")).as("mn"), max(col("x")).as("mx"))
+      val q = yearly
+      assert(scansIn(q) == 0,
+        s"$t: year files fold the yearly rollup:\n${q.queryExecution.executedPlan}")
+      ruled.conf.set(graft.plans.GraftRules.Key, "false")
+      assert(canon(q) == canon(yearly))
+      ruled.conf.unset(graft.plans.GraftRules.Key)
+      ruled.conf.set("spark.sql.session.timeZone", "America/New_York")
+      val dst = yearly
+      assert(scansIn(dst) > 0,
+        s"$t: a DST session zone must bail to the real scan:\n${dst.queryExecution.executedPlan}")
+    }
   }
 
   test("OR-of-ranges claims through the tri-state tree; straddling branch bails") {
@@ -285,8 +317,8 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
   }
 
   test("extension rule: OR folds ride the tree — filtered count and OR + GROUP BY") {
-    graft.plans.GraftPrune.install(spark)
-    val q = spark.read.format("graft").load(rangedPath)
+    val ruled = graft.plans.GraftPrune.ruled(spark)
+    val q = ruled.read.format("graft").load(rangedPath)
       .filter(col("k") < 250 || col("k") >= 750)
       .agg(count(lit(1)).as("n"), max(col("x")).as("mx"))
     assert(scansIn(q) == 0,
@@ -295,7 +327,7 @@ class GroupedMetaAggSpec extends AnyFunSuite with SparkSpecBase {
     assert(r.getLong(0) == 500L && r.getLong(1) == 999L)
     // OR + GROUP BY over the partition-shaped layout: both branches
     // classify whole files into / out of their groups
-    val g = real.filter(col("k") <= 20 || col("k") >= 40)
+    val g = realIn(ruled).filter(col("k") <= 20 || col("k") >= 40)
       .groupBy("k").agg(count(lit(1)).as("n"))
     assert(scansIn(g) == 0,
       s"grouped fold under OR must classify per file:\n${g.queryExecution.executedPlan}")

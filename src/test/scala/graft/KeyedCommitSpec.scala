@@ -12,7 +12,7 @@ import graft.core.GraftTable.{ColRange, srcCol}
   * same commits over the same rows read back from parquet (the join
   * path) commit: the same table, the same removed files, the same added
   * rows. And the Spark jobs each keyed or predicate commit may launch
-  * on a clustered table. */
+  * on a clustered table, and the files a driver-local one stages. */
 class KeyedCommitSpec extends AnyFunSuite with SparkSpecBase {
 
   private def tmp(): String = Files.createTempDirectory("graft_keyed").toString
@@ -169,6 +169,29 @@ class KeyedCommitSpec extends AnyFunSuite with SparkSpecBase {
     val delta = xv(Seq((Double.box(1.5), "U"), (Double.box(0.0), "zero"), (null, "n")))
     assert(GraftTable.localKeyTuples(delta, Seq("x")).isEmpty)
     bothPaths(seed)((p, f) => GraftTable.upsertByKey(spark, p, f(delta), Seq("x"), Seq("x")))
+  }
+
+  test("a driver-local keyed commit stages one file per file it rewrites") {
+    val p = tmp() + "/t"
+    val rows = spark.range(0, 3200).select((col("id") * 2).as("k"), concat(lit("v"), col("id")).as("v"))
+    GraftTable.writeClustered(rows, p, col("k"), numFiles = 16, statsCols = Seq("k"))
+    val kl = (ks: Seq[Long], v: String) =>
+      df("k BIGINT, v STRING", ks.map(k => Row(Long.box(k), v)): _*)
+    def added(): Seq[Long] = GraftTable.currentManifest(p).get.changes.get.added.map(_.rows)
+    // 40 keys inside one clustered file, half of them new: the kept rows
+    // and the delta's rows share the one rewritten file
+    GraftTable.upsertByKey(spark, p, kl(200L until 240L, "u"), Seq("k"), Seq("k"))
+    assert(added() == Seq(200L + 20))
+    GraftTable.applyChangeSet(spark, p, kl(Seq(500L, 502L), ""), kl(400L until 440L, "c"),
+      Seq("k"), Seq("k"))
+    assert(added().size == 1)
+    GraftTable.mergeInto(spark, p, kl(800L until 840L, "m"), Seq("k"),
+      updateSet = Map("v" -> srcCol("v")), statsCols = Seq("k"))
+    assert(added().size == 1)
+    // keys past every file: the inserts alone, in one file
+    GraftTable.upsertByKey(spark, p, kl(10000L until 10040L, "n"), Seq("k"), Seq("k"))
+    assert(added() == Seq(40L))
+    assert(GraftTable.read(spark, p).count() == 3200 + 20 + (20 - 2) + 20 + 40)
   }
 
   test("keyed and predicate commits on a clustered table stay within their job budgets") {
