@@ -14,7 +14,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.GraftTable
 import graft.core.GraftTable.{FileEntry, Manifest}
-import graft.sources.{GraftBatch, GraftBatchRead, GraftWrittenFile}
+import graft.sources.{FileStatsSpec, GraftBatch, GraftBatchRead, GraftRowFileWriter,
+  GraftWrittenFile}
 
 /** STOCK-SESSION row-level SQL on catalog names — `UPDATE graft.ns.t
   * SET …`, `MERGE INTO graft.ns.t …`, and `DELETE` shapes
@@ -221,26 +222,25 @@ private[graft] class GraftReplaceDataWrite(op: GraftGroupOperation,
     val d = new File(op.path, ".stage-rlo"); d.mkdirs(); d.getAbsolutePath
   }
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftReplaceWriterFactory(stageDir,
-      ClassicBridge.parquetWriteConf(SparkSession.active, schema))
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    val spark = SparkSession.active
+    new GraftReplaceWriterFactory(stageDir, ClassicBridge.parquetWriteConf(spark, schema),
+      GraftTable.fileStatsSpec(spark, op.path, schema))
+  }
 
   override def useCommitCoordinator(): Boolean = true
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     require(op.scanned != null,
       s"row-level ${op.command} on '${op.path}': write committed before its scan planned")
-    val spark = SparkSession.active
-    val staged = messages.collect {
-      case GraftWrittenFile(f) if f.nonEmpty => new File(f)
-    }.toSeq
-    GraftTable.replaceFilesCommit(spark, op.path, op.scanned, staged, schema,
+    val staged = messages.collect { case w: GraftWrittenFile if w.file.nonEmpty => w }.toSeq
+    GraftTable.replaceFilesCommit(SparkSession.active, op.path, op.scanned, staged, schema,
       op.command.toString.toLowerCase + "_rowlevel"): Unit
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case GraftWrittenFile(f) if f.nonEmpty => new File(f).delete(): Unit
+      case w: GraftWrittenFile if w.file.nonEmpty => new File(w.file).delete(): Unit
       case _ => ()
     }
 
@@ -248,11 +248,11 @@ private[graft] class GraftReplaceDataWrite(op: GraftGroupOperation,
 }
 
 private[graft] class GraftReplaceWriterFactory(stageDir: String,
-    conf: org.apache.spark.util.SerializableConfiguration) extends DataWriterFactory {
+    conf: org.apache.spark.util.SerializableConfiguration, spec: FileStatsSpec)
+    extends DataWriterFactory {
   private val runId = java.util.UUID.randomUUID.toString.take(8)
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new graft.sources.GraftRowFileWriter(stageDir, s"ep0-r$runId", partitionId,
-      taskId, conf)
+    new GraftRowFileWriter(stageDir, s"ep0-r$runId", partitionId, taskId, conf, spec)
 }
 
 /** DELTA-BASED (merge-on-read) row-level operation for tables with
@@ -344,7 +344,9 @@ private[graft] class GraftDeltaOperation(val path: String, cmd: Command)
   override def description(): String = s"GraftRowLevelDelta($cmd, $path)"
 }
 
-private[graft] case class GraftDeltaFiles(posFile: String, dataFile: String)
+/** One delta task's two staged files: its deleted (file, pos) row ids
+  * and its inserted rows, each empty when the task wrote none. */
+private[graft] case class GraftDeltaFiles(pos: GraftWrittenFile, data: GraftWrittenFile)
     extends WriterCommitMessage
 
 private[graft] class GraftDeltaBatchWrite(op: GraftDeltaOperation,
@@ -360,7 +362,8 @@ private[graft] class GraftDeltaBatchWrite(op: GraftDeltaOperation,
     val spark = SparkSession.active
     new GraftDeltaWriterFactory(stageDir,
       ClassicBridge.parquetWriteConf(spark, GraftDeltaBatchWrite.PosSchema),
-      ClassicBridge.parquetWriteConf(spark, rowSchema))
+      ClassicBridge.parquetWriteConf(spark, rowSchema),
+      GraftTable.fileStatsSpec(spark, op.path, rowSchema))
   }
 
   override def useCommitCoordinator(): Boolean = true
@@ -368,10 +371,9 @@ private[graft] class GraftDeltaBatchWrite(op: GraftDeltaOperation,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     require(op.pinned != null,
       s"row-level ${op.command} on '${op.path}': write committed before its scan planned")
-    val pos = messages.collect {
-      case GraftDeltaFiles(p, _) if p.nonEmpty => new File(p) }.toSeq
-    val data = messages.collect {
-      case GraftDeltaFiles(_, d) if d.nonEmpty => new File(d) }.toSeq
+    val deltas = messages.collect { case d: GraftDeltaFiles => d }.toSeq
+    val pos = deltas.map(_.pos).filter(_.file.nonEmpty).map(w => new File(w.file))
+    val data = deltas.map(_.data).filter(_.file.nonEmpty)
     GraftTable.applyDeltaCommit(SparkSession.active, op.path, op.pinned,
       pos, data, rowSchema, op.command.toString.toLowerCase + "_rowlevel_mor"): Unit
   }
@@ -379,8 +381,7 @@ private[graft] class GraftDeltaBatchWrite(op: GraftDeltaOperation,
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case GraftDeltaFiles(p, d) =>
-        if (p.nonEmpty) new File(p).delete(): Unit
-        if (d.nonEmpty) new File(d).delete(): Unit
+        Seq(p, d).filter(_.file.nonEmpty).foreach(w => new File(w.file).delete(): Unit)
       case _ => ()
     }
 }
@@ -396,62 +397,40 @@ private[graft] object GraftDeltaBatchWrite {
 
 private[graft] class GraftDeltaWriterFactory(stageDir: String,
     posConf: org.apache.spark.util.SerializableConfiguration,
-    rowConf: org.apache.spark.util.SerializableConfiguration)
+    rowConf: org.apache.spark.util.SerializableConfiguration, rowSpec: FileStatsSpec)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   private val runId = java.util.UUID.randomUUID.toString.take(8)
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new GraftDeltaRowWriter(stageDir, runId, partitionId, taskId, posConf, rowConf)
+    new GraftDeltaRowWriter(
+      new GraftRowFileWriter(stageDir, s"del-r$runId", partitionId, taskId, posConf,
+        FileStatsSpec.Empty),
+      new GraftRowFileWriter(stageDir, s"ins-r$runId", partitionId, taskId, rowConf, rowSpec))
 }
 
-/** Per-task delta writer: deleted row ids stream into a staged
-  * (file, pos) parquet, inserted rows into a staged data parquet —
-  * both lazily opened, so a task that only deletes stages no data file
+/** Per-task delta writer over two [[GraftRowFileWriter]]s: deleted row
+  * ids stream into a staged (file, pos) parquet with no stats, inserted
+  * rows into a staged data parquet with the table's stats — each opened
+  * on its first row, so a task that only deletes stages no data file
   * and vice versa. Updates never arrive (represented delete+insert). */
-private[graft] class GraftDeltaRowWriter(stageDir: String, runId: String,
-    partitionId: Int, taskId: Long,
-    posConf: org.apache.spark.util.SerializableConfiguration,
-    rowConf: org.apache.spark.util.SerializableConfiguration)
+private[graft] class GraftDeltaRowWriter(positions: GraftRowFileWriter,
+    inserts: GraftRowFileWriter)
     extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
 
-  private var posWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private var posFile: File = _
-  private var dataWriter: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
-  private var dataFile: File = _
-
-  override def delete(metadata: InternalRow, id: InternalRow): Unit = {
-    if (posWriter == null) {
-      posFile = new File(stageDir, f"del-r$runId-p$partitionId%05d-t$taskId.parquet")
-      posWriter = ClassicBridge.parquetRowWriter(posConf.value, posFile.getAbsolutePath)
-    }
-    posWriter.write(id)
-  }
+  override def delete(metadata: InternalRow, id: InternalRow): Unit = positions.write(id)
 
   override def update(metadata: InternalRow, id: InternalRow, row: InternalRow): Unit =
     throw new UnsupportedOperationException(
       "updates are represented as delete+insert") // representUpdateAsDeleteAndInsert
 
-  override def insert(row: InternalRow): Unit = {
-    if (dataWriter == null) {
-      dataFile = new File(stageDir, f"ins-r$runId-p$partitionId%05d-t$taskId.parquet")
-      dataWriter = ClassicBridge.parquetRowWriter(rowConf.value, dataFile.getAbsolutePath)
-    }
-    dataWriter.write(row)
-  }
+  override def insert(row: InternalRow): Unit = inserts.write(row)
 
-  override def commit(): WriterCommitMessage = {
-    if (posWriter != null) posWriter.close()
-    if (dataWriter != null) dataWriter.close()
-    GraftDeltaFiles(
-      if (posFile == null) "" else posFile.getAbsolutePath,
-      if (dataFile == null) "" else dataFile.getAbsolutePath)
-  }
+  override def commit(): WriterCommitMessage =
+    GraftDeltaFiles(positions.commit(), inserts.commit())
 
   override def abort(): Unit = {
-    try { if (posWriter != null) posWriter.close() } catch { case _: Throwable => () }
-    try { if (dataWriter != null) dataWriter.close() } catch { case _: Throwable => () }
-    if (posFile != null) posFile.delete(): Unit
-    if (dataFile != null) dataFile.delete(): Unit
+    positions.abort()
+    inserts.abort()
   }
 
   override def close(): Unit = ()

@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project, Union}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.io.File
@@ -9,6 +9,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{FileAlreadyExistsException, Files}
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.{JsonMethods, Serialization}
+
+import graft.sources.{FileStatsSpec, GraftRowFileWriter, GraftWrittenFile}
 
 /** A manifest-committed versioned table format — the "Delta/Iceberg seam"
   * [[TableIO]] documents, delivered in-repo. Closes SURVEY §2.1 S6
@@ -529,7 +531,7 @@ object GraftTable {
     * false positive only costs a read, never a wrong result). */
   private[graft] val BloomK = 5
   private val BloomBitsPerKey = 10
-  private val MaxBloomBits = 1 << 16
+  private[graft] val MaxBloomBits = 1 << 16
 
   private def bloomBits(maxRowsPerFile: Long): Int = {
     var m = 1024
@@ -537,11 +539,21 @@ object GraftTable {
     m
   }
 
+  /** A writer's [[MaxBloomBits]] bitmap folded to an `m`-bit bloom by
+    * OR-ing its `m`-bit slices: exact, because the positions are
+    * `pmod(h, MaxBloomBits)` and `pmod(h, m) == pmod(h, MaxBloomBits) mod m`
+    * for powers of two `m <= MaxBloomBits`. */
+  private def foldBloom(bits: Array[Byte], m: Int): String = {
+    val out = new Array[Byte](m / 8)
+    for (i <- bits.indices) out(i % out.length) = (out(i % out.length) | bits(i)).toByte
+    s"$BloomK:$m:" + java.util.Base64.getEncoder.encodeToString(out)
+  }
+
   /** The write-side and probe-side hash MUST be the same function, so both
     * are the engine's own `xxhash64(value, probeIndex)` — the probe side
     * evaluates it through a one-row local job ([[probeHashes]]) instead of
     * re-implementing the hash on the driver. */
-  private def bloomPositions(c: Column, dt: DataType, k: Int, m: Int): Column =
+  private[graft] def bloomPositions(c: Column, dt: DataType, k: Int, m: Int): Column =
     array((0 until k).map(i => pmod(xxhash64(c.cast(dt), lit(i)), lit(m.toLong))): _*)
 
   /** DISTINCT-COUNT estimate from the per-file bloom sidecars — the
@@ -585,33 +597,6 @@ object GraftTable {
     val bytes = new Array[Byte](m / 8)
     positions.foreach { p => bytes(p.toInt >>> 3) = (bytes(p.toInt >>> 3) | (1 << (p.toInt & 7))).toByte }
     s"$k:$m:${java.util.Base64.getEncoder.encodeToString(bytes)}"
-  }
-
-  /** OR-bitmap aggregator over a row's k bloom positions — the write-side
-    * bloom builder as one MAP-SIDE-COMBINABLE aggregate. Each task ORs
-    * its rows' bits into a fixed m/8-byte buffer; merge is byte OR. All
-    * bloom columns ride a single groupBy(file) job whose shuffle volume
-    * is one buffer per (file, column) per task — at 100 TB this is the
-    * difference between a bloom pass that distinct-shuffles row-scale
-    * position traffic and one that moves kilobytes. */
-  private class BloomBitmapAgg(mBits: Int) extends
-      org.apache.spark.sql.expressions.Aggregator[Seq[Long], Array[Byte], Array[Byte]] {
-    override def zero: Array[Byte] = new Array[Byte](mBits / 8)
-    override def reduce(b: Array[Byte], ps: Seq[Long]): Array[Byte] = {
-      if (ps != null) ps.foreach { p =>
-        b(p.toInt >>> 3) = (b(p.toInt >>> 3) | (1 << (p.toInt & 7))).toByte }
-      b
-    }
-    override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-      var i = 0
-      while (i < a.length) { a(i) = (a(i) | b(i)).toByte; i += 1 }
-      a
-    }
-    override def finish(r: Array[Byte]): Array[Byte] = r
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
   }
 
   /** Raw `xxhash64(v, i)` for every probe value × hash index, computed BY
@@ -687,11 +672,11 @@ object GraftTable {
 
   // ---------------------------------------------------------------- writing
 
-  /** Default cap on auto-selected stats columns — the stats pass re-reads
-    * exactly these columns, so "all of a 500-column table" would turn a
-    * cheap post-write footer pass into a full re-read (Delta's
-    * dataSkippingNumIndexedCols draws the same line at 32). An explicit
-    * `statsCols` list bypasses the cap. */
+  /** Default cap on auto-selected stats columns — the writer compares
+    * every stats column of every row it writes and the manifest carries
+    * each one per file, so "all of a 500-column table" would grow both
+    * with the schema (Delta's dataSkippingNumIndexedCols draws the same
+    * line at 32). An explicit `statsCols` list bypasses the cap. */
   val DefaultStatsCols = 32
 
   /** Columns that get file stats: the caller's list (uncapped), or the
@@ -701,15 +686,73 @@ object GraftTable {
     else schema.fields.toSeq.filter(f => statTag(f.dataType).isDefined).take(DefaultStatsCols)
   }
 
+  /** What the one writer records of each file a write of `schema` into
+    * `path` stages, resolved once on the driver before the write.
+    * PROPERTY-DECLARED indexing: a table carrying `graft.statsCols` /
+    * `graft.bloomCols` / `graft.bucketBy` stamps skipping stats on EVERY
+    * write path — SQL INSERT, the streaming sink, COW rewrites, MOR
+    * appends — not only callers that passed columns explicitly. Declared
+    * columns absent from `schema` (evolution in flight) or of
+    * un-indexable types are ignored; EXPLICIT arguments fail loudly.
+    *
+    *  - stats: the explicit and declared columns, or the first
+    *    [[DefaultStatsCols]] when there are none ([[resolveStatsCols]]);
+    *    every bloom column is a stats column too, to carry its filter;
+    *  - bucket: the explicit spec, else `graft.bucketBy`, when its
+    *    columns are all in `schema`. Each file records its bucket id —
+    *    the shuffle-aligned `pmod(hash(cols), n)` that
+    *    [[graft.catalog.GraftBoundBucket]] is defined by — under
+    *    [[BucketStatCol]] if the file is single-bucket. A multi-bucket
+    *    file records nothing; the scan then degrades from
+    *    storage-partitioned joins, never lies. */
+  private[graft] def fileStatsSpec(spark: SparkSession, path: String, schema: StructType,
+      explicitStats: Seq[String] = Nil, explicitBlooms: Seq[String] = Nil,
+      explicitBucket: Option[(Seq[String], Int)] = None): FileStatsSpec = {
+    val declaredProps = currentManifest(path)
+      .flatMap(_.properties).getOrElse(Map.empty)
+    def declared(k: String): Seq[String] = declaredProps.get(k).toSeq
+      .flatMap(_.split(',')).map(_.trim)
+      .filter(c => c.nonEmpty && schema.fieldNames.contains(c) &&
+        statTag(schema(c).dataType).isDefined)
+    val statsCols = (explicitStats ++ declared("graft.statsCols")).distinct
+    val bloomCols = (explicitBlooms ++ declared("graft.bloomCols")).distinct
+    bloomCols.foreach(c =>
+      require(statTag(schema(c).dataType).isDefined, s"column '$c' can't carry a bloom filter"))
+    val fields0 = resolveStatsCols(schema, statsCols)
+    val fields = fields0 ++ bloomCols.filterNot(c => fields0.exists(_.name == c)).map(c => schema(c))
+    val bucket = (explicitBucket orElse bucketSpec(declaredProps))
+      .filter { case (cs, _) => cs.forall(schema.fieldNames.contains) }
+    val exprs = boundExprs(spark, schema,
+      bucket.toSeq.map { case (cs, n) => pmod(hash(cs.map(col): _*), lit(n)) } ++
+        bloomCols.map(c => bloomPositions(col(c), schema(c).dataType, BloomK, MaxBloomBits)))
+    FileStatsSpec(fields.map(f => (f.name, schema.fieldIndex(f.name), f.dataType)),
+      bucket.map(_ => exprs.head),
+      bloomCols.zip(exprs.drop(bucket.size)).map { case (c, e) => (c, schema.fieldIndex(c), e) })
+  }
+
+  /** `cols` analyzed over a relation of `schema` and bound to its
+    * ordinals, for a writer task to evaluate against each row. */
+  private def boundExprs(spark: SparkSession, schema: StructType,
+      cols: Seq[Column]): Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    if (cols.isEmpty) Nil
+    else {
+      val p = spark.createDataFrame(java.util.Collections.emptyList[Row], schema)
+        .select(cols: _*).queryExecution.analyzed.asInstanceOf[Project]
+      val input = new org.apache.spark.sql.catalyst.expressions.AttributeSeq(p.child.output)
+      p.projectList.map(e =>
+        org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(e, input))
+    }
+
   /** Write `df` into a hidden stage dir, one file per non-empty
-    * partition, then hand the files to [[stageWritten]] (stats, move
-    * into `data/` under commit-unique names, CHECKs against `checks`).
-    * The files come from the same executor writer as the v2 write
-    * surfaces ([[graft.sources.GraftRowFileWriter]] over
+    * partition, then hand the files to [[stageWritten]] (move into
+    * `data/` under commit-unique names, CHECKs against `checks`). The
+    * files come from the same executor writer as the v2 write surfaces
+    * ([[graft.sources.GraftRowFileWriter]] over
     * [[org.apache.spark.sql.graftbridge.ClassicBridge.parquetWriteConf]]),
-    * in one job over `df`'s rows; an empty partition opens no file, so
-    * an empty write stages nothing and commits its parent's file list
-    * verbatim. */
+    * in one job over `df`'s rows, and each reports the stats, bucket id
+    * and blooms [[fileStatsSpec]] asks for; an empty partition opens no
+    * file, so an empty write stages nothing and commits its parent's
+    * file list verbatim. */
   private def stageFiles(df: DataFrame, path: String, statsCols: Seq[String],
       clusterBy: Option[(Column, Int)], checks: Map[String, String],
       bloomCols: Seq[String] = Nil, bucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
@@ -718,8 +761,8 @@ object GraftTable {
     stage.mkdirs()
     // a declared `graft.bucketBy` keeps EVERY driver-staged write path
     // (append / upsert / SQL INSERT) single-bucket-per-file — the
-    // repartition IS Spark's shuffle assignment, so the id recorded by
-    // stagePartEntries matches GraftBoundBucket by construction
+    // repartition IS Spark's shuffle assignment, so the id the writer
+    // records matches GraftBoundBucket by construction
     val effBucket = (bucket orElse bucketSpec(
       currentManifest(path).flatMap(_.properties).getOrElse(Map.empty)))
       .filter { case (cs, _) => cs.forall(df.schema.fieldNames.contains) }
@@ -737,346 +780,54 @@ object GraftTable {
       }
     }
     val conf = org.apache.spark.sql.graftbridge.ClassicBridge.parquetWriteConf(spark, df.schema)
+    val spec = fileStatsSpec(spark, path, df.schema, statsCols, bloomCols, effBucket)
     val dir = stage.getAbsolutePath
     try {
-      val parts = org.apache.spark.sql.graftbridge.ClassicBridge.writePartitions(out) {
+      val written = org.apache.spark.sql.graftbridge.ClassicBridge.writePartitions(out) {
         (task, rows) =>
-          val w = new graft.sources.GraftRowFileWriter(dir, "part", task.partitionId,
-            task.taskAttemptId, conf)
+          val w = new GraftRowFileWriter(dir, "part", task.partitionId, task.taskAttemptId,
+            conf, spec)
           try { rows.foreach(w.write); w.commit() }
           catch { case e: Throwable => w.abort(); throw e }
-      }.collect { case graft.sources.GraftWrittenFile(f) if f.nonEmpty => new File(f) }
-      stageWritten(spark, path, df.schema, parts.toSeq, checks, statsCols, bloomCols, effBucket)
+      }.filter(_.file.nonEmpty)
+      stageWritten(spark, path, df.schema, written.toSeq, checks)
     } finally TableIO.clearDir(stage.toString)
   }
 
-  /** The stage step every write shares, over parquet files already on
-    * disk (from [[stageFiles]] or straight from executor DataWriters):
-    * stats, move into `data/` ([[stagePartEntries]]), then the one CHECK
-    * step ([[checkStaged]]) against `checks`. */
+  /** The stage step every write shares, over files the one writer
+    * already wrote (from [[stageFiles]] or straight from executor
+    * DataWriters): move into `data/` ([[stagePartEntries]]), then the
+    * one CHECK step ([[checkStaged]]) against `checks`. */
   private def stageWritten(spark: SparkSession, path: String, schema: StructType,
-      parts: Seq[File], checks: Map[String, String], statsCols: Seq[String],
-      bloomCols: Seq[String], bucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
-    if (parts.isEmpty) return Nil
-    val staged = stagePartEntries(spark, schema, path,
-      java.util.UUID.randomUUID.toString.take(8), parts, statsCols, bloomCols, bucket)
+      written: Seq[GraftWrittenFile], checks: Map[String, String]): Seq[FileEntry] = {
+    if (written.isEmpty) return Nil
+    val staged = stagePartEntries(path, java.util.UUID.randomUUID.toString.take(8), written)
     checkStaged(spark, path, schema, staged, checks)
     staged
   }
 
-  /** FOOTER-DERIVED file stats — the zero-job fast path under
-    * [[stagePartEntries]]: the parquet footers of files we JUST wrote
-    * already carry per-chunk row counts, null counts, and min/max, so
-    * the post-write stats pass can be a driver-side footer fold instead
-    * of a Spark job re-reading every indexed column of the batch. At
-    * 100 TB that re-read is the single biggest write-path overhead this
-    * format adds (up to 32 columns re-decoded per append); footers make
-    * it O(files) metadata reads. (Iceberg collects write metrics the
-    * same way — from the footer, never a second scan.)
-    *
-    * STRICT usability contract — any doubt falls back to the job, so
-    * the two paths are value-identical by construction (spec-pinned):
-    *
-    *  - every chunk of every needed column must expose statistics with
-    *    a null count; a chunk with values but no min/max (e.g. a
-    *    HUGE binary value made the writer drop them) bails;
-    *  - the physical/logical type pair must be one we decode exactly
-    *    (INT96 timestamps — pre-switch legacy files — bail);
-    *  - doubles: NaN-polluted or ±0.0 bounds bail (parquet normalizes
-    *    zero signs; Spark's aggregate may keep either — the values
-    *    compare equal in SQL but not byte-identically in the manifest);
-    *  - ancient dates/timestamps (pre-Gregorian-cutover) bail — under
-    *    LEGACY rebase the raw on-disk value differs from the logical
-    *    one.
-    *
-    * Returns per-file (rows, stats) keyed by file NAME, or None when
-    * any file/column is unusable. Zero-row files record no stats map,
-    * exactly like the job path (no groupBy row). */
-  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-      parts: Seq[File], fields: Seq[StructField])
-      : Option[Map[String, (Long, Map[String, ColStats])]] = try {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    val GregorianCutoverDay = -141427L // 1582-10-15 as epoch day
-    val GregorianCutoverMicros = -12219292800000000L
-    def decode(dt: DataType, pt: org.apache.parquet.schema.PrimitiveType,
-        v: AnyRef): Option[String] = {
-      val logical = pt.getLogicalTypeAnnotation
-      def signedIntOrPlain: Boolean = logical match {
-        case null => true
-        case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-        case _ => false
-      }
-      (dt, pt.getPrimitiveTypeName) match {
-        case (ByteType | ShortType | IntegerType, PrimitiveTypeName.INT32)
-            if signedIntOrPlain =>
-          Some(v.asInstanceOf[Number].longValue.toString)
-        case (LongType, PrimitiveTypeName.INT64) if signedIntOrPlain =>
-          Some(v.asInstanceOf[Number].longValue.toString)
-        case (DateType, PrimitiveTypeName.INT32)
-            if logical.isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
-          val d = v.asInstanceOf[Number].longValue
-          if (d < GregorianCutoverDay) None else Some(d.toString)
-        case (TimestampType | TimestampNTZType, PrimitiveTypeName.INT64) =>
-          logical match {
-            case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-              val raw = v.asInstanceOf[Number].longValue
-              val micros = t.getUnit match {
-                case LogicalTypeAnnotation.TimeUnit.MICROS => Some(raw)
-                case LogicalTypeAnnotation.TimeUnit.MILLIS => Some(raw * 1000L)
-                case _ => None
-              }
-              micros.filter(_ >= GregorianCutoverMicros).map(_.toString)
-            case _ => None
-          }
-        case (FloatType, PrimitiveTypeName.FLOAT) =>
-          val d = v.asInstanceOf[java.lang.Float].doubleValue
-          if (d.isNaN || d == 0.0d) None else Some(d.toString)
-        case (DoubleType, PrimitiveTypeName.DOUBLE) =>
-          val d = v.asInstanceOf[java.lang.Double].doubleValue
-          if (d.isNaN || d == 0.0d) None else Some(d.toString)
-        case (dec: DecimalType, ptn) =>
-          val scaleOk = logical match {
-            case l: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation =>
-              l.getScale == dec.scale
-            case _ => false
-          }
-          if (!scaleOk) None
-          else {
-            val unscaled: Option[java.math.BigInteger] = ptn match {
-              case PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64 =>
-                Some(java.math.BigInteger.valueOf(v.asInstanceOf[Number].longValue))
-              case PrimitiveTypeName.BINARY | PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY =>
-                Some(new java.math.BigInteger(
-                  v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes))
-              case _ => None
-            }
-            unscaled.map(u =>
-              new java.math.BigDecimal(u, dec.scale).toPlainString)
-          }
-        case (StringType, PrimitiveTypeName.BINARY)
-            if logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-          Some(new String(v.asInstanceOf[org.apache.parquet.io.api.Binary]
-            .getBytes, java.nio.charset.StandardCharsets.UTF_8))
-        case _ => None
-      }
-    }
-    def one(p: File): Option[(String, (Long, Map[String, ColStats]))] = {
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(p.toURI), conf))
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        if (rows == 0L) Some(p.getName -> (0L, Map.empty[String, ColStats]))
-        else {
-          val stats: Map[String, ColStats] = fields.map { f =>
-            val tag = statTag(f.dataType).get
-            var nulls = 0L
-            var mn: Option[String] = None
-            var mx: Option[String] = None
-            blocks.foreach { b =>
-              val c = b.getColumns.asScala.find(cc =>
-                cc.getPath.size == 1 && cc.getPath.toDotString == f.name)
-                .getOrElse(return None)
-              val st = c.getStatistics
-              if (st == null || !st.isNumNullsSet) return None
-              nulls += st.getNumNulls
-              if (st.hasNonNullValue) {
-                val lo = decode(f.dataType, c.getPrimitiveType,
-                  st.genericGetMin.asInstanceOf[AnyRef]).getOrElse(return None)
-                val hi = decode(f.dataType, c.getPrimitiveType,
-                  st.genericGetMax.asInstanceOf[AnyRef]).getOrElse(return None)
-                mn = Some(mn.filter(m => cmp(tag, m, lo) <= 0).getOrElse(lo))
-                mx = Some(mx.filter(m => cmp(tag, m, hi) >= 0).getOrElse(hi))
-              } else if (st.getNumNulls != c.getValueCount) {
-                // values present but no bounds recorded — stats dropped
-                return None
-              }
-            }
-            f.name -> ColStats(tag, mn, mx, nulls)
-          }.toMap
-          Some(p.getName -> (rows, stats))
-        }
-      } finally reader.close()
-    }
-    // BOUNDED-PARALLEL fold: the per-file footer read is a metadata RPC
-    // (an object store at 100k files/insert would otherwise serialize
-    // minutes of round-trips inside the commit path) — still zero Spark
-    // jobs, same per-file fallback contract (any unusable file or
-    // column → None → the job path)
-    val perFile = boundedParallel(parts, FooterFoldParallelism)(one)
-    if (perFile.exists(_.isEmpty)) None else Some(perFile.flatten.toMap)
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  private[graft] val FooterFoldParallelism = 16
-
-  /** Shared daemon pool for driver-side metadata folds — sized once,
-    * never grows with table or batch size. */
-  private lazy val metaFoldPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(FooterFoldParallelism,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-meta-fold")
-        t.setDaemon(true)
-        t
-      })
-
-  /** Map `xs` through `f` on the shared bounded pool, preserving order;
-    * the FIRST worker exception rethrows on the caller (same contract
-    * as a sequential map — callers' NonFatal degrades still apply).
-    * Sequential when the input or the budget makes a pool pointless. */
-  private[graft] def boundedParallel[A, B](xs: Seq[A], parallelism: Int)
-      (f: A => B): Seq[B] =
-    if (xs.size <= 1 || parallelism <= 1) xs.map(f)
-    else {
-      import scala.jdk.CollectionConverters._
-      val tasks = xs.map(x =>
-        new java.util.concurrent.Callable[B] { def call(): B = f(x) }).asJava
-      // invokeAll preserves submission order and awaits completion; the
-      // pool bound (not the task count) caps concurrency
-      metaFoldPool.invokeAll(tasks).asScala.toSeq.map { fut =>
-        try fut.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    }
-
-  /** The stats half of [[stageWritten]]: given parquet files the one
-    * executor writer ([[graft.sources.GraftRowFileWriter]]) already
-    * wrote — for [[stageFiles]] or for a v2 batch, streaming or
-    * row-level write — run the stats/bloom pass over exactly those
-    * files and MOVE them into `data/` under commit-unique names,
-    * returning their manifest entries. O(batch) reads, column-pruned to
-    * the indexed columns; never O(table). */
-  private def stagePartEntries(spark: SparkSession, schema: StructType,
-      path: String, commitId: String, parts: Seq[File], explicitStats: Seq[String],
-      explicitBlooms: Seq[String],
-      explicitBucket: Option[(Seq[String], Int)] = None): Seq[FileEntry] = {
-    // PROPERTY-DECLARED indexing: a table carrying `graft.statsCols` /
-    // `graft.bloomCols` stamps skipping stats on EVERY write path —
-    // SQL INSERT, the streaming sink, COW rewrites, MOR appends — not
-    // only callers that passed columns explicitly. Without this, a
-    // declarative table accumulates stat-less (unprunable) files
-    // between OPTIMIZE runs, and at 100 TB "skipping works only for
-    // Scala-API writers" is a correctness-of-design hole. Declared
-    // columns absent from this batch's schema (evolution in flight) or
-    // of un-indexable types are ignored; EXPLICIT arguments keep their
-    // loud checks below.
-    val declaredProps = currentManifest(path)
-      .flatMap(_.properties).getOrElse(Map.empty)
-    def declared(k: String): Seq[String] = declaredProps.get(k).toSeq
-      .flatMap(_.split(',')).map(_.trim)
-      .filter(c => c.nonEmpty && schema.fieldNames.contains(c) &&
-        statTag(schema(c).dataType).isDefined)
-    val statsCols = (explicitStats ++ declared("graft.statsCols")).distinct
-    val bloomCols = (explicitBlooms ++ declared("graft.bloomCols")).distinct
-    val fields0 = resolveStatsCols(schema, statsCols)
-    // bloom columns always get a stats entry to carry the filter
-    val fields = fields0 ++ bloomCols.filterNot(c => fields0.exists(_.name == c))
-      .map(c => schema(c)).filter(f => statTag(f.dataType).isDefined)
-    // bucketed layout bookkeeping: record each file's bucket id (the
-    // shuffle-aligned pmod(hash(k), n) — [[GraftBoundBucket]]) under the
-    // reserved [[BucketStatCol]] stats key, IF the file is single-bucket.
-    // A multi-bucket file (executor-staged COW/stream parts that didn't
-    // flow through the stageFiles repartition) records nothing — the
-    // scan then degrades from storage-partitioned joins, never lies.
-    val bucket = (explicitBucket orElse bucketSpec(declaredProps))
-      .filter { case (cs, _) => cs.forall(schema.fieldNames.contains) }
-    val bucketAggs = bucket.toSeq.flatMap { case (cs, n) =>
-      val b = pmod(hash(cs.map(col): _*), lit(n))
-      Seq(min(b).as("__graft_bmin"), max(b).as("__graft_bmax"))
-    }
-    def bucketStatOf(r: org.apache.spark.sql.Row): Option[(String, ColStats)] =
-      bucket.flatMap { _ =>
-        (Option(r.get(r.fieldIndex("__graft_bmin"))),
-          Option(r.get(r.fieldIndex("__graft_bmax")))) match {
-          case (Some(a), Some(b)) if a == b =>
-            Some(BucketStatCol ->
-              ColStats("int", Some(a.toString), Some(a.toString), 0L))
-          case _ => None
-        }
-      }
-    // FAST PATH: fold the footers of the files we just wrote (zero
-    // jobs, O(files) driver metadata reads — [[footerStats]]); the
-    // bucket-id bookkeeping still runs as a job, but pruned to ONLY the
-    // bucket key columns (the id is a computed hash, footers can't
-    // carry it). Any unusable footer falls back to the original
-    // one-job combined pass — value-identical by construction.
-    val footer = if (disableFooterStatsForTests) None
-      else footerStats(spark.sessionState.newHadoopConf(), parts, fields)
-    lastStatsPassUsedFooterForTests = footer.isDefined
-    val statRows: Map[String, (Long, Map[String, ColStats])] = footer match {
-      case Some(byFile) if bucket.isEmpty => byFile
-      case Some(byFile) =>
-        // explicit FILE paths, not the stage dir: the dir is
-        // dot-prefixed (hidden to any directory listing)
-        val bucketRows = spark.read.schema(schema).parquet(parts.map(_.toString): _*)
-          .groupBy(input_file_name().as("__f")).agg(bucketAggs.head, bucketAggs.tail: _*)
-          .collect().map(r => r.getString(0).split('/').last -> bucketStatOf(r)).toMap
-        byFile.map { case (base, (rows, stats)) =>
-          base -> (rows, stats ++ bucketRows.getOrElse(base, None))
-        }
-      case None =>
-        val allAggs = (count(lit(1L)).as("__rows") +: fields.flatMap { f =>
-          Seq(min(col(f.name)).as(s"__min_${f.name}"),
-            max(col(f.name)).as(s"__max_${f.name}"),
-            sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
-        }) ++ bucketAggs
-        spark.read.schema(schema).parquet(parts.map(_.toString): _*)
-          .groupBy(input_file_name().as("__f")).agg(allAggs.head, allAggs.tail: _*)
-          .collect().map { r =>
-            val base = r.getString(0).split('/').last
-            val stats = fields.map { f =>
-              val tag = statTag(f.dataType).get
-              val mn = Option(r.get(r.fieldIndex(s"__min_${f.name}"))).map(encode(tag, _))
-              val mx = Option(r.get(r.fieldIndex(s"__max_${f.name}"))).map(encode(tag, _))
-              f.name -> ColStats(tag, mn, mx, r.getAs[Long](s"__nulls_${f.name}"))
-            }.toMap
-            base -> (r.getAs[Long]("__rows"), stats ++ bucketStatOf(r))
-          }.toMap
-    }
-
-    // ONE distributed pass for ALL bloom columns: each row's k engine-
-    // hashed positions OR into an m/8-byte bitmap aggregator with
-    // map-side combine, so the shuffle is one small buffer per
-    // (file, column) — never row-scale position traffic (the old shape
-    // exploded and distinct-shuffled positions once PER column). A file
-    // whose column is all-NULL records an all-zero bloom: any probe
-    // proves it clean, which is exact (it has no values to match).
-    val blooms: Map[String, Map[String, String]] = if (bloomCols.isEmpty) Map.empty else {
-      val maxRows = statRows.values.map(_._1).maxOption.getOrElse(0L)
-      val m = bloomBits(maxRows)
-      val bloomAgg = udaf(new BloomBitmapAgg(m),
-        org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
-      val aggCols = bloomCols.map { c =>
-        val f = schema(c)
-        require(statTag(f.dataType).isDefined, s"column '$c' can't carry a bloom filter")
-        bloomAgg(when(col(c).isNotNull, bloomPositions(col(c), f.dataType, BloomK, m))
-          .otherwise(array().cast("array<bigint>"))).as(s"__bloom_$c")
-      }
-      val rows = spark.read.schema(schema).parquet(parts.map(_.toString): _*)
-        .groupBy(input_file_name().as("__f")).agg(aggCols.head, aggCols.tail: _*)
-        .collect()
-      bloomCols.map { c =>
-        c -> rows.map(r => r.getString(0).split('/').last ->
-          (s"$BloomK:$m:" + java.util.Base64.getEncoder.encodeToString(
-            r.getAs[Array[Byte]](s"__bloom_$c")))).toMap
-      }.toMap
-    }
-
+  /** The move half of [[stageWritten]]: MOVE the files the one executor
+    * writer ([[graft.sources.GraftRowFileWriter]]) wrote — for
+    * [[stageFiles]] or for a v2 batch, streaming or row-level write —
+    * into `data/` under commit-unique names, and build their manifest
+    * entries from what that writer recorded: rows, stats and bucket id,
+    * with each bloom folded to the batch's size ([[bloomBits]] of its
+    * largest file, [[foldBloom]]). It reads no file and runs no Spark
+    * job. */
+  private def stagePartEntries(path: String, commitId: String,
+      written: Seq[GraftWrittenFile]): Seq[FileEntry] = {
+    val m = bloomBits(written.map(_.rows).max)
     val dataDir = new File(path, DataDir); dataDir.mkdirs()
-    parts.map { p =>
+    written.map { w =>
+      val p = new File(w.file)
       val name = s"$commitId-${p.getName}"
       val bytes = p.length
       Files.move(p.toPath, new File(dataDir, name).toPath): Unit
-      val (rows, stats) = statRows.getOrElse(p.getName, (0L, Map.empty[String, ColStats]))
-      val withBlooms = stats.map { case (cn, cs) =>
-        cn -> blooms.get(cn).flatMap(_.get(p.getName))
-          .map(b => cs.copy(bloom = Some(b))).getOrElse(cs)
+      val stats = w.stats.map { case (c, cs) =>
+        c -> w.blooms.get(c).fold(cs)(b => cs.copy(bloom = Some(foldBloom(b, m))))
       }
-      FileEntry(s"$DataDir/$name", rows, bytes, withBlooms)
-    }.toSeq
+      FileEntry(s"$DataDir/$name", w.rows, bytes, stats)
+    }
   }
 
   private def activeChecks(path: String): Map[String, String] =
@@ -1124,12 +875,6 @@ object GraftTable {
     * window a concurrent commit (e.g. [[addCheck]]) can land in. The spec
     * uses it to stage the check-attach race deterministically. */
   private[graft] var betweenStageAndCommitForTests: () => Unit = () => ()
-
-  /** Test seams for the footer-stats fast path: force the job fallback
-    * (so the equality spec can produce both paths' manifests from the
-    * same data) and observe which path the last stats pass took. */
-  private[graft] var disableFooterStatsForTests: Boolean = false
-  private[graft] var lastStatsPassUsedFooterForTests: Boolean = false
 
   private def writeOp(df: DataFrame, path: String, op: String, statsCols: Seq[String],
       clusterBy: Option[(Column, Int)], bloomCols: Seq[String] = Nil,
@@ -1345,17 +1090,18 @@ object GraftTable {
     * [[graft.sources.GraftStreamingWrite]] — `writeStream.toTable`):
     * fold files ALREADY WRITTEN by executor DataWriter tasks into the
     * manifest through the same two steps as the driver-staged
-    * [[append]]/[[overwrite]]/[[appendStream]] — [[stageWritten]] (stats,
-    * move, CHECKs) and the [[commitStaged]] CAS loop. The rows never
-    * pass through the driver. `op` is `overwrite`, `append` or
-    * `stream_append`; a stream append carries its (stream id, epoch)
-    * `mark`, and a replayed epoch deletes its files and returns -1. */
+    * [[append]]/[[overwrite]]/[[appendStream]] — [[stageWritten]] (move,
+    * CHECKs; the writers recorded the stats) and the [[commitStaged]] CAS
+    * loop. The rows never pass through the driver. `op` is `overwrite`,
+    * `append` or `stream_append`; a stream append carries its (stream
+    * id, epoch) `mark`, and a replayed epoch deletes its files and
+    * returns -1. */
   private[graft] def commitWritten(spark: SparkSession, path: String, op: String,
-      parts: Seq[File], schema: StructType, statsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil, mark: Option[(String, Long)] = None): Long = {
+      parts: Seq[GraftWrittenFile], schema: StructType,
+      mark: Option[(String, Long)] = None): Long = {
     val checks = activeChecks(path)
     commitStaged(spark, path, op, schema,
-      stageWritten(spark, path, schema, parts, checks, statsCols, bloomCols), checks, mark)
+      stageWritten(spark, path, schema, parts, checks), checks, mark)
   }
 
   /** The commit half of a DSv2 GROUP-BASED row-level operation
@@ -1364,8 +1110,9 @@ object GraftTable {
     * `removed` (the files the operation's scan planned, already
     * narrowed by the pushed-condition stats prune) with the
     * executor-written `stagedParts`, in ONE manifest CAS. Same
-    * stats/bloom pass, CHECK enforcement, and property-declared
-    * indexing as every other write ([[stagePartEntries]]).
+    * writer-recorded stats and blooms, CHECK enforcement, and
+    * property-declared indexing as every other write
+    * ([[fileStatsSpec]], [[stagePartEntries]]).
     *
     * Concurrency: the rebase loop tolerates concurrent APPENDS (the
     * removed set is still present — new files carry forward), but a
@@ -1374,7 +1121,7 @@ object GraftTable {
     * Removing a dv'd scanned file retires its sidecar reference with
     * it (the rewritten rows were read live-only). */
   private[graft] def replaceFilesCommit(spark: SparkSession, path: String,
-      removed: Seq[FileEntry], stagedParts: Seq[File], schema: StructType,
+      removed: Seq[FileEntry], stagedParts: Seq[GraftWrittenFile], schema: StructType,
       op: String): Long = {
     val removedKeys = removed.map(_.path).toSet
     // scan-time vector per scanned file: a concurrent DV swap keeps the
@@ -1383,7 +1130,7 @@ object GraftTable {
     val removedDv: Map[String, Option[DvRef]] =
       removed.map(fe => fe.path -> fe.dv).toMap
     var validatedChecks = activeChecks(path)
-    val entries = stageWritten(spark, path, schema, stagedParts, validatedChecks, Nil, Nil)
+    val entries = stageWritten(spark, path, schema, stagedParts, validatedChecks)
     betweenStageAndCommitForTests()
     try {
       var committed = -1L
@@ -1440,7 +1187,7 @@ object GraftTable {
     * same file could have killed rows this statement resurrects as
     * updates. Untouched files rebase freely. */
   private[graft] def applyDeltaCommit(spark: SparkSession, path: String,
-      pinned: Manifest, posParts: Seq[File], dataParts: Seq[File],
+      pinned: Manifest, posParts: Seq[File], dataParts: Seq[GraftWrittenFile],
       schema: StructType, op: String): Long = {
     val cur = currentManifest(path).getOrElse(
       throw new IllegalStateException(s"graft table '$path' vanished mid-operation"))
@@ -1476,7 +1223,7 @@ object GraftTable {
     // statement resurrects as update images — never merge blind
     val pinnedDv: Map[String, Option[DvRef]] = filesOf(path, pinned)
       .map(fe => fileUri(path, fe) -> fe.dv).toMap
-    val entries = stageWritten(spark, path, schema, dataParts, Map.empty, Nil, Nil)
+    val entries = stageWritten(spark, path, schema, dataParts, Map.empty)
     // a refusal must reclaim EVERYTHING this statement placed: the staged
     // data entries, the freshly-written dv sidecars (already in DvDir from
     // the executor mapGroups job), and the staged position parts
@@ -2112,7 +1859,8 @@ object GraftTable {
         source.join(candKeys, antiCond, "left_anti")
           .select(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)).toSeq: _*)
       }
-    morDml(spark, path, matcher, pruneRanges, "merge_mor", Some(images), inserts)
+    morDml(spark, path, matcher, pruneRanges, "merge_mor", Some(images), inserts,
+      localSource = ks.tuples.isDefined)
   }
 
   /** The shared merge-on-read body: `matcher` selects the to-be-masked
@@ -2126,11 +1874,14 @@ object GraftTable {
     * candidate live set) stage as new files, and the commit is dv
     * pointer swaps + staged adds. A file whose vector covers every
     * physical row drops from the manifest (its orphaned sidecar is
-    * vacuum fodder). */
+    * vacuum fodder). A `localSource` (a driver-local MERGE source)
+    * bounds both the images and the appends by its own rows, so they
+    * stage as one file. */
   private def morDml(spark: SparkSession, path: String,
       matcher: DataFrame => DataFrame, pruneRanges: Seq[ColRange], op: String,
       replace: Option[DataFrame => DataFrame],
-      extraAppend: Option[DataFrame => DataFrame] = None): Long = {
+      extraAppend: Option[DataFrame => DataFrame] = None,
+      localSource: Boolean = false): Long = {
     val cur = currentManifest(path).getOrElse(
       throw new IllegalArgumentException(s"'$path' is not a GraftTable"))
     val logical = StructType.fromDDL(cur.schemaDdl)
@@ -2195,7 +1946,8 @@ object GraftTable {
       val statsCols =
         (touched.flatMap(_.stats.keys) ++ candidates.flatMap(_.stats.keys)).distinct
       val staged = (images.toSeq ++ appended.toSeq).reduceOption(_ unionByName _)
-        .map(df => stageFiles(df, path, statsCols, None, cur.checks.getOrElse(Map.empty)))
+        .map(df => stageFiles(if (localSource) df.coalesce(1) else df, path, statsCols, None,
+          cur.checks.getOrElse(Map.empty)))
         .getOrElse(Nil)
       val (files, leaves) = packCommit(path,
         untouched ++ updatedEntries ++ staged, carriedRefs)
@@ -2770,6 +2522,51 @@ object GraftTable {
 
   // ---------------------------------------------------------------- analyze
 
+  /** Per-file stats of files the one writer did not write (ANALYZE,
+    * CONVERT), from one grouped job over `df` (columns under their
+    * logical names): each file's row count and each of `fields`' min,
+    * max and null count; and each `bloomCols` column's `mBits`-bit bloom,
+    * from one more job per column at (file, position) grain — at most
+    * `mBits` positions per file reach the driver. Keyed by file
+    * basename; a zero-row file has no entry. */
+  private def scanFileStats(df: DataFrame, fields: Seq[StructField],
+      bloomCols: Seq[String] = Nil, mBits: Int = 0): Map[String, (Long, Map[String, ColStats])] = {
+    val file = input_file_name().as("__f")
+    // input_file_name() is the URI form — decode before taking the
+    // basename, or any percent-encoded name (spaces etc.) would miss
+    def base(uri: String): String = new java.net.URI(uri).getPath match {
+      case null => uri.split('/').last // not a parseable URI — raw basename
+      case p => p.split('/').last
+    }
+    val blooms: Map[String, Map[String, String]] = bloomCols.map { c =>
+      val pos = df.filter(col(c).isNotNull)
+        .select(file, explode(bloomPositions(col(c), df.schema(c).dataType, BloomK, mBits)))
+        .distinct().collect()
+      c -> pos.groupBy(r => base(r.getString(0)))
+        .map { case (bn, rs) => bn -> packBloom(BloomK, mBits, rs.map(_.getLong(1)).toSeq) }
+    }.toMap
+    val aggs = count(lit(1L)).as("__rows") +: fields.flatMap { f =>
+      Seq(min(col(f.name)).as(s"__min_${f.name}"), max(col(f.name)).as(s"__max_${f.name}"),
+        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
+    }
+    df.groupBy(file).agg(aggs.head, aggs.tail: _*).collect().map { r =>
+      val bn = base(r.getString(0))
+      bn -> (r.getAs[Long]("__rows"), fields.map { f =>
+        val tag = statTag(f.dataType).get
+        f.name -> ColStats(tag,
+          Option(r.get(r.fieldIndex(s"__min_${f.name}"))).map(encode(tag, _)),
+          Option(r.get(r.fieldIndex(s"__max_${f.name}"))).map(encode(tag, _)),
+          r.getAs[Long](s"__nulls_${f.name}"),
+          // an all-NULL column produced no positions: attach the
+          // all-clear bloom anyway, or ANALYZE's needsWork stays true and
+          // every later ANALYZE re-scans the file and commits a
+          // do-nothing version
+          bloom = if (!bloomCols.contains(f.name)) None
+            else Some(blooms(f.name).getOrElse(bn, packBloom(BloomK, mBits, Nil))))
+      }.toMap)
+    }.toMap
+  }
+
   /** Backfill per-file stats (and bloom filters, for `bloomCols`) onto
     * the CURRENT snapshot WITHOUT rewriting any data — ANALYZE, the
     * post-hoc half of the stats story: file skipping ([[readPruned]],
@@ -2789,12 +2586,6 @@ object GraftTable {
     require(cols.nonEmpty || bloomCols.nonEmpty, "nothing to analyze")
     val want = (cols ++ bloomCols).distinct
     val bloomSet = bloomCols.toSet
-    // input_file_name() is the URI form — decode before taking the
-    // basename (the convertParquetDir lesson)
-    def base(uri: String): String = new java.net.URI(uri).getPath match {
-      case null => uri.split('/').last
-      case p => p.split('/').last
-    }
     val cache = scala.collection.mutable.Map.empty[String, Map[String, ColStats]]
     var committed = -1L
     while (committed < 0) {
@@ -2821,47 +2612,15 @@ object GraftTable {
           val phys = StructType(fields.map(f => f.copy(name = ren.getOrElse(f.name, f.name))))
           val dfp = spark.read.schema(phys).parquet(fs.map(fe => resolveData(path, fe)): _*)
             .select(fields.map(f => col(ren.getOrElse(f.name, f.name)).as(f.name)).toSeq: _*)
-          val aggs = fields.flatMap { f =>
-            Seq(min(col(f.name)).as(s"__min_${f.name}"),
-              max(col(f.name)).as(s"__max_${f.name}"),
-              sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
-          }
-          val perFile = dfp.groupBy(input_file_name().as("__f"))
-            .agg(aggs.head, aggs.tail: _*).collect()
-            .map(r => base(r.getString(0)) -> r).toMap
-          // one distributed pass per bloom column, (file, position) grain
-          // — ≤ mBits ints per file reach the driver (the stageFiles shape)
-          val blooms: Map[String, Map[String, String]] =
-            bloomSet.intersect(fields.map(_.name).toSet).map { c =>
-              val pos = dfp.filter(col(c).isNotNull)
-                .select(input_file_name().as("__f"),
-                  explode(bloomPositions(col(c), logical(c).dataType, BloomK, mBits)).as("__p"))
-                .distinct().collect()
-              c -> pos.groupBy(r => base(r.getString(0)))
-                .map { case (bn, rs) => bn -> packBloom(BloomK, mBits, rs.map(_.getLong(1)).toSeq) }
-            }.toMap
+          val perFile = scanFileStats(dfp, fields, bloomCols, mBits)
           fs.foreach { fe =>
             val bn = fe.path.split('/').last
-            cache(bn) = perFile.get(bn) match {
-              case Some(r) => fields.map { f =>
-                val tag = statTag(f.dataType).get
-                f.name -> ColStats(tag,
-                  Option(r.get(r.fieldIndex(s"__min_${f.name}"))).map(encode(tag, _)),
-                  Option(r.get(r.fieldIndex(s"__max_${f.name}"))).map(encode(tag, _)),
-                  r.getAs[Long](s"__nulls_${f.name}"),
-                  // an all-NULL column produced no positions: attach the
-                  // all-clear bloom anyway, or needsWork stays true and
-                  // every future ANALYZE re-scans this file and commits
-                  // a do-nothing version
-                  bloom = blooms.get(f.name).flatMap(_.get(bn)).orElse(
-                    if (bloomSet(f.name)) Some(packBloom(BloomK, mBits, Nil)) else None))
-              }.toMap
-              // a zero-row file yields no groupBy row: register empty
-              // stats (and an all-clear bloom) rather than refusing
-              case None => fields.map(f => f.name -> ColStats(statTag(f.dataType).get,
-                None, None, 0L,
-                bloom = if (bloomSet(f.name)) Some(packBloom(BloomK, mBits, Nil)) else None)).toMap
-            }
+            // a zero-row file yields no groupBy row: register empty
+            // stats (and an all-clear bloom) rather than refusing
+            cache(bn) = perFile.get(bn).map(_._2).getOrElse(
+              fields.map(f => f.name -> ColStats(statTag(f.dataType).get, None, None, 0L,
+                bloom = if (bloomSet(f.name)) Some(packBloom(BloomK, mBits, Nil)) else None))
+                .toMap)
           }
         }
       }
@@ -2903,33 +2662,10 @@ object GraftTable {
     require(parts.nonEmpty, s"no parquet files at '$dir' to convert")
     val df = TableIO.readParquet(spark, parts.map(_.toString).toSeq: _*)
     val fields = resolveStatsCols(df.schema, statsCols)
-    val aggs = count(lit(1L)).as("__rows") +: fields.flatMap { f =>
-      Seq(min(col(f.name)).as(s"__min_${f.name}"), max(col(f.name)).as(s"__max_${f.name}"),
-        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nulls_${f.name}"))
-    }
-    // input_file_name() is the URI form — decode before taking the
-    // basename, or any percent-encoded name (spaces etc.) fails to match
-    // File.getName and refuses an otherwise convertible directory
-    val perFile = df.groupBy(input_file_name().as("__f")).agg(aggs.head, aggs.tail: _*)
-      .collect().map { r =>
-        val base = new java.net.URI(r.getString(0)).getPath match {
-          case null => r.getString(0).split('/').last // not a parseable URI — raw basename
-          case p => p.split('/').last
-        }
-        base -> r
-      }.toMap
+    val perFile = scanFileStats(df, fields)
     val entries = parts.map { p =>
       perFile.get(p.getName) match {
-        case Some(r) =>
-          val stats = fields.flatMap { f =>
-            statTag(f.dataType).map { tag =>
-              f.name -> ColStats(tag,
-                Option(r.get(r.fieldIndex(s"__min_${f.name}"))).map(encode(tag, _)),
-                Option(r.get(r.fieldIndex(s"__max_${f.name}"))).map(encode(tag, _)),
-                r.getAs[Long](s"__nulls_${f.name}"))
-            }
-          }.toMap
-          FileEntry(p.getName, r.getAs[Long]("__rows"), p.length, stats)
+        case Some((rows, stats)) => FileEntry(p.getName, rows, p.length, stats)
         // a zero-row part file produces no groupBy row at all — still a
         // valid member; register it with rows=0 and no stats
         case None => FileEntry(p.getName, 0L, p.length, Map.empty)

@@ -43,8 +43,10 @@ import graft.core.GraftTable
   *    stats on the key stay tight (the same consolation prize the
   *    Scala API's bucketed writes buy with `sortWithinPartitions`).
   *
-  * Checks, stats, blooms, property-declared indexing and the commit CAS
-  * are the same two steps as every other staged write
+  * Stats, blooms and bucket ids are recorded by the writer itself, for
+  * the columns [[GraftTable.fileStatsSpec]] resolves before the write
+  * (explicit plus property-declared indexing); the CHECK step and the
+  * commit CAS are the same as every other staged write's
   * ([[GraftTable.commitWritten]]). Streaming writes keep the
   * epoch-committing [[GraftStreamingWrite]] — same steps, plus the
   * exactly-once high-water mark.
@@ -101,6 +103,11 @@ private[graft] class GraftWrite(path: String, info: LogicalWriteInfo,
     (if (overwriteAll) " (overwrite)" else "")
 }
 
+/** The batch half of [[GraftWrite]]: one job stage dir, one
+  * [[FileStatsSpec]] resolved on the driver for every task's
+  * [[GraftRowFileWriter]], and one commit of the files those writers
+  * report — their stats, bucket ids and blooms as recorded while they
+  * wrote, so the commit reads no file. */
 private[graft] class GraftBatchWrite(path: String,
     schema: org.apache.spark.sql.types.StructType, overwriteAll: Boolean,
     statsCols: Seq[String], bloomCols: Seq[String]) extends BatchWrite {
@@ -117,18 +124,18 @@ private[graft] class GraftBatchWrite(path: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     jobStageDir.mkdirs()
+    val spark = SparkSession.active
     new GraftBatchWriterFactory(jobStageDir.getAbsolutePath,
-      ClassicBridge.parquetWriteConf(SparkSession.active, schema))
+      ClassicBridge.parquetWriteConf(spark, schema),
+      GraftTable.fileStatsSpec(spark, path, schema, statsCols, bloomCols))
   }
 
   override def useCommitCoordinator(): Boolean = true
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case GraftWrittenFile(f) if f.nonEmpty => new File(f)
-    }.toSeq
+    val files = messages.collect { case w: GraftWrittenFile if w.file.nonEmpty => w }.toSeq
     GraftTable.commitWritten(SparkSession.active, path,
-      if (overwriteAll) "overwrite" else "append", files, schema, statsCols, bloomCols): Unit
+      if (overwriteAll) "overwrite" else "append", files, schema): Unit
     // this job's subdir is now fully ours: the commit moved every named
     // file into data/, so whatever remains is our own dead task
     // attempts' orphans — reclaim the whole dir
@@ -150,7 +157,7 @@ private[graft] class GraftBatchWrite(path: String,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     messages.foreach {
-      case GraftWrittenFile(f) if f.nonEmpty => new File(f).delete(): Unit
+      case w: GraftWrittenFile if w.file.nonEmpty => new File(w.file).delete(): Unit
       case _ => ()
     }
     graft.core.TableIO.clearDir(jobStageDir.toString)
@@ -160,11 +167,11 @@ private[graft] class GraftBatchWrite(path: String,
 }
 
 private[graft] class GraftBatchWriterFactory(stageDir: String,
-    conf: SerializableConfiguration) extends DataWriterFactory {
+    conf: SerializableConfiguration, spec: FileStatsSpec) extends DataWriterFactory {
   // per-job discriminator: retried tasks of a dead job must not collide
   // with its orphans in the stage dir (ParquetWriter CREATE mode fails
   // the task) — same discipline as the streaming factory
   private val runId = java.util.UUID.randomUUID.toString.take(8)
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftRowFileWriter(stageDir, s"ins-r$runId", partitionId, taskId, conf)
+    new GraftRowFileWriter(stageDir, s"ins-r$runId", partitionId, taskId, conf, spec)
 }

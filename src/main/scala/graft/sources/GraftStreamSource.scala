@@ -707,6 +707,15 @@ private[sources] object GraftGroupReader {
         }
       case other => unsupported(dt, other)
     }
+    // a decimal's unscaled value, at the column's precision and scale
+    case d: DecimalType => prim.getPrimitiveTypeName match {
+      case PrimitiveTypeName.INT32 => Decimal(g.getInteger(i, 0).toLong, d.precision, d.scale)
+      case PrimitiveTypeName.INT64 => Decimal(g.getLong(i, 0), d.precision, d.scale)
+      case PrimitiveTypeName.BINARY | PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY =>
+        Decimal(new java.math.BigDecimal(
+          new java.math.BigInteger(g.getBinary(i, 0).getBytes), d.scale), d.precision, d.scale)
+      case other => unsupported(dt, other)
+    }
     case other => throw new UnsupportedOperationException(
       s"graft streaming source reads flat primitive schemas; column type $other is " +
         "not supported — project it away or consume via the batch API")

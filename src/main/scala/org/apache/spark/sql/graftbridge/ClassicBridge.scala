@@ -66,9 +66,11 @@ object ClassicBridge {
     ParquetWriteSupport.setSchema(schema, conf)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
       sql.writeLegacyParquetFormat.toString)
-    // always standard INT64 micros, never legacy INT96: INT96 footers
-    // carry no min/max for the footer-stats fast path, and micros is
-    // what this format's readers and every modern engine expect
+    // always standard INT64 micros, never the session's INT96 default:
+    // every GraftTable write goes through this one writer, so pinning
+    // the encoding here keeps the Scala API, SQL and streaming files
+    // byte-for-byte alike whatever the session says, and micros is what
+    // this format's readers and every modern engine expect
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
     conf.set(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key,
       sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString)

@@ -219,16 +219,13 @@ class GraftBatchWriteSpec extends AnyFunSuite with SparkSpecBase {
       "timestamp'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, cast(id as int), 0, 0) AS ts",
       "cast(id * 1.25 as decimal(10,2)) AS amt")
     val batch = spark.range(0, 20).selectExpr(cols: _*).coalesce(1)
-    // the graft stream source reads flat primitive schemas: stream the ids
-    // and derive the same columns inside the query
-    GraftTable.overwrite(spark.range(0, 20).toDF().coalesce(1), s"$warehouse/ns/par_ids")
     val api = s"$warehouse/ns/par_api"
     GraftTable.append(batch, api)
     val sql = s"$warehouse/ns/par_sql"
     GraftTable.create(sql, batch.schema)
     batch.createOrReplaceTempView("par_batch")
     spark.sql("INSERT INTO ins.ns.par_sql SELECT * FROM par_batch")
-    val q = spark.readStream.table("ins.ns.par_ids").selectExpr(cols: _*).writeStream
+    val q = spark.readStream.table("ins.ns.par_api").writeStream
       .option("checkpointLocation", Files.createTempDirectory("graft_par_ckpt").toString)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .toTable("ins.ns.par_stream")

@@ -440,13 +440,16 @@ class GraftStreamSourceSpec extends AnyFunSuite with SparkSpecBase {
 
   test("value types round-trip through the row-grain reader; streaming count is exact") {
     val path = tmp() + "/t"
-    val data = df("id BIGINT, x DOUBLE, s STRING, t TIMESTAMP, d DATE, b BOOLEAN",
+    val data = df("id BIGINT, x DOUBLE, s STRING, t TIMESTAMP, d DATE, b BOOLEAN, " +
+      "m DECIMAL(10,2), w DECIMAL(38,10)",
       Row(Long.box(1L), Double.box(1.5), "one", ts("2024-01-02 03:04:05.123456"),
-        java.sql.Date.valueOf("2024-01-02"), Boolean.box(true)),
-      Row(Long.box(2L), null, null, null, null, null))
+        java.sql.Date.valueOf("2024-01-02"), Boolean.box(true),
+        new java.math.BigDecimal("-12345678.91"),
+        new java.math.BigDecimal("1234567890123456789012345678.0123456789")),
+      Row(Long.box(2L), null, null, null, null, null, null, null))
     GraftTable.overwrite(data, path)
     val src = spark.readStream.format("graft").load(path)
-    val (rows, _) = drain(src.select("id", "x", "s", "t", "d", "b"), "gss_types")
+    val (rows, _) = drain(src.select("id", "x", "s", "t", "d", "b", "m", "w"), "gss_types")
     assert(rows == canon(data))
     val q = spark.readStream.format("graft").load(path)
       .groupBy().count()

@@ -1202,7 +1202,8 @@ class GraftTableSpec extends AnyFunSuite with SparkSpecBase {
       new java.io.File(d).listFiles.find(_.getName.endsWith(".parquet")).get
     }
     val f1 = written()
-    refused(GraftTable.commitWritten(spark, path, "stream_append", Seq(f1), schema,
+    refused(GraftTable.commitWritten(spark, path, "stream_append",
+      Seq(graft.sources.GraftWrittenFile(f1.getAbsolutePath)), schema,
       mark = Some("s" -> 0L)))
     val f2 = written()
     refused {

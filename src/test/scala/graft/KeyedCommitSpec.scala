@@ -188,10 +188,16 @@ class KeyedCommitSpec extends AnyFunSuite with SparkSpecBase {
     GraftTable.mergeInto(spark, p, kl(800L until 840L, "m"), Seq("k"),
       updateSet = Map("v" -> srcCol("v")), statsCols = Seq("k"))
     assert(added().size == 1)
+    // merge-on-read: the rewritten file keeps its place under a vector,
+    // and the update images and the inserts share one staged file
+    GraftTable.mergeIntoMor(spark, p, kl(1200L until 1240L, "r"), Seq("k"),
+      updateSet = Map("v" -> srcCol("v")))
+    val staged = GraftTable.currentManifest(p).get.changes.get.added.filter(_.dv.isEmpty)
+    assert(staged.map(_.rows) == Seq(20L + 20))
     // keys past every file: the inserts alone, in one file
     GraftTable.upsertByKey(spark, p, kl(10000L until 10040L, "n"), Seq("k"), Seq("k"))
     assert(added() == Seq(40L))
-    assert(GraftTable.read(spark, p).count() == 3200 + 20 + (20 - 2) + 20 + 40)
+    assert(GraftTable.read(spark, p).count() == 3200 + 20 + (20 - 2) + 20 + 20 + 40)
   }
 
   test("keyed and predicate commits on a clustered table stay within their job budgets") {

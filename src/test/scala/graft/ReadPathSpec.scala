@@ -199,6 +199,19 @@ class ReadPathSpec extends AnyFunSuite with SparkSpecBase {
     assert(hits.isEmpty, "GraftTable reads must plan the GraftBatch scan:\n" + hits.mkString("\n"))
   }
 
+  test("one stats path in src/main/scala/graft/core: no footer reads, no test seams") {
+    // file stats come from the writer that wrote the file; the core
+    // reads no parquet footer and carries no global switch for specs
+    val banned = """ParquetFileReader|footerStats|ForTests =""".r
+    val hits = mainSources().filter(_.getPath.contains("graft/core/")).flatMap { f =>
+      val lines = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").split("\n", -1)
+      lines.indices.filter(i => banned.findFirstIn(lines(i)).isDefined)
+        .map(i => s"${f.getPath}:${i + 1}: ${lines(i).trim}")
+    }
+    assert(hits.isEmpty, "record file stats in graft.sources.GraftRowFileWriter:\n" +
+      hits.mkString("\n"))
+  }
+
   test("one predicate translator in src/main: no Catalyst comparison pattern over " +
       "an attribute and a literal") {
     // stats consumers read sources.Filters (Spark's pushdown translator
